@@ -542,12 +542,13 @@ def _bench_curation(spark, sf_dir: str, tmpdir: str, reps: int = 1) -> dict:
 
 
 def _bench_migration(spark, sf_dir: str, reps: int, tmpdir: str) -> dict:
-    """Time the FULL sf migration pipeline (extract → value-fix plan →
-    load → count+checksum validation) over the fixture tables via
-    execute_local — the number BASELINE.md's perf gate is written
-    against (reference claim: 10k rows/s ⇒ ≈60 s at sf0.1; gate
-    ≤120 s). Emits total seconds and aggregate rows/second;
-    median-of-reps with [min, med, max] spread when reps > 1."""
+    """Time the FULL sf migration pipeline (extract → value-fix →
+    load → count+checksum validation) over the fixture tables through
+    the shipped ``execute()`` with parquet endpoints — the number
+    BASELINE.md's perf gate is written against (reference claim: 10k
+    rows/s ⇒ ≈60 s at sf0.1; gate ≤120 s). Emits total seconds and
+    aggregate rows/second; median-of-reps with [min, med, max] spread
+    when reps > 1."""
     import os
     import shutil
 
@@ -560,7 +561,9 @@ def _bench_migration(spark, sf_dir: str, reps: int, tmpdir: str) -> dict:
         MigrationPipeline,
         TableMeta,
     )
-    from mysql2pg_spark.tables import load_table
+    from mysql2pg_spark.runlog import RunLogger
+    from mysql2pg_spark.sinks.ddl import RecordingConnection
+    from mysql2pg_spark.tables import load_table, parquet_endpoints
 
     spark_to_mysql = {
         "bigint": "bigint", "int": "int", "smallint": "smallint",
@@ -603,14 +606,18 @@ def _bench_migration(spark, sf_dir: str, reps: int, tmpdir: str) -> dict:
     for i in range(reps):
         sink = os.path.join(tmpdir, f"sink{i}")
         t = time.perf_counter()
-        result = pipe.execute_local(
+        result = pipe.execute(
             spark,
-            source_loader=lambda name: load_table(spark, sf_dir, name),
-            sink_dir=sink,
+            RecordingConnection(),
+            **parquet_endpoints(
+                lambda name: load_table(spark, sf_dir, name), sink
+            ),
+            logger=RunLogger(os.path.join(tmpdir, f"logs{i}")),
         )
         times.append(time.perf_counter() - t)
-        stage_secs.append(result.get("stage_sec", {}))
+        stage_secs.append(result["stage_sec"])
         rows = sum(result["synced"].values())
+        assert not result["log"]["errors"], result["log"]["errors"]
         assert all(
             v.get("consistent") for v in result["validation"].values()
         ), result["validation"]

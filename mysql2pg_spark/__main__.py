@@ -2,26 +2,24 @@
 cmd/mysql2pg/main.go behavior: load config → assemble catalog → run the
 staged pipeline).
 
-Three modes, least- to most-connected:
+Modes, least- to most-connected:
 
   plan       print the ordered action list (DDL text + read plans) as
              JSON lines — the dry run; needs only a snapshot.
-  local      execute the same plan control flow over file endpoints
-             (parquet source dir → parquet sink dir + validation) —
-             the container/CI mode, no servers.
+  local      run the migration over file endpoints: the source is a
+  dump       parquet dir (--source-dir, with --snapshot), a mysqldump
+             file (--dump-file: schema AND data from the dump) or a
+             mysqldump --tab directory (--tab-dir); the sink is a
+             parquet dir (--sink-dir) with read-back validation, and
+             the DDL is recorded, not executed. No servers at all.
+             The two names are the same mode.
+  duckdb     the same sources into an embedded DuckDB file
+             (--duckdb-file): real DDL execution, real batched DB-API
+             inserts, real read-back validation. The offline analog of
+             a live PG migration, usable end-to-end today.
   live       execute against MySQL/PostgreSQL via JDBC + a DB-API
              connection (requires driver jars and a psycopg-style
-             module; everything is injected through execute()'s seams).
-  dump       offline migration from a mysqldump file: schema AND data
-             both come from the dump (full_snapshot_from_dump +
-             dump_source_reader), written to a parquet sink dir with
-             validation — no servers at all.
-  duckdb     the full live execute() path — real DDL execution, real
-             batched DB-API inserts, real read-back validation —
-             against an embedded DuckDB file. Source is a parquet dir
-             (--source-dir, with --snapshot) or a mysqldump file
-             (--dump-file, snapshot parsed from its DDL). The offline
-             analog of a live PG migration, usable end-to-end today.
+             module).
   pgddl      schema-only: print the complete PostgreSQL DDL script
              (tables, indexes, comments, views, plpgsql functions,
              roles, grants) for a snapshot or dump — pipe to psql.
@@ -34,6 +32,12 @@ Three modes, least- to most-connected:
              partition-parallel) + schema_post.sql + a psql load.sql —
              convert a mysqldump with NO live PostgreSQL, then load the
              artifact later with plain psql.
+
+Every migrating mode (local, dump, duckdb, live) runs
+``MigrationPipeline.execute()`` — one control flow, different seams —
+prints one JSON summary line, and exits 1 when a table failed or
+validated inconsistent (the run itself keeps going past a failed
+table, like the reference).
 
 The catalog snapshot comes from a YAML file (``--snapshot``): offline
 parity with what sources/catalog.py reads from information_schema, so
@@ -135,6 +139,59 @@ def load_snapshot(path: str) -> CatalogSnapshot:
     )
 
 
+def _file_source(args, spark):
+    """``(snapshot, loader)`` for the file-backed modes, where
+    ``loader(table_name) -> DataFrame``: a mysqldump --tab directory, a
+    mysqldump file (schema and data both from the dump), or a parquet
+    --source-dir described by --snapshot."""
+    if not (args.tab_dir or args.dump_file):
+        from mysql2pg_spark.tables import load_table
+
+        return load_snapshot(args.snapshot), lambda t: load_table(
+            spark, args.source_dir, t
+        )
+    from mysql2pg_spark.sources.dumpfile import dump_read_schemas
+
+    if args.tab_dir:
+        from mysql2pg_spark.sources.tabdump import (
+            snapshot_from_tab_dir,
+            tab_source_reader,
+        )
+
+        snap = snapshot_from_tab_dir(spark, args.tab_dir)
+        reader = tab_source_reader(args.tab_dir, dump_read_schemas(snap))
+    else:
+        from mysql2pg_spark.sources.dumpfile import full_snapshot_from_dump
+        from mysql2pg_spark.sources.loaddata import load_data_source_reader
+
+        snap = full_snapshot_from_dump(spark, args.dump_file)
+        # reads LOAD DATA INFILE statements' files AND classic INSERT
+        # bulk; pure-INSERT dumps pay nothing extra
+        reader = load_data_source_reader(
+            args.dump_file, dump_read_schemas(snap)
+        )
+    return snap, lambda t: reader(spark, {"table": t})
+
+
+def _report(snap: CatalogSnapshot, result: dict) -> int:
+    """Print a migration's summary as one JSON line, error records
+    included; the exit status is 1 when any table failed (the run kept
+    going past it) or validated inconsistent."""
+    validation = {
+        k: v.get("consistent") for k, v in result["validation"].items()
+    }
+    errors = result["log"]["errors"]
+    print(json.dumps({
+        "tables": [t.name for t in snap.tables],
+        "synced": result["synced"],
+        "validation": validation,
+        "n_ddl": result["ddl"],
+        "stage_sec": result["stage_sec"],
+        "errors": errors,
+    }))
+    return 1 if errors or not all(validation.values()) else 0
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="mysql2pg_spark")
     ap.add_argument("-c", "--config", required=True)
@@ -144,7 +201,7 @@ def main(argv: list[str] | None = None) -> int:
                  "pgddl", "tabexport", "pgexport"),
         default="plan",
     )
-    ap.add_argument("--snapshot", help="catalog snapshot YAML (plan/local)")
+    ap.add_argument("--snapshot", help="catalog snapshot YAML")
     ap.add_argument(
         "--old-snapshot",
         help="previously-migrated snapshot YAML (diff mode)",
@@ -154,13 +211,13 @@ def main(argv: list[str] | None = None) -> int:
         action="store_true",
         help="diff mode: emit destructive DROPs instead of comments",
     )
-    ap.add_argument("--source-dir", help="parquet source dir (local mode)")
+    ap.add_argument("--source-dir", help="parquet source dir")
     ap.add_argument("--sink-dir", help="parquet sink dir (local/dump mode)")
-    ap.add_argument("--dump-file", help="mysqldump .sql file (dump mode)")
+    ap.add_argument("--dump-file", help="mysqldump .sql file")
     ap.add_argument(
         "--tab-dir",
         help="mysqldump --tab directory: per-table <t>.sql schema + "
-        "<t>.txt escaped-TSV data (dump/duckdb modes)",
+        "<t>.txt escaped-TSV data (local/dump/duckdb modes)",
     )
     ap.add_argument("--duckdb-file", help="target database (duckdb mode)")
     ap.add_argument(
@@ -185,127 +242,50 @@ def main(argv: list[str] | None = None) -> int:
 
     cfg = load_config(args.config)
 
-    if args.mode == "dump":
-        if not ((args.dump_file or args.tab_dir) and args.sink_dir):
-            print("dump mode needs --dump-file or --tab-dir, and "
-                  "--sink-dir", file=sys.stderr)
-            return 2
-        from mysql2pg_spark.session import get_spark
-        from mysql2pg_spark.sources.dumpfile import (
-            dump_read_schemas,
-            full_snapshot_from_dump,
+    if args.mode in ("local", "dump", "duckdb"):
+        duck = args.mode == "duckdb"
+        target = args.duckdb_file if duck else args.sink_dir
+        source = args.tab_dir or args.dump_file or (
+            args.source_dir and args.snapshot
         )
-
-        spark = get_spark(app_name="mysql2pg_spark-cli")
-        if args.tab_dir:
-            from mysql2pg_spark.sources.tabdump import (
-                snapshot_from_tab_dir,
-                tab_source_reader,
-            )
-
-            snap = snapshot_from_tab_dir(spark, args.tab_dir)
-            schemas = dump_read_schemas(snap)
-            _tab = tab_source_reader(args.tab_dir, schemas)
-            source_loader = lambda t: _tab(spark, {"table": t})  # noqa: E731
-        else:
-            from mysql2pg_spark.sources.loaddata import (
-                load_data_source_reader,
-            )
-
-            snap = full_snapshot_from_dump(spark, args.dump_file)
-            schemas = dump_read_schemas(snap)
-            # reads LOAD DATA INFILE statements' files AND classic
-            # INSERT bulk; pure-INSERT dumps pay nothing extra
-            _ld = load_data_source_reader(args.dump_file, schemas)
-            source_loader = lambda t: _ld(spark, {"table": t})  # noqa: E731
-        pipe = MigrationPipeline(cfg, snap)
-        result = pipe.execute_local(
-            spark,
-            source_loader=source_loader,
-            sink_dir=args.sink_dir,
-        )
-        print(json.dumps({
-            "tables": [t.name for t in snap.tables],
-            "synced": result["synced"],
-            "validation": {
-                k: v.get("consistent") for k, v in result["validation"].items()
-            },
-            "n_ddl": len(result["ddl"]),
-        }))
-        return 0
-
-    if args.mode == "duckdb":
-        if not args.duckdb_file or not (
-            args.source_dir or args.dump_file or args.tab_dir
-        ):
+        if not (target and source):
             print(
-                "duckdb mode needs --duckdb-file plus --source-dir "
-                "(with --snapshot), --dump-file or --tab-dir",
+                f"{args.mode} mode needs "
+                f"{'--duckdb-file' if duck else '--sink-dir'} plus "
+                "--source-dir (with --snapshot), --dump-file or --tab-dir",
                 file=sys.stderr,
             )
             return 2
-        import duckdb
-
         from mysql2pg_spark.session import get_spark
-        from mysql2pg_spark.sinks.dbapi_sink import make_dbapi_writer
-        from mysql2pg_spark.tables import load_table
 
         spark = get_spark(app_name="mysql2pg_spark-cli")
-        if args.tab_dir:
-            from mysql2pg_spark.sources.dumpfile import dump_read_schemas
-            from mysql2pg_spark.sources.tabdump import (
-                snapshot_from_tab_dir,
-                tab_source_reader,
-            )
+        snap, loader = _file_source(args, spark)
+        if duck:
+            import duckdb
 
-            snap = snapshot_from_tab_dir(spark, args.tab_dir)
-            source_reader = tab_source_reader(
-                args.tab_dir, dump_read_schemas(snap)
-            )
-        elif args.dump_file:
-            from mysql2pg_spark.sources.dumpfile import (
-                dump_read_schemas,
-                full_snapshot_from_dump,
-            )
-            from mysql2pg_spark.sources.loaddata import (
-                load_data_source_reader,
-            )
+            from mysql2pg_spark.sinks.dbapi_sink import make_dbapi_writer
 
-            snap = full_snapshot_from_dump(spark, args.dump_file)
-            schemas = dump_read_schemas(snap)
-            source_reader = load_data_source_reader(args.dump_file, schemas)
+            conn = duckdb.connect(args.duckdb_file)
+            seams = {
+                "source_reader": lambda sp, plan: loader(plan["table"]),
+                "sink_writer": make_dbapi_writer(
+                    conn.cursor, paramstyle="qmark", via="driver"
+                ),
+                "dest_reader": lambda sp, table: sp.createDataFrame(
+                    conn.cursor()
+                    .execute(f'SELECT * FROM "{table}"')
+                    .fetch_arrow_table()
+                ),
+                "target_dialect": "duckdb",
+            }
         else:
-            if not args.snapshot:
-                print("--source-dir needs --snapshot", file=sys.stderr)
-                return 2
-            snap = load_snapshot(args.snapshot)
-            source_reader = lambda sp, plan: load_table(  # noqa: E731
-                sp, args.source_dir, plan["table"]
-            )
+            from mysql2pg_spark.sinks.ddl import RecordingConnection
+            from mysql2pg_spark.tables import parquet_endpoints
 
-        con = duckdb.connect(args.duckdb_file)
-        result = MigrationPipeline(cfg, snap).execute(
-            spark,
-            con,
-            source_reader=source_reader,
-            sink_writer=make_dbapi_writer(
-                con.cursor, paramstyle="qmark", via="driver"
-            ),
-            dest_reader=lambda sp, table: sp.createDataFrame(
-                con.cursor()
-                .execute(f'SELECT * FROM "{table}"')
-                .fetch_arrow_table()
-            ),
-            target_dialect="duckdb",
-        )
-        print(json.dumps({
-            "synced": result["synced"],
-            "validation": {
-                k: v.get("consistent") for k, v in result["validation"].items()
-            },
-            "ddl": result["ddl"],
-        }))
-        return 0
+            conn = RecordingConnection()
+            seams = parquet_endpoints(loader, args.sink_dir)
+        result = MigrationPipeline(cfg, snap).execute(spark, conn, **seams)
+        return _report(snap, result)
 
     if args.mode == "tabexport":
         if not args.tab_out or not (
@@ -483,28 +463,8 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     from mysql2pg_spark.session import get_spark
-    from mysql2pg_spark.tables import load_table
 
     spark = get_spark(app_name="mysql2pg_spark-cli")
-    if args.mode == "local":
-        if not (args.source_dir and args.sink_dir):
-            print("local mode needs --source-dir and --sink-dir",
-                  file=sys.stderr)
-            return 2
-        result = pipe.execute_local(
-            spark,
-            source_loader=lambda t: load_table(spark, args.source_dir, t),
-            sink_dir=args.sink_dir,
-        )
-        print(json.dumps({
-            "synced": result["synced"],
-            "validation": {
-                k: v.get("consistent") for k, v in result["validation"].items()
-            },
-            "n_ddl": len(result["ddl"]),
-        }))
-        return 0
-
     # live: DB-API connection for the PG side; import lazily so the
     # container (which has no driver) never pays for it.
     import importlib
@@ -518,8 +478,10 @@ def main(argv: list[str] | None = None) -> int:
         dbname=cfg.postgresql.database,
     )
     result = pipe.execute(spark, conn)
-    print(json.dumps({"synced": result["synced"], "log": result["log"]}))
-    return 0
+    if "test_only" in result:  # connection probe only, nothing migrated
+        print(json.dumps(result))
+        return 1 if result["log"]["n_errors"] else 0
+    return _report(pipe.snapshot, result)
 
 
 if __name__ == "__main__":

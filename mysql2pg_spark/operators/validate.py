@@ -48,7 +48,7 @@ def table_checksum(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     return d.agg(*_checksum_aggs(F.col("h")))
 
 
-def observe_checksum(df: DataFrame, name: str, cols: list[str] | None = None):
+def observe_checksum(df: DataFrame, name: str):
     """Attach the checksum aggregates as an ``Observation`` so they are
     computed DURING whatever action materializes ``df`` (e.g. the sink
     write) — the accumulator path that gives source-side D3 validation
@@ -60,7 +60,7 @@ def observe_checksum(df: DataFrame, name: str, cols: list[str] | None = None):
     """
     from pyspark.sql import Observation
 
-    cols = cols or df.columns
+    cols = df.columns
     obs = Observation(name)
     observed = df.observe(obs, *_checksum_aggs(row_digest(df, cols)))
     return observed, obs, cols
@@ -96,7 +96,7 @@ def count_validation(src: DataFrame, dst: DataFrame) -> dict:
     return {"src_rows": a, "dst_rows": b, "consistent": a == b}
 
 
-def checksum_validation(src: DataFrame, dst: DataFrame, cols: list[str] | None = None) -> dict:
-    ca = table_checksum(src, cols).collect()[0].asDict()
-    cb = table_checksum(dst, cols).collect()[0].asDict()
+def checksum_validation(src: DataFrame, dst: DataFrame) -> dict:
+    ca = table_checksum(src).collect()[0].asDict()
+    cb = table_checksum(dst).collect()[0].asDict()
     return {"src": ca, "dst": cb, "consistent": ca == cb}

@@ -915,7 +915,13 @@ class MigrationPipeline:
         - ``dest_reader(spark, table) -> DataFrame``: PG-side read-back
           for D3 validation; defaults to ``spark.read.jdbc``.
         - ``logger``: a ``runlog.RunLogger`` (D4/D5); defaults to one
-          writing under ``./logs``.
+          writing under ``./logs`` of the current directory, like the
+          reference (manager.go:1694-1737).
+
+        File-backed runs (the CLI's local/dump modes, the bench) use
+        the same control flow: ``tables.parquet_endpoints`` supplies
+        the three data seams and ``sinks.ddl.RecordingConnection``
+        records the DDL in place of a server.
 
         Data reads fan out on a thread pool of ``limits.concurrency`` —
         per-table JDBC latency overlap; within-table parallelism is the
@@ -1344,184 +1350,4 @@ class MigrationPipeline:
             "validation": validation,
             "stage_sec": stage_sec,
             "log": logger.summary(),
-        }
-
-    def execute_local(self, spark, source_loader, sink_dir: str) -> dict:
-        """Container-runnable execution of the SAME plan control flow with
-        file-backed endpoints (the integration-test analog of the
-        reference harness's full-run case):
-
-        - ddl actions are collected (emitted SQL, no PG to execute on);
-        - data read_plans load via ``source_loader(table_name)`` and write
-          parquet under ``sink_dir`` — table fan-out on a thread pool of
-          ``limits.concurrency`` exactly like the JDBC path would
-          (overlapping per-table latencies; Spark schedules within-table
-          parallelism);
-        - validate actions re-read the sink and compare count + checksum
-          against the source.
-
-        Returns {"ddl": [...], "synced": {table: rows}, "validation":
-        {table: {...}}, "stage_sec": {"plan": s, "data": s,
-        "validate": s}} — the phase seconds feed the bench artifact's
-        migration breakdown (round 9) so a planner or validation
-        regression is attributable instead of hiding inside one
-        pipeline number.
-        """
-        import os
-        import time as _time
-        from concurrent.futures import ThreadPoolExecutor
-
-        from mysql2pg_spark.operators.validate import (
-            checksum_validation,
-            get_observation,
-            observe_checksum,
-            table_checksum,
-        )
-
-        stage_sec: dict[str, float] = {}
-        _t0 = _time.perf_counter()
-        actions = self.plan()
-        ddl = [a.payload for a in actions if a.kind == "ddl"]
-        reads = [a for a in actions if a.kind == "read_plan"]
-        checks = [a for a in actions if a.kind == "check"]
-        stage_sec["plan"] = round(_time.perf_counter() - _t0, 3)
-
-        synced: dict[str, int] = {}
-        # target → (source checksum row, observed cols): captured via
-        # df.observe() DURING the sink write (round 9, same pattern as
-        # the live execute() path) — the source is scanned exactly once;
-        # at 100 TB the validate stage never pays a second source pass.
-        src_sums: dict[str, tuple[dict, list[str]]] = {}
-
-        meta_by_target = {
-            self._norm(t.name): t for t in self.snapshot.tables
-        }
-
-        def sync_one(action: Action) -> tuple[str, int]:
-            src_table = action.payload["table"]
-            df = source_loader(src_table)
-            meta = meta_by_target.get(action.target)
-            if meta is not None:
-                gen = [
-                    self._norm(c.name) for c in meta.columns
-                    if getattr(c, "generated_expr", None)
-                ]
-                if gen:  # the target computes these (round 11)
-                    df = df.drop(*gen)
-            # checksum string/int columns only (cross-source float text
-            # rendering is the caller's concern; see operators/validate)
-            cols = [
-                f.name
-                for f in df.schema.fields
-                if f.dataType.simpleString() in ("bigint", "int", "string")
-            ]
-            # Round 16 (guide §2/§6): spread the single-split source
-            # across cores before the md5-observe + write — the digest
-            # and parquet encode were one task per table; the 1 MB
-            # floor keeps dimension tables at one output file, and at
-            # real scale the input already has ≥ core-count splits so
-            # this is a no-op. Side effect: the destination parquet is
-            # multi-file, so the validate read-back scans in parallel.
-            from mysql2pg_spark.tables import fan_out
-
-            df = fan_out(df, bytes_per_partition=1024 * 1024)
-            observed, obs, cols = observe_checksum(
-                df, f"src_{action.target}", cols
-            )
-            dest = os.path.join(sink_dir, action.target)
-            observed.write.mode("overwrite").parquet(dest)
-            row = get_observation(obs)
-            if row is not None:
-                src_sums[action.target] = (row, cols)
-                return action.target, int(row["n_rows"])
-            # observation lost (fake sink in tests): fall back to a
-            # read-back count; the validate stage re-scans the source
-            return action.target, spark.read.parquet(dest).count()
-
-        _t0 = _time.perf_counter()
-        with ThreadPoolExecutor(self.cfg.limits.concurrency) as pool:
-            for name, n in pool.map(sync_one, reads):
-                synced[name] = n
-        stage_sec["data"] = round(_time.perf_counter() - _t0, 3)
-
-        _t0 = _time.perf_counter()
-        validation: dict[str, dict] = {}
-        by_target = {a.payload["table"]: a.target for a in reads}
-        # Round 16 (guide §2.6 / round-12 batching precedent in
-        # execute()): destination checksums of every observed table ride
-        # ONE union job instead of a sequential per-table collect —
-        # N−1 Spark job launches disappear and the per-table scans
-        # schedule concurrently (the multi-file destinations written
-        # above also scan multi-task). A batch failure falls back to
-        # the per-table loop so keep-going semantics are unchanged.
-        observed_checks: list = []
-        fallback_checks: list = []
-        for chk in checks:
-            src_name = next(
-                (s for s, t in by_target.items() if t == chk.target), None
-            )
-            if src_name is None:
-                continue
-            if chk.target in src_sums:
-                observed_checks.append(chk)
-            else:
-                fallback_checks.append((chk, src_name))
-        if observed_checks:
-            from functools import reduce
-
-            from pyspark.sql import functions as _F
-
-            def _dst_checksum(chk):
-                dst = spark.read.parquet(
-                    os.path.join(sink_dir, chk.target)
-                )
-                return table_checksum(dst, src_sums[chk.target][1])
-
-            try:
-                tagged = [
-                    _dst_checksum(chk).withColumn(
-                        "_table", _F.lit(chk.target)
-                    )
-                    for chk in observed_checks
-                ]
-                got = {
-                    r["_table"]: {
-                        k: r[k]
-                        for k in (
-                            "n_rows", "hash_sum", "min_digest", "max_digest"
-                        )
-                    }
-                    for r in reduce(
-                        lambda x, y: x.unionByName(y), tagged
-                    ).collect()
-                }
-                for chk in observed_checks:
-                    ca, _cols = src_sums[chk.target]
-                    cb = got[chk.target]
-                    validation[chk.target] = {
-                        "src": ca, "dst": cb, "consistent": ca == cb,
-                    }
-            except Exception:
-                for chk in observed_checks:
-                    ca, cols = src_sums[chk.target]
-                    cb = _dst_checksum(chk).collect()[0].asDict()
-                    validation[chk.target] = {
-                        "src": ca, "dst": cb, "consistent": ca == cb,
-                    }
-        for chk, src_name in fallback_checks:
-            dst = spark.read.parquet(os.path.join(sink_dir, chk.target))
-            src = source_loader(src_name)
-            cols = [
-                f.name
-                for f in src.schema.fields
-                if f.dataType.simpleString()
-                in ("bigint", "int", "string")
-            ]
-            validation[chk.target] = checksum_validation(src, dst, cols)
-        stage_sec["validate"] = round(_time.perf_counter() - _t0, 3)
-        return {
-            "ddl": ddl,
-            "synced": synced,
-            "validation": validation,
-            "stage_sec": stage_sec,
         }

@@ -119,7 +119,8 @@ def export_pg_dir(
     ``pipeline`` is a ``MigrationPipeline`` (its plan() supplies the
     DDL in stage order and its value-fix transform keeps the data
     contract identical to a live migration); ``source_loader(name) ->
-    DataFrame`` supplies rows (the same seam as ``execute_local``).
+    DataFrame`` supplies rows (the same loader shape as
+    ``tables.parquet_endpoints``).
     Returns ``{"tables": [...], "load_script": path}``.
 
     ``out_dir`` must be a DRIVER-LOCAL directory: the schema scripts

@@ -540,6 +540,29 @@ def adapt_ddl(sql: str, dialect: str = "postgres") -> str | None:
     return unmask_literals(out, _lits)
 
 
+class RecordingConnection:
+    """DB-API connection for a run with no SQL target (file-backed
+    migrations): every statement ``execute()`` sends is kept, in order,
+    in ``statements`` and nothing runs it. Under the default
+    ``postgres`` target ``adapt_ddl`` is the identity, so the record is
+    the PostgreSQL script the plan would have executed."""
+
+    def __init__(self):
+        self.statements: list[str] = []
+
+    def cursor(self):
+        return self
+
+    def execute(self, sql: str) -> None:
+        self.statements.append(sql)
+
+    def commit(self) -> None:
+        pass
+
+    def rollback(self) -> None:
+        pass
+
+
 def add_fk_ddl(table: str, fk: "FkSpec") -> str:
     """``ALTER TABLE … ADD CONSTRAINT … FOREIGN KEY`` — emitted in its
     own stage AFTER the data load (adding FKs before bulk load would

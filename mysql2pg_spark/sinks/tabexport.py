@@ -140,7 +140,7 @@ def export_tab_dir(
     LOAD DATA statements with the chosen format options.
 
     ``source_loader(table_name) -> DataFrame`` supplies each table's
-    rows (the same seam shape as ``MigrationPipeline.execute_local``).
+    rows (the same loader shape as ``tables.parquet_endpoints``).
     Returns ``{"tables": [...], "restore_script": path}``."""
     from mysql2pg_spark.sources.tabdump import write_outfile
 

@@ -136,6 +136,34 @@ def fan_out(
     return df.repartition(target)
 
 
+def parquet_endpoints(loader, sink_dir: str) -> dict:
+    """``MigrationPipeline.execute`` seams for a file-backed migration:
+    ``loader(table_name) -> DataFrame`` supplies each source table, every
+    target table is written as parquet under ``sink_dir/<table>``, and
+    validation reads that directory back. Use as
+    ``execute(spark, conn, **parquet_endpoints(loader, sink_dir))``.
+
+    The source is fanned out before the value-fix, checksum observe and
+    write (round 16): file sources are often one split per table, which
+    would run the digest and parquet encode as one task. The 1 MiB floor
+    keeps small tables at one output file."""
+
+    def source_reader(spark: SparkSession, plan: dict) -> DataFrame:
+        return fan_out(loader(plan["table"]), bytes_per_partition=1 << 20)
+
+    def sink_writer(df: DataFrame, table: str) -> None:
+        df.write.mode("overwrite").parquet(os.path.join(sink_dir, table))
+
+    def dest_reader(spark: SparkSession, table: str) -> DataFrame:
+        return spark.read.parquet(os.path.join(sink_dir, table))
+
+    return {
+        "source_reader": source_reader,
+        "sink_writer": sink_writer,
+        "dest_reader": dest_reader,
+    }
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _pin_session_confs(spark)
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))

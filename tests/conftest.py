@@ -36,3 +36,29 @@ def duck():
         )
     yield con
     con.close()
+
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_TRACKED_LOGS = ("conversion.log", "errors.log")
+
+
+def _log_sizes() -> dict[str, int]:
+    sizes = {}
+    for name in _TRACKED_LOGS:
+        path = os.path.join(_REPO, "logs", name)
+        sizes[name] = os.path.getsize(path) if os.path.exists(path) else -1
+    return sizes
+
+
+@pytest.fixture(scope="session", autouse=True)
+def repo_logs_untouched():
+    """A run with no explicit logger writes under ./logs (the reference's
+    default). Tests must run such code from a temp cwd or pass a
+    logger, never append to the repository's tracked run logs."""
+    before = _log_sizes()
+    yield
+    after = _log_sizes()
+    assert after == before, (
+        f"a test wrote to the repository's logs/ (sizes {before} -> "
+        f"{after}); chdir to tmp_path or pass a RunLogger"
+    )

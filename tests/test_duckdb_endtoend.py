@@ -249,7 +249,7 @@ def test_adapt_ddl_dialect_seam():
         adapt_ddl("SELECT 1", "oracle")
 
 
-def test_cli_duckdb_mode_from_dump(spark, tmp_path, capsys):
+def test_cli_duckdb_mode_from_dump(spark, tmp_path, capsys, monkeypatch):
     """The capstone CLI: one command migrates a mysqldump file into a
     DuckDB database through the REAL execute() path — DDL parsed from
     the dump, data inserted through the DB-API seam, validation read
@@ -257,6 +257,8 @@ def test_cli_duckdb_mode_from_dump(spark, tmp_path, capsys):
     import json
 
     from mysql2pg_spark.__main__ import main
+
+    monkeypatch.chdir(tmp_path)  # the run log lands under ./logs
 
     dump = tmp_path / "src.sql"
     dump.write_text(

@@ -124,11 +124,15 @@ def test_include_list(tmp_path):
     assert all(a.target != "orders" for a in plan if a.stage == "tableddl")
 
 
-def test_execute_local_full_pipeline(tmp_path, spark):
-    """Integration run (harness full-run analog): plan → threaded data
-    sync (parquet→parquet) → count+checksum validation, end-to-end."""
+def test_file_backed_execute_full_pipeline(tmp_path, spark):
+    """Integration run (harness full-run analog) through execute() with
+    parquet endpoints: plan → recorded DDL → threaded data sync
+    (parquet→parquet) → count+checksum validation, end-to-end."""
     from mysql2pg_spark.orchestrator import CatalogSnapshot, ColumnMeta, TableMeta
-    from mysql2pg_spark.tables import load_table
+    from mysql2pg_spark.runlog import RunLogger
+    from mysql2pg_spark.sinks.ddl import RecordingConnection
+    from mysql2pg_spark.tables import load_table, parquet_endpoints
+    from tests.conftest import SF_SMOKE
 
     cfg = _cfg(tmp_path)
     snap = CatalogSnapshot(
@@ -149,16 +153,62 @@ def test_execute_local_full_pipeline(tmp_path, spark):
             ),
         ]
     )
-    pipe = MigrationPipeline(cfg, snap)
-    result = pipe.execute_local(
+    conn = RecordingConnection()
+    result = MigrationPipeline(cfg, snap).execute(
         spark,
-        source_loader=lambda t: load_table(spark, "/root/testdata/sf0.001", t),
-        sink_dir=str(tmp_path / "sink"),
+        conn,
+        **parquet_endpoints(
+            lambda t: load_table(spark, SF_SMOKE, t),
+            str(tmp_path / "sink"),
+        ),
+        logger=RunLogger(str(tmp_path / "logs")),
     )
     assert result["synced"] == {"orders": 1500, "nation": 25}
     assert all(v["consistent"] for v in result["validation"].values())
     assert len(result["validation"]) == 2
-    assert any("CREATE TABLE" in d for d in result["ddl"])
+    assert any("CREATE TABLE" in d for d in conn.statements)
+    assert result["ddl"] == len(conn.statements)
+    assert result["log"]["n_errors"] == 0
+
+
+def test_file_backed_execute_applies_value_fix(tmp_path, spark):
+    """A file-backed run goes through the same value-fix as a live one:
+    a tinyint(1) column lands as boolean and a MySQL zero date as NULL
+    in the parquet sink, and the table still validates consistent (the
+    source checksum is taken after the fix)."""
+    from mysql2pg_spark.runlog import RunLogger
+    from mysql2pg_spark.sinks.ddl import RecordingConnection
+    from mysql2pg_spark.tables import parquet_endpoints
+
+    snap = CatalogSnapshot(tables=[
+        TableMeta(
+            name="flags",
+            columns=[
+                ColumnMeta("id", "bigint", False),
+                ColumnMeta("active", "tinyint(1)"),
+                ColumnMeta("seen", "datetime"),
+            ],
+            primary_key=["id"],
+        )
+    ])
+    # a permissive extract: MySQL's zero date arrives as text
+    src = spark.createDataFrame(
+        [(1, 1, "2024-01-02 03:04:05"), (2, 0, "0000-00-00 00:00:00")],
+        "id bigint, active smallint, seen string",
+    )
+    sink = tmp_path / "sink"
+    result = MigrationPipeline(_cfg(tmp_path), snap).execute(
+        spark,
+        RecordingConnection(),
+        **parquet_endpoints(lambda t: src, str(sink)),
+        logger=RunLogger(str(tmp_path / "logs")),
+    )
+    assert result["synced"] == {"flags": 2}
+    assert result["validation"]["flags"]["consistent"]
+    out = spark.read.parquet(str(sink / "flags"))
+    assert dict(out.dtypes)["active"] == "boolean"
+    rows = {r["id"]: (r["active"], r["seen"]) for r in out.collect()}
+    assert rows == {1: (True, "2024-01-02 03:04:05"), 2: (False, None)}
 
 
 class _FakeConn:
@@ -479,7 +529,7 @@ def test_execute_test_only_probes_and_runs_nothing(tmp_path, spark):
     assert result["versions"]["mysql"] == "0"
 
 
-def test_cli_local_mode_runs_pipeline(tmp_path, spark, capsys):
+def test_cli_local_mode_runs_pipeline(tmp_path, spark, capsys, monkeypatch):
     """`--mode local` executes the file-backed pipeline end to end and
     prints the sync/validation summary JSON."""
     import json
@@ -487,6 +537,8 @@ def test_cli_local_mode_runs_pipeline(tmp_path, spark, capsys):
     import yaml
 
     from mysql2pg_spark.__main__ import main
+
+    monkeypatch.chdir(tmp_path)  # the run log lands under ./logs
 
     _cfg(tmp_path)
     snap = {
@@ -517,12 +569,16 @@ def test_cli_local_mode_runs_pipeline(tmp_path, spark, capsys):
     assert out["n_ddl"] > 0
 
 
-def test_cli_dump_mode_runs_offline_migration(tmp_path, spark, capsys):
+def test_cli_dump_mode_runs_offline_migration(
+    tmp_path, spark, capsys, monkeypatch
+):
     """--mode dump: schema AND data from one mysqldump file through the
     full plan/DDL/sync/validate flow, no snapshot YAML, no servers."""
     import json
 
     from mysql2pg_spark.__main__ import main
+
+    monkeypatch.chdir(tmp_path)  # the run log lands under ./logs
 
     dump = tmp_path / "d.sql"
     dump.write_text(
@@ -548,6 +604,51 @@ def test_cli_dump_mode_runs_offline_migration(tmp_path, spark, capsys):
     assert out["synced"] == {"users": 2}
     assert out["validation"] == {"users": True}
     assert out["n_ddl"] >= 1
+
+
+def test_cli_exit_status_reports_a_failed_table(
+    tmp_path, spark, capsys, monkeypatch
+):
+    """A table whose data cannot be read fails alone: the run keeps
+    going, the other table is synced and consistent, the JSON line
+    carries the error records, and the exit status is 1."""
+    import json
+
+    import yaml
+
+    from mysql2pg_spark.__main__ import main
+
+    monkeypatch.chdir(tmp_path)
+    (tmp_path / "config.yml").write_text(yaml.safe_dump({
+        "mysql": {"host": "h", "database": "d"},
+        "postgresql": {"host": "p", "database": "d"},
+        "conversion": {"options": {}, "limits": {"concurrency": 2}},
+    }))
+    tab = tmp_path / "tab"
+    tab.mkdir()
+    for t in ("good", "bad"):
+        (tab / f"{t}.sql").write_text(
+            f"CREATE TABLE `{t}` (\n"
+            "  `id` int NOT NULL,\n"
+            "  `a` varchar(10),\n"
+            "  `b` varchar(10),\n"
+            "  PRIMARY KEY (`id`)\n"
+            ");\n"
+        )
+    (tab / "good.txt").write_text("1\tx\ty\n2\t\\N\tz\n")
+    (tab / "bad.txt").write_text("1\tonly-two\n")  # column count mismatch
+    rc = main([
+        "-c", str(tmp_path / "config.yml"),
+        "--mode", "dump",
+        "--tab-dir", str(tab),
+        "--sink-dir", str(tmp_path / "out"),
+    ])
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rc == 1
+    assert out["synced"] == {"good": 2}
+    assert out["validation"] == {"good": True}
+    assert {e["target"] for e in out["errors"]} == {"bad"}
+    assert (tmp_path / "logs" / "errors.log").read_text().count("bad") >= 1
 
 
 def test_cli_diff_mode(tmp_path, capsys):
@@ -1170,10 +1271,13 @@ def test_savepoint_commit_mode_preserves_earlier_ddl(tmp_path, spark):
     assert sp_conn.rollbacks == 0
 
 
-def test_execute_local_emits_stage_seconds(tmp_path, spark):
-    """execute_local's phase breakdown (plan/data/validate) rides the
-    result — the bench artifact's migration decomposition source."""
-    from mysql2pg_spark.tables import load_table
+def test_file_backed_execute_emits_stage_seconds(tmp_path, spark):
+    """A file-backed run's per-stage breakdown rides the result — the
+    bench artifact's migration decomposition source."""
+    from mysql2pg_spark.runlog import RunLogger
+    from mysql2pg_spark.sinks.ddl import RecordingConnection
+    from mysql2pg_spark.tables import load_table, parquet_endpoints
+    from tests.conftest import SF_SMOKE
 
     cfg = _cfg(tmp_path)
     snap = CatalogSnapshot(
@@ -1190,14 +1294,17 @@ def test_execute_local_emits_stage_seconds(tmp_path, spark):
             )
         ]
     )
-    result = MigrationPipeline(cfg, snap).execute_local(
+    result = MigrationPipeline(cfg, snap).execute(
         spark,
-        source_loader=lambda name: load_table(
-            spark, "/root/testdata/sf0.001", name
+        RecordingConnection(),
+        **parquet_endpoints(
+            lambda name: load_table(spark, SF_SMOKE, name),
+            str(tmp_path / "sink"),
         ),
-        sink_dir=str(tmp_path / "sink"),
+        logger=RunLogger(str(tmp_path / "logs")),
     )
-    assert set(result["stage_sec"]) == {"plan", "data", "validate"}
+    assert {"tableddl", "data", "validate"} <= set(result["stage_sec"])
+    assert set(result["stage_sec"]) <= set(STAGE_ORDER)
     assert all(v >= 0 for v in result["stage_sec"].values())
     assert result["validation"]["region"]["consistent"]
 

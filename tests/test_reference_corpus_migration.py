@@ -316,12 +316,16 @@ def test_reference_corpus_migrates_into_duckdb(spark, tmp_path, corpus_snapshot)
     con.close()
 
 
-def test_cli_duckdb_mode_from_parquet_snapshot(spark, tmp_path, capsys):
+def test_cli_duckdb_mode_from_parquet_snapshot(
+    spark, tmp_path, capsys, monkeypatch
+):
     """The CLI's parquet+snapshot branch of duckdb mode (the dump-file
     branch is covered elsewhere)."""
     import json
 
     from mysql2pg_spark.__main__ import main
+
+    monkeypatch.chdir(tmp_path)  # the run log lands under ./logs
 
     snap = tmp_path / "snap.yml"
     snap.write_text(

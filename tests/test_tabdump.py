@@ -98,8 +98,8 @@ def test_tab_reader_nulls_and_escapes(spark, tmp_path):
 
 
 def test_tab_source_reader_drives_the_pipeline(spark, tmp_path):
-    """The --tab seam runs the SAME execute_local control flow as a
-    live or single-file-dump migration: DDL plan + threaded sync +
+    """The --tab seam runs the SAME execute() control flow as a live or
+    single-file-dump migration: DDL plan + threaded sync +
     count/checksum validation end-to-end."""
     from mysql2pg_spark.orchestrator import (
         CatalogSnapshot,
@@ -107,6 +107,9 @@ def test_tab_source_reader_drives_the_pipeline(spark, tmp_path):
         MigrationPipeline,
         TableMeta,
     )
+    from mysql2pg_spark.runlog import RunLogger
+    from mysql2pg_spark.sinks.ddl import RecordingConnection
+    from mysql2pg_spark.tables import parquet_endpoints
     from tests.test_orchestrator import _cfg
 
     (tmp_path / "nation.txt").write_text(
@@ -127,16 +130,19 @@ def test_tab_source_reader_drives_the_pipeline(spark, tmp_path):
     ])
     schemas = {"nation": "n_nationkey int, n_name string, n_regionkey int"}
     reader = tab_source_reader(str(tmp_path), schemas)
-    result = MigrationPipeline(_cfg(tmp_path), snap).execute_local(
+    result = MigrationPipeline(_cfg(tmp_path), snap).execute(
         spark,
-        source_loader=lambda t: reader(spark, {"table": t}),
-        sink_dir=str(tmp_path / "sink"),
+        RecordingConnection(),
+        **parquet_endpoints(
+            lambda t: reader(spark, {"table": t}), str(tmp_path / "sink")
+        ),
+        logger=RunLogger(str(tmp_path / "logs")),
     )
     assert result["synced"] == {"nation": 3}
     assert result["validation"]["nation"]["consistent"]
 
 
-def test_cli_duckdb_mode_from_tab_dir(spark, tmp_path, capsys):
+def test_cli_duckdb_mode_from_tab_dir(spark, tmp_path, capsys, monkeypatch):
     """`--mode duckdb --tab-dir` migrates a --tab directory into a real
     DuckDB end-to-end: DDL executed, rows loaded, validation green."""
     import json
@@ -145,6 +151,8 @@ def test_cli_duckdb_mode_from_tab_dir(spark, tmp_path, capsys):
     import yaml
 
     from mysql2pg_spark.__main__ import main
+
+    monkeypatch.chdir(tmp_path)  # the run log lands under ./logs
 
     (tmp_path / "config.yml").write_text(yaml.safe_dump({
         "mysql": {"host": "h", "database": "d"},
