@@ -157,18 +157,12 @@ def _canary_once(spark) -> float:
 
 
 def _reset_stage_memos(spark, extra_caches: list | None = None) -> None:
-    """Make the next timed rep memo-cold (round 17 measurement honesty,
-    VERDICT r16 ask #1): drop the plans-layer per-(session, dir) stage
-    memos on BOTH sides of the A/B (``extra_caches`` carries the prev
-    worktree's memo dicts) and clear the Spark cache, so every
-    per-query bench number measures the named query's full pipeline
-    from the parquet inputs. Without this, d02/d04/cc01 medians were
-    cache reads of a memo built on the first rep (r16's d04 vs_prev of
-    0.09 was the memo, not an optimization), and the skew cc01 gate
-    compared a memo-warm base rate against a cold skew rate."""
-    from mysql2pg_spark.plans import clear_stage_memos
-
-    clear_stage_memos()
+    """Make the next timed rep cache-cold: clear the Spark cache and
+    empty ``extra_caches``, the prev checkout's stage-memo dicts (the
+    round-17 snapshot still memoizes stages per (session, dir); this
+    checkout's plans layer builds every stage per query). Every
+    per-query bench number then measures the named query's full
+    pipeline from the parquet inputs on both sides of the A/B."""
     for cache in extra_caches or ():
         for key in list(cache):
             entry = cache.pop(key, None)
@@ -235,11 +229,10 @@ def _load_queries_from(path: str) -> tuple[dict, list]:
     the registry dict, restore. The returned callables keep working
     after restore — they hold references to their own module objects.
 
-    Also returns the prev checkout's plans-layer stage-memo dicts
-    (round 17 measurement honesty): the interleaved A/B clears BOTH
-    sides' memos before every timed rep, so each side's number
-    measures its full pipeline — without this, whichever side built a
-    memo first served the other side's reps a cache read.
+    Also returns the prev checkout's plans-layer stage-memo dicts, if
+    it has any (the round-17 snapshot does): the interleaved A/B
+    empties them before every prev rep, so the prev side's number
+    measures its full pipeline, not a memo read.
     """
     saved = {
         k: v for k, v in sys.modules.items()
@@ -1094,12 +1087,13 @@ def _lev_verify_sampled(spark, sf_dir: str, mod: int = 10,
     from mysql2pg_spark.plans.dedup import (
         EDIT_SIM_T,
         NUM_HASHES,
-        cached_signatures,
+        shingles,
+        signatures,
     )
     from mysql2pg_spark.tables import load_table
 
     cands = D.lsh_candidate_pairs(
-        cached_signatures(spark, sf_dir), "doc_id", NUM_HASHES
+        signatures(shingles(spark, sf_dir)), "doc_id", NUM_HASHES
     ).filter(F.pmod(F.xxhash64("id_a", "id_b"), F.lit(mod)) == 0)
     norm = load_table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -1120,6 +1114,24 @@ def _lev_verify_sampled(spark, sf_dir: str, mod: int = 10,
         cands.join(na, "id_a")
         .join(nb, "id_b")
         .select("id_a", "id_b", d.alias("d"))
+    )
+
+
+def _capped_candidates(spark, sf_dir: str) -> tuple:
+    """(pairs, stats) of the production candidate stage: the capped
+    LSH join at plans/dedup.PROD_MAX_BUCKET that d04 and the cluster
+    plans verify, with its 1-row truncation stats."""
+    from mysql2pg_spark.operators.dedup import lsh_candidate_pairs_capped
+    from mysql2pg_spark.plans.dedup import (
+        NUM_HASHES,
+        PROD_MAX_BUCKET,
+        shingles,
+        signatures,
+    )
+
+    return lsh_candidate_pairs_capped(
+        signatures(shingles(spark, sf_dir)), "doc_id", NUM_HASHES,
+        max_bucket=PROD_MAX_BUCKET,
     )
 
 
@@ -1152,17 +1164,9 @@ def _bench_skew_leg(spark, sf_dir: str, skew_dir: str,
         spark.catalog.clearCache()
         skew_ok: dict[str, bool] = {}
         if not over_budget("skew_lsh_pairs"):
-            # warm the shared shingle/signature cache UNTIMED first
-            # (review r14): the capped-vs-uncapped A/B below must
-            # compare the candidate generators on identical warm
-            # inputs — previously the uncapped side paid the one-time
-            # signature materialization and the gate measured cache
-            # warmth, not the mitigation
-            from mysql2pg_spark.plans.dedup import (
-                cached_signatures as _warm_sigs,
-            )
-
-            _warm_sigs(spark, skew_dir).count()
+            # both sides of the capped-vs-uncapped A/B below build
+            # their own shingles and signatures, so the gate compares
+            # the candidate generators on the same kind of input
             t = time.perf_counter()
             res["skew_lsh_pairs"] = QUERIES["d03_lsh_candidates"](
                 spark, skew_dir
@@ -1174,10 +1178,8 @@ def _bench_skew_leg(spark, sf_dir: str, skew_dir: str,
             # before cc01 so the cluster rate below divides by cc01's
             # ACTUAL workload, and its truncation stats surfaced
             # ("no silent caps")
-            from mysql2pg_spark.plans.dedup import neardup_candidates
-
             t = time.perf_counter()
-            pairs, stats = neardup_candidates(spark, skew_dir)
+            pairs, stats = _capped_candidates(spark, skew_dir)
             res["skew_capped_pairs"] = pairs.count()
             res["skew_capped_sec"] = round(time.perf_counter() - t, 3)
             st = stats.collect()[0].asDict()
@@ -1188,11 +1190,9 @@ def _bench_skew_leg(spark, sf_dir: str, skew_dir: str,
             # round 15: cc01 consumes the capped production candidate
             # stage (VERDICT r14 ask #1) — the hot Zipf bucket
             # star-links instead of melting one task.
-            # Round 17 (VERDICT r16 ask #1): memo-cold, exactly like
-            # the base-side cc01_base_cold_sec it is gated against —
-            # the r16 gate compared a memo-warm side against a cold
-            # one and flapped.
-            _reset_stage_memos(spark)
+            # Cache-cold, exactly like the base-side
+            # cc01_base_cold_sec it is gated against.
+            spark.catalog.clearCache()
             t = time.perf_counter()
             QUERIES["cc01_dedup_clusters"](spark, skew_dir).write.format(
                 "noop"
@@ -1216,11 +1216,7 @@ def _bench_skew_leg(spark, sf_dir: str, skew_dir: str,
                 res["skew_d06_pairs"] / max(res["skew_d06_sec"], 1e-9), 1
             )
         if not over_budget("skew_d13_sec"):
-            # signature-warm like the base-side d13 rate (the cc01
-            # reset above dropped the skew-dir sigs)
-            from mysql2pg_spark.plans.dedup import cached_signatures
-
-            cached_signatures(spark, skew_dir).count()
+            # builds its signatures, like the base-side d13 rate
             t = time.perf_counter()
             row = (
                 _lev_verify_sampled(spark, skew_dir)
@@ -1315,14 +1311,6 @@ def _bench_scale_step(spark, sf_dir: str, tmpdir: str,
 
     base_rates: dict[str, float] = {}
     try:
-        # signature-warm on purpose, matching the skew leg's d13 side
-        # (round 17: the extras loop now clears memos per rep, so the
-        # warmth the old comment assumed must be established here)
-        from mysql2pg_spark.plans.dedup import (
-            cached_signatures as _sigs,
-        )
-
-        _sigs(spark, sf_dir).count()
         t = time.perf_counter()
         row = (
             _lev_verify_sampled(spark, sf_dir)
@@ -1377,12 +1365,10 @@ def _bench_scale_step(spark, sf_dir: str, tmpdir: str,
         res["base_rates_error"] = str(e)[:120]
     res["base_rates"] = base_rates
 
-    # Evict the sf0.1-era .cache() pins (shared shingle/signature
-    # stages) before timing at 10x: leftover storage blocks shrink
-    # executor execution memory and inflate the big scale queries
-    # (measured: s04 118 s inside the full run vs 51 s in a clean
-    # session at the same sf1 data). The pinned stages re-cache on
-    # next use, so correctness is unaffected.
+    # Evict any sf0.1-era .cache() pins before timing at 10x: leftover
+    # storage blocks shrink executor execution memory and inflate the
+    # big scale queries (measured: s04 118 s inside the full run vs
+    # 51 s in a clean session at the same sf1 data).
     spark.catalog.clearCache()
     # COLD-comparable base for the cc01 flatness gate (round 15): the
     # headline cc01 wall is warm-cache fast since the min-label
@@ -1395,10 +1381,9 @@ def _bench_scale_step(spark, sf_dir: str, tmpdir: str,
     # evicted caches so both gate sides are the same kind of number.
     try:
         if isinstance(base_rates.get("cc01"), (int, float)):
-            # memo-cold AND cache-cold (round 17): the skew/scale cc01
-            # rates this base is gated against are measured the same
-            # way — like-for-like on both sides
-            _reset_stage_memos(spark)
+            # cache-cold: the skew/scale cc01 rates this base is gated
+            # against are measured the same way
+            spark.catalog.clearCache()
             t = time.perf_counter()
             QUERIES["cc01_dedup_clusters"](spark, sf_dir).write.format(
                 "noop"
@@ -1428,7 +1413,7 @@ def _bench_scale_step(spark, sf_dir: str, tmpdir: str,
     for name in SCALE_SUBSET:
         if name not in QUERIES or over_budget(name):
             continue
-        _reset_stage_memos(spark)  # per-query memo-cold, like the base
+        spark.catalog.clearCache()  # per-query cache-cold, like the base
         t = time.perf_counter()
         QUERIES[name](spark, out_dir).write.format("noop").mode(
             "overwrite"
@@ -1455,10 +1440,8 @@ def _bench_scale_step(spark, sf_dir: str, tmpdir: str,
         # buckets vs PROD_MAX_BUCKET=64), so this count — not the
         # uncapped one above — is the workload cc01/cc03 consume;
         # the truncation is surfaced beside it ("no silent caps")
-        from mysql2pg_spark.plans.dedup import neardup_candidates
-
         t = time.perf_counter()
-        pairs, stats = neardup_candidates(spark, out_dir)
+        pairs, stats = _capped_candidates(spark, out_dir)
         res["capped_candidate_pairs"] = pairs.count()
         res["capped_candidates_sec"] = round(time.perf_counter() - t, 3)
         st = stats.collect()[0].asDict()
@@ -1467,9 +1450,8 @@ def _bench_scale_step(spark, sf_dir: str, tmpdir: str,
     for name in ("cc01_dedup_clusters", "d06_embedding_neardup"):
         if over_budget(name):
             continue
-        # memo-cold like the base-side cc01_base_cold_sec (round 17):
-        # the capped-candidate count above warmed the out_dir memos
-        _reset_stage_memos(spark)
+        # cache-cold like the base-side cc01_base_cold_sec
+        spark.catalog.clearCache()
         t = time.perf_counter()
         QUERIES[name](spark, out_dir).write.format("noop").mode(
             "overwrite"
@@ -1779,10 +1761,10 @@ def main() -> None:
             head_first = rep % 2 == 0
             pair = ["head", "prev"] if head_first else ["prev", "head"]
             for side in pair:
-                # memo-cold every rep on BOTH sides (round 17, VERDICT
-                # r16 ask #1): each timed number measures the named
-                # query's full pipeline from parquet — never a stage
-                # memo built by an earlier rep or the other side
+                # cold every rep on BOTH sides: each timed number
+                # measures the named query's full pipeline from
+                # parquet — never a prev-side stage memo built by an
+                # earlier rep
                 if side == "head":
                     _reset_stage_memos(spark, prev_caches)
                     times.append(_run_noop(QUERIES[name]))
@@ -1832,9 +1814,9 @@ def main() -> None:
         nreps = ereps if name in EXTRA_REP3 else 1
         times = []
         for _ in range(nreps):
-            # same memo-cold discipline as the headline loop: every
+            # same cold discipline as the headline loop: every
             # extras number measures its query's full pipeline
-            _reset_stage_memos(spark)
+            spark.catalog.clearCache()
             t = time.perf_counter()
             QUERIES[name](spark, sf_dir).write.format("noop").mode(
                 "overwrite"

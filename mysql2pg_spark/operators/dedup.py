@@ -210,16 +210,14 @@ def lsh_candidate_pairs_capped(
     # pays two extra bucket-annotation joins — a measured 4× on d04's
     # warm sf0.1 wall, pure insurance premium on corpora that need no
     # insurance. The agg is map-side-combined O(buckets) and runs
-    # once per memoized pipeline build. The decision is FROZEN into
-    # the returned plan: if the underlying data changes under the same
-    # path, rebuild the DataFrame (tools/gen_scale invalidates the
-    # plans-layer memos when it rewrites a dir).
+    # once per call. The decision is FROZEN into the returned plan: if
+    # the underlying data changes under the same path, rebuild the
+    # DataFrame (the plans layer builds every query from its files, so
+    # its queries always do).
     #
     # NOTE (ADVICE r15): with plan_time_stats=True (the default, what
-    # the memoized plans layer uses) THIS FUNCTION IS EAGER — it runs
-    # one Spark job at build time. Library callers outside the
-    # plans-layer memo + gen_scale invalidation that need lazy
-    # semantics (or whose data may be rewritten under the same path)
+    # the plans layer uses) THIS FUNCTION IS EAGER — it runs one Spark
+    # job at build time. Library callers that need lazy semantics
     # should pass plan_time_stats=False: the capped tree is then built
     # unconditionally, which is correct at every bucket size and only
     # costs the two bucket-annotation joins.
@@ -349,8 +347,8 @@ def hashed_shingle_sets(sh_sets: DataFrame, id_col: str) -> DataFrame:
 
     EXACT ONLY when the hash is injective on the corpus vocabulary —
     callers must gate on :func:`shingle_hash_is_injective` (the plans
-    layer memoizes the checked frame and falls back to the string
-    arrays when the check ever fails). Injectivity makes per-pair
+    layer's ``verify_sets`` checks per query and falls back to the
+    string arrays when the check fails). Injectivity makes per-pair
     intersection counts on hashes equal the counts on strings, so the
     Jaccard doubles are bit-identical."""
     return sh_sets.select(
@@ -364,7 +362,7 @@ def shingle_hash_is_injective(sh_sets: DataFrame) -> bool:
     shingle vocabulary. NOTE: EAGER — runs one map-side-combinable
     aggregation job over the exploded shingles (same plan-time-statistic
     shape as the max-bucket scalar above). O(vocabulary) work, run once
-    per memoized pipeline build."""
+    per call."""
     row = (
         sh_sets.select(F.explode("shingles").alias("s"))
         .agg(
@@ -823,7 +821,7 @@ def lsh_tuning_profile(
     subset of r=1's, so verified@r=1 is the recall denominator.
 
     Scale: signatures and shingles are computed once (callers pass the
-    shared cached stages). Round 16 (optimization, guide §2.3
+    shared pinned stages). Round 16 (optimization, guide §2.3
     "aggregate before you shuffle" / §1.2 step 1): when the configs
     include r=1, ALL configs profile in ONE candidate join + ONE
     Jaccard-verification pass — every config's candidate set is a
@@ -987,7 +985,7 @@ def capped_neardup_pipeline(
     1. If ``rows_per_band`` is None, run the d16 tuning profile on the
        ``profile_filter`` slice (MinHash signatures and shingle sets
        are doc-local, so the slice is a plain filter over the shared
-       cached stages — no recompute) and pick the banding with
+       pinned stages — no recompute) and pick the banding with
        :func:`choose_rows_per_band`. The ≤ len(configs)-row profile is
        collected on the driver: a plan-time statistics decision, the
        same shape as AQE reading map-output stats — at 100 TB you

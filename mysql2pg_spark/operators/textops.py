@@ -627,12 +627,10 @@ def term_frequencies(
     (alias, Column) pairs carried through the aggregation key —
     per-document attributes like a target-slice flag.
 
-    NOT cached here (ADVICE r14): an operator-level ``.cache()`` with no
-    unpersist pins one TF frame per invocation for the session lifetime.
-    Consumers that derive several differently-pruned branches should pin
-    the frame themselves with a keyed per-session registry (the plans
-    layer does — ``plans/textops.cached_tf``) or pass a pre-cached frame
-    via the consumers' ``tf=`` parameter."""
+    NOT pinned here: a consumer that derives several differently-pruned
+    branches pins the frame for its own query (the plans layer's
+    ``plans/textops._tf`` takes a lazy ``localCheckpoint``) and passes
+    it via the consumers' ``tf=`` parameter."""
     keys = [F.col(id_col)] + [c.alias(a) for a, c in extra_cols]
     toks = df.select(
         *keys, F.explode(tokens(text_col)).alias("term")
@@ -671,11 +669,10 @@ def bm25_top_terms(
     document frequency and the corpus scalars all derive from that one
     frame, but Catalyst prunes each branch's aggregate differently,
     which defeats exchange reuse (measured: 4 parquet scans without
-    the pin, 1 with). Pass a cached frame via ``tf=`` (the plans layer
-    routes it through a keyed per-session registry, ADVICE r14 — an
-    unconditional operator-level cache leaked one pinned frame per
-    invocation); with ``tf=None`` the frame is built inline,
-    uncached — correct, re-scanned per branch. The corpus scalars
+    the pin, 1 with). Pass a pinned frame via ``tf=`` (the plans layer
+    builds one per query under a lazy ``localCheckpoint``); with
+    ``tf=None`` the frame is built inline, unpinned — correct,
+    re-scanned per branch. The corpus scalars
     (N, Σdl) ride a broadcast 1-row crossJoin; the df table joins on
     the term key (vocab-sized, AQE-broadcastable); top-k is a
     per-document window over rows already reduced to (doc, term)
@@ -751,9 +748,8 @@ def importance_weights(
     leans toward the target distribution.
 
     Scale design: one (doc, term) TF shuffle — three branches derive
-    from it, so callers should pass a cached frame via ``tf=`` (keyed
-    per-session registry in the plans layer; see bm25_top_terms on why
-    the operator no longer caches unconditionally). Term-level
+    from it, so callers should pass a pinned frame via ``tf=`` (see
+    bm25_top_terms; the plans layer pins one per query). Term-level
     target/corpus counts aggregate FROM the tf frame (map-side
     combined); totals ride a broadcast 1-row crossJoin; the scoring
     join is a term-keyed equi-join.

@@ -40,39 +40,7 @@ for _mod in (
     except ImportError:
         pass  # module not built yet (incremental rounds)
 
-def clear_stage_memos(sf_dir: str | None = None) -> None:
-    """Drop the plans-layer per-(session, dir) memoized stages — the
-    shingle/signature/verify/candidate memos in ``plans.dedup`` and the
-    TF memo in ``plans.textops`` — unpersisting any pinned frames.
-
-    ``sf_dir=None`` clears everything (the bench calls this between
-    timed reps so every per-query number measures its full pipeline
-    from the parquet inputs — round 17 measurement-honesty fix);
-    a specific dir clears only that dir's entries (the gen_scale
-    data-rewrite invalidation path)."""
-    from mysql2pg_spark.plans import dedup as _pd
-    from mysql2pg_spark.plans import textops as _pt
-
-    for cache in (_pd._stage_cache, _pt._tf_cache):
-        keys = [
-            k for k in cache
-            if sf_dir is None or (len(k) > 1 and k[1] == sf_dir)
-        ]
-        for key in keys:
-            entry = cache.pop(key, None)
-            # unpersist the pinned frame (ADVICE r15): popping the memo
-            # alone leaks the cached blocks in executor memory for the
-            # session lifetime; tuples (capped candidates) carry the
-            # pair frame first
-            try:
-                df = entry[0] if isinstance(entry, tuple) else entry
-                if hasattr(df, "unpersist"):
-                    df.unpersist()
-            except Exception:
-                pass
-
 
 __all__ = [
     "QUERIES", "ORACLES", "DRIVER_QUERIES", "DRIVER_ORACLES", "query",
-    "clear_stage_memos",
 ]

@@ -13,71 +13,52 @@ from pyspark.sql import functions as F
 
 from mysql2pg_spark.operators import dedup as D
 from mysql2pg_spark.plans.registry import query
-from mysql2pg_spark.tables import load_table
+from mysql2pg_spark.tables import fan_out, load_table
 
-# Cross-query memo for the shingle/signature stages shared by
-# d02/d03/d04/cc01 (cache keyed per session+dir; .cache() pins the
-# exploded-shingle scan, the dominant cost of the MinHash family).
-_stage_cache: dict[tuple, object] = {}
-
-
-def _sess(spark) -> str:
-    """Session-lifetime memo key (ADVICE r16): ``id(spark)`` can be
-    recycled by the allocator after a stopped session is GC'd, serving
-    a cached DataFrame bound to a dead session; ``applicationId`` is
-    unique per SparkContext lifetime."""
-    return spark.sparkContext.applicationId
+# The MinHash family's shared stages are plain values one query builds
+# and uses: shingles → signatures → (verify sets, candidates) → verified
+# pairs. A query that reads a stage from more than one job — an eager
+# plan-time statistic (the injectivity check, the max-bucket scalar,
+# d15's profile) and then its main job — gets it pinned with a lazy
+# localCheckpoint, so the stage's kernel runs once per query. Nothing
+# outlives the query: a rewrite of the same path or a sibling session
+# always builds from the current files.
 
 
-def cached_shingles(spark, sf_dir: str):
-    key = (_sess(spark), sf_dir, "sh")
-    if key not in _stage_cache:
-        from mysql2pg_spark.tables import fan_out
-
-        # round 16: fan_out the docs scan ahead of the shingle kernel —
-        # the sf1 leg reads documents as 2 splits, so tokenize+shingle
-        # ran on 2 of 32 cores (no-op at real scale; with the Arrow
-        # kernel this took the sf1 signature stage 35 s → 1.5 s).
-        d = fan_out(load_table(spark, sf_dir, "documents"))
-        _stage_cache[key] = D.shingle_sets(d, "doc_id", "text", NGRAM).cache()
-    return _stage_cache[key]
+def shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct word-NGRAM shingle sets per document (pinned)."""
+    # round 16: fan_out the docs scan ahead of the shingle kernel —
+    # the sf1 leg reads documents as 2 splits, so tokenize+shingle
+    # ran on 2 of 32 cores (no-op at real scale; with the Arrow
+    # kernel this took the sf1 signature stage 35 s → 1.5 s).
+    d = fan_out(load_table(spark, sf_dir, "documents"))
+    return D.shingle_sets(d, "doc_id", "text", NGRAM).localCheckpoint(
+        eager=False
+    )
 
 
-def cached_signatures(spark, sf_dir: str):
-    key = (_sess(spark), sf_dir, "sig")
-    if key not in _stage_cache:
-        _stage_cache[key] = D._signatures_from_shingles(
-            cached_shingles(spark, sf_dir), "doc_id", NUM_HASHES
-        ).cache()
-    return _stage_cache[key]
+def signatures(sh: DataFrame) -> DataFrame:
+    """NUM_HASHES MinHash signatures over the shingle stage (pinned:
+    the band self-join and the capped stage's max-bucket job read it
+    more than once)."""
+    return D._signatures_from_shingles(
+        sh, "doc_id", NUM_HASHES
+    ).localCheckpoint(eager=False)
 
 
-def cached_verify_sets(spark, sf_dir: str, plan_time_stats: bool = True):
-    """The shingle stage every Jaccard VERIFY consumes (round 16, guide
-    §2.3): int64-hashed shingle arrays when xxhash64 is injective on
-    this corpus' vocabulary (checked once per memoized build — a
-    plan-time statistic like the max-bucket scalar; at sf1 the hashed
-    payload cut the 3.96M-pair verify wall ~3×), else the string
-    arrays unchanged. Verify results are bit-identical either way —
-    injectivity makes every per-pair intersection count equal the
-    string count. Signature/minhash stages keep consuming
-    cached_shingles (they md5 the STRINGS).
+def verify_sets(sh: DataFrame) -> DataFrame:
+    """The shingle arrays every Jaccard VERIFY consumes (round 16, guide
+    §2.3): int64-hashed arrays when xxhash64 is injective on this
+    corpus' vocabulary (at sf1 the hashed payload cut the 3.96M-pair
+    verify wall ~3×), else the string arrays unchanged. Verify results
+    are bit-identical either way — injectivity makes every per-pair
+    intersection count equal the string count. Signatures keep reading
+    the string stage (they md5 the STRINGS).
 
-    ``plan_time_stats=False`` (round 17, VERDICT r16 item 5) skips the
-    eager O(vocabulary) injectivity job and returns the STRING arrays
-    — fully lazy, exact at any scale, just without the hashed-payload
-    speedup; the same opt-out contract lsh_candidate_pairs_capped has.
-    """
-    if not plan_time_stats:
-        return cached_shingles(spark, sf_dir)
-    key = (_sess(spark), sf_dir, "shh")
-    if key not in _stage_cache:
-        sh = cached_shingles(spark, sf_dir)
-        if D.shingle_hash_is_injective(sh):
-            _stage_cache[key] = D.hashed_shingle_sets(sh, "doc_id").cache()
-        else:  # collision on this corpus — exactness over speed
-            _stage_cache[key] = sh
-    return _stage_cache[key]
+    EAGER: runs the O(vocabulary) injectivity job once per call."""
+    if D.shingle_hash_is_injective(sh):
+        return D.hashed_shingle_sets(sh, "doc_id")
+    return sh  # collision on this corpus — exactness over speed
 
 
 # Production bucket cap for the default near-dup path (round 15 —
@@ -88,55 +69,30 @@ def cached_verify_sets(spark, sf_dir: str, plan_time_stats: bool = True):
 # uncapped oracles stay exact; past it (the Zipf skew corpus, the sf1
 # scale step with 126-member buckets, one viral template at 100 TB)
 # buckets star-link to the bucket minimum instead of melting one task
-# with O(n²) pairs. Truncation is SURFACED, never silent:
-# neardup_truncation_stats() is read by the bench skew/scale legs and
-# the d15 driver row carries the counts in its result.
+# with O(n²) pairs. Truncation is SURFACED, never silent: the bench
+# skew/scale legs read the stats frame of
+# ``D.lsh_candidate_pairs_capped`` at this cap, and the d15 driver row
+# carries the counts in its result.
 PROD_MAX_BUCKET = 64
 
 
-def neardup_candidates(spark, sf_dir: str) -> tuple:
-    """(capped candidate pairs, 1-row truncation stats) — the shared
-    candidate stage of the production near-dup path, memoized beside
-    the shingle/signature stages."""
-    key = (_sess(spark), sf_dir, "cand")
-    if key not in _stage_cache:
-        _stage_cache[key] = D.lsh_candidate_pairs_capped(
-            cached_signatures(spark, sf_dir),
-            "doc_id",
-            NUM_HASHES,
-            max_bucket=PROD_MAX_BUCKET,
-        )
-    return _stage_cache[key]
+def verified_pairs(sh: DataFrame, sigs: DataFrame) -> DataFrame:
+    """Near-dup pairs from given stages: capped candidates (see
+    PROD_MAX_BUCKET) verified by exact Jaccard ≥ JACCARD_T. Eager:
+    the injectivity and max-bucket jobs run here."""
+    cands, _stats = D.lsh_candidate_pairs_capped(
+        sigs, "doc_id", NUM_HASHES, max_bucket=PROD_MAX_BUCKET
+    )
+    return D.verify_jaccard(cands, verify_sets(sh), "doc_id", JACCARD_T)
 
 
-def neardup_truncation_stats(spark, sf_dir: str) -> DataFrame:
-    """1-row (capped_buckets, truncated_pairs, kept_formations) for the
-    production candidate stage — the "no silent caps" surface."""
-    return neardup_candidates(spark, sf_dir)[1]
+def neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The production near-dup pairs of a directory (d04, the cluster
+    plans, the bench legs). The result is not pinned; a caller that
+    reads it from several jobs checkpoints it itself."""
+    sh = shingles(spark, sf_dir)
+    return verified_pairs(sh, signatures(sh))
 
-
-def neardup_pairs(spark, sf_dir: str) -> DataFrame:
-    """Verified near-dup pairs from the cached shared stages — capped
-    candidate stage, see PROD_MAX_BUCKET.
-
-    Memoized + cached like the shingle/signature stages (round 16,
-    continuation sitting, guide §2.4 shared-subtree / §5): this frame
-    fans out to EIGHT+ consumers (d04, the cc01 battery, cc02, cc03,
-    cc04, d09, the bench scale/skew legs), and each previously re-ran
-    the whole 3.96M-pair candidate self-join + Jaccard verify at sf1 —
-    the cc01 event log showed one 21.5 s / 359 CPU-s stage per
-    consumer re-deriving it from the signature cache. The verified
-    frame itself is tiny (filtered pairs), so pinning it converts
-    every later consumer to a cache read. Same lifecycle as the other
-    stages: keyed per (session, dir), dropped by
-    tools/gen_scale._invalidate_stage_memos on data rewrite."""
-    key = (_sess(spark), sf_dir, "vpairs")
-    if key not in _stage_cache:
-        cands, _stats = neardup_candidates(spark, sf_dir)
-        _stage_cache[key] = D.verify_jaccard(
-            cands, cached_verify_sets(spark, sf_dir), "doc_id", JACCARD_T
-        ).cache()
-    return _stage_cache[key]
 
 NGRAM = 3
 NUM_HASHES = 8
@@ -225,7 +181,7 @@ SELECT * FROM mh ORDER BY doc_id
     driver=False,
 )
 def d02_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return cached_signatures(spark, sf_dir)
+    return signatures(shingles(spark, sf_dir))
 
 
 # --------------------------------------------------------------------------
@@ -239,7 +195,7 @@ SELECT id_a, id_b FROM cand ORDER BY id_a, id_b
 """,
 )
 def d03_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sigs = cached_signatures(spark, sf_dir)
+    sigs = signatures(shingles(spark, sf_dir))
     return D.lsh_candidate_pairs(sigs, "doc_id", NUM_HASHES)
 
 
@@ -278,7 +234,7 @@ SELECT DISTINCT id_a, id_b FROM allp ORDER BY id_a, id_b
     driver=False,
 )
 def d14_capped_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sigs = cached_signatures(spark, sf_dir)
+    sigs = signatures(shingles(spark, sf_dir))
     pairs, _stats = D.lsh_candidate_pairs_capped(
         sigs, "doc_id", NUM_HASHES, max_bucket=CAPPED_MAX_BUCKET
     )
@@ -535,6 +491,14 @@ ORDER BY id_a, id_b
     driver=False,
 )
 def d13_editdistance_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
+    sigs = signatures(shingles(spark, sf_dir))
+    return edit_verified_pairs(spark, sf_dir, sigs)
+
+
+def edit_verified_pairs(
+    spark: SparkSession, sf_dir: str, sigs: DataFrame
+) -> DataFrame:
+    """d13's rows over the LSH candidates of a given signature stage."""
     docs = load_table(spark, sf_dir, "documents")
     norm = docs.select(
         "doc_id",
@@ -542,9 +506,7 @@ def d13_editdistance_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s"
         ),
     )
-    cands = D.lsh_candidate_pairs(
-        cached_signatures(spark, sf_dir), "doc_id", NUM_HASHES
-    )
+    cands = D.lsh_candidate_pairs(sigs, "doc_id", NUM_HASHES)
     # Round 17 (guide §2.3 shuffle keys instead of payloads, VERDICT
     # r16 ask #5): prune candidate pairs on INTEGER lengths before the
     # two string joins. edit_dist >= |la−lb| always, and every emitted
@@ -667,9 +629,10 @@ ORDER BY rows_per_band
 def d16_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the profile consumes shingles only through verify_jaccard →
     # the hashed verify stage is bit-identical here (round 16)
+    sh = shingles(spark, sf_dir)
     return D.lsh_tuning_profile(
-        cached_signatures(spark, sf_dir),
-        cached_verify_sets(spark, sf_dir),
+        signatures(sh),
+        verify_sets(sh),
         "doc_id",
         JACCARD_T,
         rows_per_band_configs=_TUNING_CONFIGS,
@@ -892,46 +855,19 @@ def d17_incremental_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     return result.crossJoin(F.broadcast(stats))
 
 
-def _d15_rows_per_band(spark, sf_dir: str) -> int:
-    """The banding CHOICE for d15's pipeline, memoized per (session,
-    dir) beside the other shared stages (round 17, VERDICT r16 ask #8):
-    the ≤3-row tuning profile is a plan-time statistic (same shape as
-    the capped stage's max-bucket scalar), and re-collecting it on
-    every d15 invocation cost one full profile job each time. Same
-    lifecycle as every `_stage_cache` entry: dropped by
-    tools/gen_scale._invalidate_stage_memos on data rewrite and by the
-    bench's per-rep memo reset. The lazy opt-out is unchanged — the
-    public operator `capped_neardup_pipeline` still profiles inline
-    when `rows_per_band=None` and skips profiling entirely when the
-    caller passes a value, which is exactly what this helper does."""
-    key = (_sess(spark), sf_dir, "d15r")
-    if key not in _stage_cache:
-        prof = D.lsh_tuning_profile(
-            cached_signatures(spark, sf_dir),
-            cached_verify_sets(spark, sf_dir),
-            "doc_id",
-            JACCARD_T,
-            rows_per_band_configs=_TUNING_CONFIGS,
-            num_hashes=NUM_HASHES,
-        )
-        _stage_cache[key] = D.choose_rows_per_band(
-            prof.collect(), _RECALL_FLOOR
-        )
-    return _stage_cache[key]
-
-
 @query("d15_capped_neardup_clusters", oracle=_D15_ORACLE, driver=False)
 def d15_capped_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sh_sets flows only into the profile + final verify_jaccard →
-    # the hashed verify stage is bit-identical here (round 16)
+    # the hashed verify stage is bit-identical here (round 16); the
+    # pipeline profiles inline (rows_per_band=None) to pick the banding
+    sh = shingles(spark, sf_dir)
     return D.capped_neardup_pipeline(
-        cached_verify_sets(spark, sf_dir),
-        cached_signatures(spark, sf_dir),
+        verify_sets(sh),
+        signatures(sh),
         "doc_id",
         JACCARD_T,
         num_hashes=NUM_HASHES,
         max_bucket=D15_MAX_BUCKET,
-        rows_per_band=_d15_rows_per_band(spark, sf_dir),
         configs=_TUNING_CONFIGS,
         recall_floor=_RECALL_FLOOR,
     )

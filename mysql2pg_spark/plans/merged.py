@@ -309,9 +309,16 @@ ORDER BY c.id_a, c.id_b
 """,
 )
 def d03_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cands = QUERIES["d03_lsh_candidates"](spark, sf_dir)
-    verified = QUERIES["d04_neardup_pairs"](spark, sf_dir)
-    edits = QUERIES["d13_editdistance_verify"](spark, sf_dir)
+    # one shingle/signature build feeds all three members, so the
+    # shingle kernel runs once per battery
+    from mysql2pg_spark.operators.dedup import lsh_candidate_pairs
+    from mysql2pg_spark.plans import dedup as PD
+
+    sh = PD.shingles(spark, sf_dir)
+    sigs = PD.signatures(sh)
+    cands = lsh_candidate_pairs(sigs, "doc_id", PD.NUM_HASHES)
+    verified = PD.verified_pairs(sh, sigs)
+    edits = PD.edit_verified_pairs(spark, sf_dir, sigs)
     return (
         cands.join(verified, ["id_a", "id_b"], "left")
         .withColumn("is_neardup", F.col("jaccard").isNotNull())

@@ -17,29 +17,22 @@ from mysql2pg_spark.tables import load_table
 _NORM = "trim(lower(text))"
 _TOKENS = f"string_split_regex({_NORM}, '\\s+')"
 
-# Keyed per-session registry for the (doc, term) TF frame shared by the
-# corpus-statistics queries (t25 BM25, t26 DSIR) — same pattern as
-# plans/dedup.cached_shingles. One pinned frame per (session, dir,
-# target-slice) instead of one per invocation (ADVICE r14: the previous
-# operator-level .cache() accumulated a new pinned frame every run).
-_tf_cache: dict[tuple, DataFrame] = {}
-
-
-def cached_tf(
+def _tf(
     spark: SparkSession, sf_dir: str, target: tuple | None = None
 ) -> DataFrame:
-    # session-lifetime key, not id(spark) — see plans/dedup._sess
-    key = (spark.sparkContext.applicationId, sf_dir, target)
-    if key not in _tf_cache:
-        d = load_table(spark, sf_dir, "documents")
-        extras = ()
-        if target is not None:
-            col, val = target
-            extras = (("_is_t", F.col(col) == F.lit(val)),)
-        _tf_cache[key] = T.term_frequencies(
-            d, "doc_id", "text", extra_cols=extras
-        ).cache()
-    return _tf_cache[key]
+    """The (doc, term) TF frame of the corpus-statistics queries (t25
+    BM25, t26 DSIR), built per call and pinned with a lazy
+    localCheckpoint: each query reads it from several branches (doc
+    lengths, document frequencies, the scored rows), and the pin keeps
+    that to one parquet scan and one tokenize."""
+    d = load_table(spark, sf_dir, "documents")
+    extras = ()
+    if target is not None:
+        col, val = target
+        extras = (("_is_t", F.col(col) == F.lit(val)),)
+    return T.term_frequencies(
+        d, "doc_id", "text", extra_cols=extras
+    ).localCheckpoint(eager=False)
 
 
 def _occ_sql(marker: str) -> str:
@@ -1425,7 +1418,7 @@ ORDER BY doc_id, rnk
 def t25_bm25_saliency(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     return T.bm25_top_terms(
-        d, "doc_id", "text", top_k=3, tf=cached_tf(spark, sf_dir)
+        d, "doc_id", "text", top_k=3, tf=_tf(spark, sf_dir)
     )
 
 
@@ -1477,5 +1470,5 @@ def t26_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     return T.importance_weights(
         d, "doc_id", "text", "lang", "en",
-        tf=cached_tf(spark, sf_dir, target=("lang", "en")),
+        tf=_tf(spark, sf_dir, target=("lang", "en")),
     )

@@ -189,7 +189,7 @@ def test_capped_lsh_no_all_pairs_and_star_branch(spark):
 
 
 def test_bm25_plan_posture(spark):
-    """t25: one cached TF frame feeds every branch (no repeated corpus
+    """t25: one pinned TF frame feeds every branch (no repeated corpus
     scans — Catalyst's per-branch pruning defeats exchange reuse, see
     the operator docstring), the corpus scalars ride a broadcast
     1-row cross join, and the per-document top-k uses the
@@ -197,24 +197,26 @@ def test_bm25_plan_posture(spark):
     plan = _plan(spark, "t25_bm25_saliency")
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
-    assert "InMemoryTableScan" in plan          # the TF cache pin
+    assert "Scan ExistingRDD" in plan           # the TF checkpoint pin
+    assert "Scan parquet" not in plan           # no branch re-scans
     assert "WindowGroupLimit" in plan           # top-k pushdown
     assert "BroadcastNestedLoopJoin" in plan    # 1-row corpus scalars
 
 
 def test_importance_weights_plan_posture(spark):
     """t26: term-keyed equi-join scoring (never all-pairs), broadcast
-    1-row totals, cached TF frame, all-JVM expressions."""
+    1-row totals, pinned TF frame, all-JVM expressions."""
     plan = _plan(spark, "t26_importance_weights")
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
-    assert "InMemoryTableScan" in plan
+    assert "Scan ExistingRDD" in plan
+    assert "Scan parquet" not in plan
     assert "BroadcastNestedLoopJoin" in plan
 
 
 def test_lsh_tuning_no_all_pairs(spark):
     """d16: every banding config's candidate generation is a banded
-    equi-join over the shared cached signature stage — no cartesian,
+    equi-join over the shared pinned signature stage — no cartesian,
     no Python rows."""
     plan = _plan(spark, "d16_lsh_tuning")
     assert "CartesianProduct" not in plan

@@ -30,12 +30,13 @@ def test_fixture_buckets_stay_under_prod_cap(spark):
     from mysql2pg_spark.plans.dedup import (
         NUM_HASHES,
         PROD_MAX_BUCKET,
-        cached_signatures,
+        shingles,
+        signatures,
     )
 
     for sf_dir in (SF_CORRECT, SF_BENCH):
         keys = _band_keys(
-            cached_signatures(spark, sf_dir), "doc_id", "id", NUM_HASHES
+            signatures(shingles(spark, sf_dir)), "doc_id", "id", NUM_HASHES
         )
         max_bucket = (
             keys.groupBy("band", "key")
@@ -244,7 +245,7 @@ def test_hashed_verify_matches_string_verify(spark):
     assert srows == hrows
 
 
-def test_cached_verify_sets_falls_back_to_strings_on_collision(
+def test_verify_sets_falls_back_to_strings_on_collision(
     spark, monkeypatch
 ):
     """The plans-layer verify stage must keep the STRING shingle arrays
@@ -252,30 +253,13 @@ def test_cached_verify_sets_falls_back_to_strings_on_collision(
     the int64-hashed stage when it passes."""
     from mysql2pg_spark.plans import dedup as PD
 
-    # round 17: memo keys are applicationId-based (ADVICE r16)
-    key_h = (spark.sparkContext.applicationId, SF_CORRECT, "shh")
-    saved = PD._stage_cache.pop(key_h, None)
-    try:
-        monkeypatch.setattr(
-            PD.D, "shingle_hash_is_injective", lambda sh: False
-        )
-        out = PD.cached_verify_sets(spark, SF_CORRECT)
-        assert dict(out.dtypes)["shingles"] == "array<string>"
-        PD._stage_cache.pop(key_h, None)
-        monkeypatch.setattr(
-            PD.D, "shingle_hash_is_injective", lambda sh: True
-        )
-        out = PD.cached_verify_sets(spark, SF_CORRECT)
-        assert dict(out.dtypes)["shingles"] == "array<bigint>"
-    finally:
-        df = PD._stage_cache.pop(key_h, None)
-        try:
-            if df is not None and hasattr(df, "unpersist"):
-                df.unpersist()
-        except Exception:
-            pass
-        if saved is not None:
-            PD._stage_cache[key_h] = saved
+    sh = PD.shingles(spark, SF_CORRECT)
+    monkeypatch.setattr(PD.D, "shingle_hash_is_injective", lambda sh: False)
+    out = PD.verify_sets(sh)
+    assert dict(out.dtypes)["shingles"] == "array<string>"
+    monkeypatch.setattr(PD.D, "shingle_hash_is_injective", lambda sh: True)
+    out = PD.verify_sets(sh)
+    assert dict(out.dtypes)["shingles"] == "array<bigint>"
 
 
 def test_ivf_kernel_matches_jvm_on_edge_cases(spark):

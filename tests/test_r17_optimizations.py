@@ -2,10 +2,9 @@
 
 Each test pins a property a round-17 change relies on:
 - the versioned scale marker regenerates stale v1 layouts (ADVICE r16),
-- clear_stage_memos drops memos globally and per-dir (bench honesty),
 - q09's single-join rewrite keeps one scan per table,
 - pagerank's per-round lineage cut keeps the final plan constant-size,
-- the d15 banding choice is memoized per (session, dir).
+- d13's length prefilter keeps its rows identical.
 """
 
 from __future__ import annotations
@@ -36,21 +35,6 @@ def test_scale_marker_v2_regenerates_stale_v1_layout(spark, tmp_path):
     assert "spread=" in content
     files = glob.glob(os.path.join(out, "lineitem.parquet", "part-*"))
     assert len(files) > 1, "stale v1 dir was not regenerated splittable"
-
-
-def test_clear_stage_memos_by_dir_and_global(spark):
-    from mysql2pg_spark.plans import clear_stage_memos
-    from mysql2pg_spark.plans import dedup as pd_plans
-
-    a, b = "/root/testdata/sf0.001", "/root/testdata/sf0.01"
-    pd_plans.cached_shingles(spark, a)
-    pd_plans.cached_shingles(spark, b)
-    assert any(k[1] == a for k in pd_plans._stage_cache)
-    clear_stage_memos(a)
-    assert not any(k[1] == a for k in pd_plans._stage_cache)
-    assert any(k[1] == b for k in pd_plans._stage_cache)
-    clear_stage_memos()
-    assert not pd_plans._stage_cache
 
 
 def test_q09_single_scan_per_table(spark):
@@ -128,46 +112,6 @@ def test_pagerank_checkpointed_matches_unrolled_reference(spark):
     assert got == ranks
 
 
-def test_d15_choice_memoized_per_session_dir(spark):
-    from mysql2pg_spark.plans import dedup as pd_plans
-
-    sf = "/root/testdata/sf0.001"
-    r1 = pd_plans._d15_rows_per_band(spark, sf)
-    key = (spark.sparkContext.applicationId, sf, "d15r")
-    assert key in pd_plans._stage_cache
-    assert isinstance(r1, int) and r1 >= 1
-    # second call is a dict hit (same value, no new entry churn)
-    assert pd_plans._d15_rows_per_band(spark, sf) == r1
-
-
-def test_verify_sets_opt_out_is_lazy_strings(spark):
-    """plan_time_stats=False must skip the eager injectivity job and
-    return the string arrays (exact at any scale), without populating
-    the hashed-stage memo (VERDICT r16 item 5 opt-out)."""
-    from mysql2pg_spark.plans import dedup as pd_plans
-
-    sf = "/root/testdata/sf0.001"
-    key = (spark.sparkContext.applicationId, sf, "shh")
-    pd_plans._stage_cache.pop(key, None)
-    out = pd_plans.cached_verify_sets(spark, sf, plan_time_stats=False)
-    assert dict(out.dtypes)["shingles"] == "array<string>"
-    assert key not in pd_plans._stage_cache
-
-
-def test_memo_keys_use_application_id(spark):
-    """ADVICE r16: memo keys must be session-lifetime tokens, not
-    id(spark) (recyclable after GC)."""
-    from mysql2pg_spark.plans import dedup as pd_plans
-
-    sf = "/root/testdata/sf0.001"
-    pd_plans.cached_signatures(spark, sf)
-    app = spark.sparkContext.applicationId
-    assert any(k[0] == app for k in pd_plans._stage_cache)
-    assert not any(
-        isinstance(k[0], int) for k in pd_plans._stage_cache
-    )
-
-
 def test_stateful_partition_formula_is_scale_neutral(spark):
     """The state-partition derivation must be a no-op at production
     rates (it may only LOWER the count, and only for small triggers) —
@@ -206,7 +150,8 @@ def test_d13_prefilter_keeps_rows_identical(spark):
     from mysql2pg_spark.plans.dedup import (
         EDIT_SIM_T,
         NUM_HASHES,
-        cached_signatures,
+        shingles,
+        signatures,
     )
     from mysql2pg_spark.operators import dedup as D
     from mysql2pg_spark.tables import load_table
@@ -222,7 +167,7 @@ def test_d13_prefilter_keeps_rows_identical(spark):
         ).alias("s"),
     )
     cands = D.lsh_candidate_pairs(
-        cached_signatures(spark, sf), "doc_id", NUM_HASHES
+        signatures(shingles(spark, sf)), "doc_id", NUM_HASHES
     )
     na = norm.select(F.col("doc_id").alias("id_a"), F.col("s").alias("sa"))
     nb = norm.select(F.col("doc_id").alias("id_b"), F.col("s").alias("sb"))

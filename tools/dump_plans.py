@@ -99,7 +99,8 @@ round:
 - **d13_editdistance_verify (~8-9 s)** — JVM `levenshtein` over the
   LSH candidate pairs (82k pairs at sf0.1, ~300-char normalized
   strings ⇒ ~10^5 char-cell DP per pair). Cost ∝ candidate count,
-  never n²; shares `cached_signatures` with the d02/d03 family.
+  never n²; the d03_lsh_neardup battery hands it the signature
+  stage its d03/d04 members read.
 - **s06_knn_pq (~5-6 s)** — PQ encoding is an inherent n·k·m
   corpus×codebook broadcast join (map-side, no big-side shuffle); ADC
   scores integer-quantized for cross-engine exactness.

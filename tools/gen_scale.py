@@ -79,19 +79,6 @@ def _spread(df):
     return df.repartition(_spread_count(df.sparkSession))
 
 
-def _invalidate_stage_memos(out_dir: str) -> None:
-    """Purge plans-layer per-(session, dir) memoized stages for a dir
-    whose data is being (re)written (review r15): the capped candidate
-    stage freezes a plan-time max-bucket decision at build time — a
-    memoized plan surviving a regeneration of the same path could run
-    the uncapped join on data whose buckets now exceed the cap, while
-    its lazy stats frame reports truncation that never happened.
-    Round 17: delegates to the shared plans-layer helper."""
-    from mysql2pg_spark.plans import clear_stage_memos
-
-    clear_stage_memos(out_dir)
-
-
 def generate_scale_dir(
     spark: SparkSession, src_dir: str, out_dir: str, factor: int = 10
 ) -> str:
@@ -116,7 +103,6 @@ def generate_scale_dir(
             recorded = None
         if recorded is not None and recorded >= spread:
             return out_dir
-    _invalidate_stage_memos(out_dir)
     os.makedirs(out_dir, exist_ok=True)
 
     for t in DIMS:
@@ -276,7 +262,6 @@ def generate_skew_dir(
     marker = os.path.join(out_dir, "_SKEW_OK")
     if os.path.exists(marker):
         return out_dir
-    _invalidate_stage_memos(out_dir)
     os.makedirs(out_dir, exist_ok=True)
 
     for t in DIMS + ("orders", "lineitem", "events"):
