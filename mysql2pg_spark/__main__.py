@@ -26,12 +26,17 @@ Modes, least- to most-connected:
   tabexport  the EXPORT mirror: write a mysqldump --tab-style directory
              (per-table MySQL-dialect .sql + escaped .txt data via the
              JVM OUTFILE encoder, plus a restore.sql of LOAD DATA
-             statements) from a dump file or a parquet dir + snapshot.
+             statements).
   pgexport   the offline PostgreSQL artifact (round 13): schema_pre.sql
              + per-table COPY-text data directories (JVM encoder,
              partition-parallel) + schema_post.sql + a psql load.sql —
              convert a mysqldump with NO live PostgreSQL, then load the
              artifact later with plain psql.
+
+tabexport and pgexport read the same sources as local/dump/duckdb
+(--source-dir with --snapshot, --dump-file or --tab-dir) through one
+resolver, so a dump whose bulk arrives through LOAD DATA INFILE exports
+every row.
 
 Every migrating mode (local, dump, duckdb, live) runs
 ``MigrationPipeline.execute()`` — one control flow, different seams —
@@ -139,6 +144,16 @@ def load_snapshot(path: str) -> CatalogSnapshot:
     )
 
 
+#: file-backed mode → the args attribute of its target flag
+_FILE_TARGET = {
+    "local": "sink_dir",
+    "dump": "sink_dir",
+    "duckdb": "duckdb_file",
+    "tabexport": "tab_out",
+    "pgexport": "pg_out",
+}
+
+
 def _file_source(args, spark):
     """``(snapshot, loader)`` for the file-backed modes, where
     ``loader(table_name) -> DataFrame``: a mysqldump --tab directory, a
@@ -171,6 +186,16 @@ def _file_source(args, spark):
             args.dump_file, dump_read_schemas(snap)
         )
     return snap, lambda t: reader(spark, {"table": t})
+
+
+def _all_schema_stages(cfg) -> None:
+    """A schema script or an offline artifact carries ALL schema stages,
+    regardless of the config's sync toggles (pgddl, pgexport); neither
+    validates, because no target is loaded."""
+    o = cfg.options
+    o.view = o.functions = o.triggers = True
+    o.users = o.table_privileges = True
+    o.validate_data = False
 
 
 def _report(snap: CatalogSnapshot, result: dict) -> int:
@@ -217,7 +242,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument(
         "--tab-dir",
         help="mysqldump --tab directory: per-table <t>.sql schema + "
-        "<t>.txt escaped-TSV data (local/dump/duckdb modes)",
+        "<t>.txt escaped-TSV data (every file-backed mode)",
     )
     ap.add_argument("--duckdb-file", help="target database (duckdb mode)")
     ap.add_argument(
@@ -242,17 +267,16 @@ def main(argv: list[str] | None = None) -> int:
 
     cfg = load_config(args.config)
 
-    if args.mode in ("local", "dump", "duckdb"):
-        duck = args.mode == "duckdb"
-        target = args.duckdb_file if duck else args.sink_dir
+    if args.mode in _FILE_TARGET:
+        target_flag = _FILE_TARGET[args.mode]
         source = args.tab_dir or args.dump_file or (
             args.source_dir and args.snapshot
         )
-        if not (target and source):
+        if not (getattr(args, target_flag) and source):
             print(
-                f"{args.mode} mode needs "
-                f"{'--duckdb-file' if duck else '--sink-dir'} plus "
-                "--source-dir (with --snapshot), --dump-file or --tab-dir",
+                f"{args.mode} mode needs --{target_flag.replace('_', '-')} "
+                "plus --source-dir (with --snapshot), --dump-file or "
+                "--tab-dir",
                 file=sys.stderr,
             )
             return 2
@@ -260,7 +284,26 @@ def main(argv: list[str] | None = None) -> int:
 
         spark = get_spark(app_name="mysql2pg_spark-cli")
         snap, loader = _file_source(args, spark)
-        if duck:
+        if args.mode == "tabexport":
+            from mysql2pg_spark.sinks.tabexport import export_tab_dir
+
+            result = export_tab_dir(spark, snap, args.tab_out, loader)
+            print(json.dumps(result))
+            return 0
+        if args.mode == "pgexport":
+            # offline PostgreSQL artifact (round 13): schema_pre.sql +
+            # per-table COPY-text data directories + schema_post.sql +
+            # a psql load.sql — "convert my mysqldump without a live
+            # PostgreSQL", which the reference cannot do at all
+            from mysql2pg_spark.sinks.copyexport import export_pg_dir
+
+            _all_schema_stages(cfg)
+            result = export_pg_dir(
+                MigrationPipeline(cfg, snap), args.pg_out, loader
+            )
+            print(json.dumps(result))
+            return 0
+        if args.mode == "duckdb":
             import duckdb
 
             from mysql2pg_spark.sinks.dbapi_sink import make_dbapi_writer
@@ -286,98 +329,6 @@ def main(argv: list[str] | None = None) -> int:
             seams = parquet_endpoints(loader, args.sink_dir)
         result = MigrationPipeline(cfg, snap).execute(spark, conn, **seams)
         return _report(snap, result)
-
-    if args.mode == "tabexport":
-        if not args.tab_out or not (
-            args.dump_file or (args.source_dir and args.snapshot)
-        ):
-            print(
-                "tabexport mode needs --tab-out plus --dump-file or "
-                "--source-dir with --snapshot",
-                file=sys.stderr,
-            )
-            return 2
-        from mysql2pg_spark.session import get_spark
-        from mysql2pg_spark.sinks.tabexport import export_tab_dir
-
-        spark = get_spark(app_name="mysql2pg_spark-cli")
-        if args.dump_file:
-            from mysql2pg_spark.sources.dumpfile import (
-                dump_read_schemas,
-                full_snapshot_from_dump,
-            )
-            from mysql2pg_spark.sources.loaddata import (
-                load_data_source_reader,
-            )
-
-            snap = full_snapshot_from_dump(spark, args.dump_file)
-            _rdr = load_data_source_reader(
-                args.dump_file, dump_read_schemas(snap)
-            )
-            loader = lambda t: _rdr(spark, {"table": t})  # noqa: E731
-        else:
-            from mysql2pg_spark.tables import load_table
-
-            snap = load_snapshot(args.snapshot)
-            loader = lambda t: load_table(  # noqa: E731
-                spark, args.source_dir, t
-            )
-        result = export_tab_dir(spark, snap, args.tab_out, loader)
-        print(json.dumps(result))
-        return 0
-
-    if args.mode == "pgexport":
-        # offline PostgreSQL artifact (round 13): schema_pre.sql +
-        # per-table COPY-text data directories + schema_post.sql +
-        # a psql load.sql — "convert my mysqldump without a live
-        # PostgreSQL", which the reference cannot do at all
-        if not args.pg_out or not (
-            args.dump_file or (args.source_dir and args.snapshot)
-        ):
-            print(
-                "pgexport mode needs --pg-out plus --dump-file or "
-                "--source-dir with --snapshot",
-                file=sys.stderr,
-            )
-            return 2
-        from mysql2pg_spark.session import get_spark
-        from mysql2pg_spark.sinks.copyexport import export_pg_dir
-
-        spark = get_spark(app_name="mysql2pg_spark-cli")
-        if args.dump_file:
-            from mysql2pg_spark.sources.dumpfile import (
-                dump_read_schemas,
-                full_snapshot_from_dump,
-                read_dump_inserts,
-            )
-
-            snap = full_snapshot_from_dump(spark, args.dump_file)
-            # dump_read_schemas keys by VERBATIM table name (review
-            # r13c: a .lower() here KeyError'd on mixed-case tables)
-            schemas = dump_read_schemas(snap)
-            loader = lambda t: read_dump_inserts(  # noqa: E731
-                spark, args.dump_file, t, schemas[t]
-            )
-        else:
-            from mysql2pg_spark.tables import load_table
-
-            snap = load_snapshot(args.snapshot)
-            loader = lambda t: load_table(  # noqa: E731
-                spark, args.source_dir, t
-            )
-        # the artifact carries ALL schema stages (same contract as
-        # pgddl mode — a partial artifact is not reviewable)
-        cfg.options.view = True
-        cfg.options.functions = True
-        cfg.options.triggers = True
-        cfg.options.users = True
-        cfg.options.table_privileges = True
-        cfg.options.validate_data = False
-        result = export_pg_dir(
-            MigrationPipeline(cfg, snap), args.pg_out, loader
-        )
-        print(json.dumps(result))
-        return 0
 
     if args.mode == "diff":
         # incremental catch-up: the plan that takes a target migrated at
@@ -413,15 +364,8 @@ def main(argv: list[str] | None = None) -> int:
             )
         else:
             snap = load_snapshot(args.snapshot)
-        # a schema script means ALL schema stages, regardless of the
-        # config's sync toggles (data/validation are not DDL anyway)
-        cfg.options.view = True
-        cfg.options.functions = True
-        cfg.options.triggers = True
-        cfg.options.users = True
-        cfg.options.table_privileges = True
+        _all_schema_stages(cfg)
         cfg.options.data = False
-        cfg.options.validate_data = False
         from mysql2pg_spark.sinks.ddl import render_script
 
         script = render_script(MigrationPipeline(cfg, snap).plan())

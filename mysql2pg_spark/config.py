@@ -80,12 +80,6 @@ class ConversionOptions:
     # reference's hot path, postgres/connection.go:557); needs psycopg
     # on the executors.
     use_copy_protocol: bool = False
-    # DDL transaction granularity (round 9): "statement" commits after
-    # every DDL (one round-trip each, maximally durable); "savepoint"
-    # wraps each DDL in SAVEPOINT/RELEASE and commits once per stage —
-    # same keep-going durability, N commit RTTs collapse to 1. Needs a
-    # savepoint-capable target (PostgreSQL; NOT DuckDB).
-    ddl_commit: str = "statement"
 
 
 @dataclass
@@ -121,6 +115,8 @@ class EngineConfig:
 
 
 def _fill(cls, data: dict[str, Any]):
+    # unknown keys are ignored, so a YAML that still carries a retired
+    # option keeps loading
     known = {f for f in cls.__dataclass_fields__}
     return cls(**{k: v for k, v in (data or {}).items() if k in known})
 

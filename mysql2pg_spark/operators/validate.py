@@ -96,7 +96,13 @@ def count_validation(src: DataFrame, dst: DataFrame) -> dict:
     return {"src_rows": a, "dst_rows": b, "consistent": a == b}
 
 
+def verdict(src_row: dict, dst_row: dict) -> dict:
+    """D3 verdict from the two sides' checksum rows."""
+    return {"src": src_row, "dst": dst_row, "consistent": src_row == dst_row}
+
+
 def checksum_validation(src: DataFrame, dst: DataFrame) -> dict:
-    ca = table_checksum(src).collect()[0].asDict()
-    cb = table_checksum(dst).collect()[0].asDict()
-    return {"src": ca, "dst": cb, "consistent": ca == cb}
+    return verdict(
+        table_checksum(src).collect()[0].asDict(),
+        table_checksum(dst).collect()[0].asDict(),
+    )

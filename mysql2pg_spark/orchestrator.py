@@ -178,19 +178,6 @@ def _resolve_trigger_order(group: list) -> tuple[list, list]:
     return ordered, missing
 
 
-def _rollback_to_savepoint_quietly(conn) -> None:
-    """Savepoint-mode failure reset: roll back to the statement's
-    savepoint so EARLIER statements in the stage's open transaction
-    survive; if even that fails (connection gone, engine without
-    savepoints), fall back to a full rollback — the keep-going loop
-    must always be able to run the next statement."""
-    try:
-        cur = conn.cursor()
-        cur.execute("ROLLBACK TO SAVEPOINT mig_ddl")
-    except Exception:
-        _rollback_quietly(conn)
-
-
 class MigrationPipeline:
     def __init__(self, cfg: EngineConfig, snapshot: CatalogSnapshot,
                  existing_pg_tables: set[str] | None = None):
@@ -853,6 +840,27 @@ class MigrationPipeline:
 
         return transform
 
+    def _sink_frame(self, t: TableMeta, df):
+        """The per-table data contract: the source frame of ``t`` as the
+        sink writes it. The live, file-backed and offline-export paths
+        all write through here, so they cannot disagree on one input.
+
+        1. Column case normalizes first: the DDL, the value-fix matcher
+           and the generated-column drop speak normalized identifiers,
+           while a dump or parquet source may carry raw case.
+        2. The B7/B8/C90 value fixes (``_value_fix_transform``).
+        3. Generated columns drop (round 11): the target computes them,
+           and PG rejects INSERTs that name them. mysqldump omits their
+           values anyway; tab/OUTFILE sources carry values, but the
+           recomputation is definitionally identical."""
+        df = df.toDF(*[self._norm(c) for c in df.columns])
+        df = self._value_fix_transform(t)(df)
+        gen = [
+            self._norm(c.name) for c in t.columns
+            if getattr(c, "generated_expr", None)
+        ]
+        return df.drop(*gen) if gen else df
+
     def _default_sink_writer(self):
         """Live sink selection (B5): COPY protocol when
         ``options.use_copy_protocol`` (the reference's hot path, pgx
@@ -894,7 +902,6 @@ class MigrationPipeline:
         dest_reader=None,
         logger=None,
         target_dialect: str = "postgres",
-        ddl_commit: str | None = None,
     ) -> dict:
         """Run the plan against live endpoints, stage order and
         keep-going error semantics per the reference's manager
@@ -906,8 +913,9 @@ class MigrationPipeline:
         defaults:
 
         - ``pg_conn``: DB-API connection — DDL, grants, view/index/
-          function statements execute through a cursor, committed per
-          stage.
+          function statements execute through a cursor, each committed
+          on success and rolled back on failure, so a failed statement
+          never discards earlier ones.
         - ``source_reader(spark, read_plan) -> DataFrame``: defaults to
           ``sources.jdbc.read_jdbc`` with the MySQL config.
         - ``sink_writer(df, table) -> None``: defaults to
@@ -926,20 +934,8 @@ class MigrationPipeline:
         Data reads fan out on a thread pool of ``limits.concurrency`` —
         per-table JDBC latency overlap; within-table parallelism is the
         partitioned read plan's job. Between read and write each table
-        passes through the B7/B8/C90 value-fix transform.
-
-        ``ddl_commit`` picks the DDL transaction granularity (round 9,
-        the VERDICT-asked SAVEPOINT evaluation seam):
-
-        - ``"statement"`` (default): commit after every successful DDL —
-          one network round-trip per statement, maximally durable.
-        - ``"savepoint"``: each DDL runs inside ``SAVEPOINT``/``RELEASE``
-          and the stage commits ONCE — a failed statement rolls back to
-          its savepoint (earlier work in the stage is preserved, same
-          keep-going semantics) while N commit round-trips collapse to
-          one per stage. Requires an engine with savepoint support
-          (PostgreSQL, SQLite; DuckDB has none — keep "statement"
-          there).
+        passes through ``_sink_frame`` (normalized column case, B7/B8/C90
+        value fixes, generated columns dropped).
 
         Returns {"ddl": n_executed, "synced": {table: rows},
         "validation": {table: verdict}, "stage_sec": {stage: seconds},
@@ -947,8 +943,17 @@ class MigrationPipeline:
         """
         from concurrent.futures import ThreadPoolExecutor
 
-        from mysql2pg_spark.operators.validate import checksum_validation
+        from pyspark.sql import functions as F
+
+        from mysql2pg_spark.operators.validate import (
+            checksum_validation,
+            get_observation,
+            observe_checksum,
+            table_checksum,
+            verdict,
+        )
         from mysql2pg_spark.runlog import RunLogger
+        from mysql2pg_spark.sinks.ddl import adapt_ddl
 
         if logger is None:
             logger = RunLogger("logs", echo=False)
@@ -1030,17 +1035,29 @@ class MigrationPipeline:
         # the validate stage never re-scans the source (one scan/table).
         src_checksums: dict[str, tuple[dict, list[str]]] = {}
         # per-stage wall seconds (round 9: the bench artifact carries
-        # the breakdown so a commit-granularity or new-stage regression
-        # is attributable instead of one opaque pipeline number)
+        # the breakdown so a new-stage regression is attributable
+        # instead of one opaque pipeline number)
         stage_sec: dict[str, float] = {}
-        # param overrides config (conversion.options.ddl_commit)
-        mode = ddl_commit or self.cfg.options.ddl_commit
-        if mode not in ("statement", "savepoint"):
-            raise ValueError(
-                f"ddl_commit must be 'statement' or 'savepoint', "
-                f"got {mode!r}"
-            )
-        use_savepoint = mode == "savepoint"
+
+        def run_ddl(sql: str) -> None:
+            """Execute one DDL statement and commit it; on failure roll
+            back and re-raise. The commit is per statement: on a
+            non-autocommit DB-API engine a LATER failure in the stage
+            rolls back the whole open transaction, which would silently
+            discard every earlier successful-but-uncommitted DDL. The
+            rollback matters as much: a failed statement poisons the
+            transaction (psycopg2 raises InFailedSqlTransaction on
+            EVERY later statement until rollback), so without it one
+            bad DDL would fail the C33 retry and the rest of the stage
+            on real PostgreSQL."""
+            nonlocal ddl_done
+            try:
+                pg_conn.cursor().execute(sql)
+                pg_conn.commit()
+            except Exception:
+                _rollback_quietly(pg_conn)
+                raise
+            ddl_done += 1
 
         import time as _time
 
@@ -1066,15 +1083,12 @@ class MigrationPipeline:
                         f"note [{stage}] {a.target}: {a.payload[:200]}"
                     )
 
-            ddls = [a for a in stage_actions if a.kind == "ddl"]
-            for a in ddls:
+            for a in (x for x in stage_actions if x.kind == "ddl"):
                 try:
                     # target-dialect seam (sinks.ddl.adapt_ddl): plan()
                     # emits PostgreSQL; an embedded ANSI target gets the
                     # few PG-isms rewritten, and statements with no
                     # analog there (GRANT family) are logged skips.
-                    from mysql2pg_spark.sinks.ddl import adapt_ddl
-
                     payload = adapt_ddl(a.payload, target_dialect)
                     if payload is None:
                         logger.info(
@@ -1082,39 +1096,8 @@ class MigrationPipeline:
                             f"{a.payload[:80]}"
                         )
                         continue
-                    cur = pg_conn.cursor()
-                    if use_savepoint:
-                        # savepoint mode: per-statement durability comes
-                        # from ROLLBACK TO SAVEPOINT on failure; the
-                        # stage commits once below (one round-trip per
-                        # stage instead of one per statement)
-                        cur.execute("SAVEPOINT mig_ddl")
-                        cur.execute(payload)
-                        cur.execute("RELEASE SAVEPOINT mig_ddl")
-                        ddl_done += 1
-                    else:
-                        cur.execute(payload)
-                        ddl_done += 1
-                        # commit per statement: on a non-autocommit
-                        # DB-API engine, a LATER failure in this stage
-                        # rolls back the whole open transaction —
-                        # without this, every earlier successful-but-
-                        # uncommitted DDL would be silently discarded
-                        # while ddl_done already counted it (and nothing
-                        # re-executes it)
-                        pg_conn.commit()
+                    run_ddl(payload)
                 except Exception as e:  # keep going, record (manager.go)
-                    # A failed statement poisons a non-autocommit DB-API
-                    # transaction (psycopg2 raises InFailedSqlTransaction
-                    # on EVERY later statement until rollback) — roll
-                    # back (to the statement's savepoint when batching)
-                    # before the C33 retry and before the keep-going
-                    # loop moves on, or one bad DDL would fail the whole
-                    # stage on real PostgreSQL.
-                    if use_savepoint:
-                        _rollback_to_savepoint_quietly(pg_conn)
-                    else:
-                        _rollback_quietly(pg_conn)
                     # C33: a strict engine rejects MySQL's loosely-typed
                     # mixed COALESCE; retry the view with every COALESCE
                     # arg cast to text (the reference's
@@ -1127,38 +1110,15 @@ class MigrationPipeline:
                         )
                     if retry is not None:
                         try:
-                            from mysql2pg_spark.sinks.ddl import adapt_ddl
-
-                            cur = pg_conn.cursor()
-                            if use_savepoint:
-                                cur.execute("SAVEPOINT mig_ddl")
-                                cur.execute(
-                                    adapt_ddl(retry, target_dialect)
-                                )
-                                cur.execute("RELEASE SAVEPOINT mig_ddl")
-                                ddl_done += 1
-                            else:
-                                cur.execute(
-                                    adapt_ddl(retry, target_dialect)
-                                )
-                                ddl_done += 1
-                                pg_conn.commit()
+                            run_ddl(adapt_ddl(retry, target_dialect))
                             logger.info(
                                 f"view {a.target}: mixed-type COALESCE "
                                 "unified to text on retry (C33)"
                             )
                             continue
                         except Exception as e2:
-                            if use_savepoint:
-                                _rollback_to_savepoint_quietly(pg_conn)
-                            else:
-                                _rollback_quietly(pg_conn)
                             e = e2
                     logger.table_error(stage, a.target, e)
-            if use_savepoint and ddls:
-                # one commit per stage: every released savepoint above
-                # becomes durable here
-                pg_conn.commit()
 
             reads = [a for a in stage_actions if a.kind == "read_plan"]
             if reads:
@@ -1171,29 +1131,11 @@ class MigrationPipeline:
                         f"sync {a.target}: start "
                         f"({a.payload.get('numPartitions', 1)} partitions)"
                     )
-                    df = source_reader(spark, a.payload)
-                    meta = meta_by_name.get(a.target)
-                    if meta is not None:
-                        df = self._value_fix_transform(meta)(df)
-                        # generated columns never reach the sink
-                        # (round 11): the target computes them, and PG
-                        # rejects INSERTs that name them. mysqldump
-                        # omits their values anyway (the reader yields
-                        # NULLs); tab/OUTFILE sources carry values but
-                        # the recomputation is definitionally identical.
-                        gen = [
-                            c.name for c in meta.columns
-                            if getattr(c, "generated_expr", None)
-                        ]
-                        if gen:
-                            df = df.drop(*[self._norm(g) for g in gen])
+                    df = self._sink_frame(
+                        meta_by_name[a.target], source_reader(spark, a.payload)
+                    )
                     # D3 source checksum rides the write action itself via
                     # df.observe() — the source is scanned exactly ONCE.
-                    from mysql2pg_spark.operators.validate import (
-                        get_observation,
-                        observe_checksum,
-                    )
-
                     df, obs, obs_cols = observe_checksum(
                         df, f"checksum_{a.target}"
                     )
@@ -1240,7 +1182,7 @@ class MigrationPipeline:
             # back to the per-table loop so keep-going error semantics
             # are preserved.
             observed_checks: list[tuple[Action, object]] = []
-            fallback_checks: list[Action] = []
+            fallback_checks: list[tuple[Action, object]] = []
             for a in (x for x in stage_actions if x.kind == "check"):
                 try:
                     dst = dest_reader(spark, a.target)
@@ -1250,90 +1192,64 @@ class MigrationPipeline:
                     ):
                         observed_checks.append((a, dst))
                     else:
-                        fallback_checks.append(a)
+                        fallback_checks.append((a, dst))
                 except Exception as e:
                     logger.table_error(stage, a.target, e)
             if observed_checks:
-                from pyspark.sql import functions as F
 
-                from mysql2pg_spark.operators.validate import table_checksum
-
-                def _check_one(a: Action, dst) -> None:
-                    src_row, obs_cols = src_checksums[a.target]
-                    dst_row = (
-                        table_checksum(dst.select(*obs_cols))
-                        .collect()[0]
-                        .asDict()
-                    )
-                    validation[a.target] = {
-                        "src": src_row,
-                        "dst": dst_row,
-                        "consistent": src_row == dst_row,
-                    }
+                def dst_checksum(a: Action, dst):
+                    cols = src_checksums[a.target][1]
+                    return table_checksum(dst.select(*cols))
 
                 try:
                     from functools import reduce
 
                     tagged = [
-                        table_checksum(
-                            dst.select(*src_checksums[a.target][1])
-                        ).withColumn("_table", F.lit(a.target))
+                        dst_checksum(a, dst).withColumn(
+                            "_table", F.lit(a.target)
+                        )
                         for a, dst in observed_checks
                     ]
                     got = {
                         r["_table"]: {
-                            k: r[k]
-                            for k in (
-                                "n_rows",
-                                "hash_sum",
-                                "min_digest",
-                                "max_digest",
-                            )
+                            k: v
+                            for k, v in r.asDict().items()
+                            if k != "_table"
                         }
                         for r in reduce(
                             lambda x, y: x.unionByName(y), tagged
                         ).collect()
                     }
                     for a, _dst in observed_checks:
-                        src_row, _cols = src_checksums[a.target]
-                        dst_row = got[a.target]
-                        validation[a.target] = {
-                            "src": src_row,
-                            "dst": dst_row,
-                            "consistent": src_row == dst_row,
-                        }
+                        validation[a.target] = verdict(
+                            src_checksums[a.target][0], got[a.target]
+                        )
                 except Exception:
                     # batched job failed (one bad table fails the whole
                     # union): re-run per table so every OTHER table
                     # still validates and only the bad one errors
                     for a, dst in observed_checks:
                         try:
-                            _check_one(a, dst)
+                            validation[a.target] = verdict(
+                                src_checksums[a.target][0],
+                                dst_checksum(a, dst).collect()[0].asDict(),
+                            )
                         except Exception as e:
                             logger.table_error(stage, a.target, e)
-            for a in fallback_checks:
+            for a, dst in fallback_checks:
                 try:
-                    dst = dest_reader(spark, a.target)
                     # Fallback (table skipped this run / fake sink): full
-                    # re-read. The destination holds VALUE-FIXED data (B7
-                    # zero dates, B8 points, boolean casts) plus any C90
-                    # generated columns — checksum the source through the
-                    # same transform and restrict both sides to the
-                    # shared column set, else a correct sync reports
+                    # re-read of the source through the same sink frame
+                    # the data stage writes, restricted to the shared
+                    # column set, else a correct sync reports
                     # consistent=false.
-                    src_table = read_targets.get(a.target, a.target)
-                    src = source_reader(spark, {"table": src_table})
-                    meta = meta_by_name.get(a.target)
-                    if meta is not None:
-                        src = self._value_fix_transform(meta)(src)
-                        gen = [
-                            self._norm(c.name) for c in meta.columns
-                            if getattr(c, "generated_expr", None)
-                        ]
-                        if gen:
-                            # the target computed these; the source
-                            # reader yields NULLs for them (round 11)
-                            src = src.drop(*gen)
+                    src = self._sink_frame(
+                        meta_by_name[a.target],
+                        source_reader(
+                            spark,
+                            {"table": read_targets.get(a.target, a.target)},
+                        ),
+                    )
                     shared = [c for c in src.columns if c in set(dst.columns)]
                     validation[a.target] = checksum_validation(
                         src.select(*shared), dst.select(*shared)

@@ -145,44 +145,3 @@ def make_copy_writer(cfg: CopySinkConfig, conn_factory=None):
     sink_writer.sink_kind = "copy"
     return sink_writer
 
-
-def insert_rows_partition(
-    rows: Iterator,
-    table: str,
-    columns: list[str],
-    conn_factory: Callable[[], object],
-) -> int:
-    """B3 parity: one parameterized ``INSERT … VALUES (%s…)`` per row
-    (reference ``InsertData``, postgres/connection.go:106-195 — its own
-    legacy path, unused by the main flow). Kept as the
-    least-common-denominator fallback when neither COPY nor the JDBC
-    batch writer is available; COPY is 2-5× faster — do not use this at
-    scale."""
-    conn = conn_factory()
-    col_list = ", ".join(columns)
-    ph = ", ".join(["%s"] * len(columns))
-    sql = f'INSERT INTO "{table}" ({col_list}) VALUES ({ph})'
-    written = 0
-    try:
-        cur = conn.cursor()
-        for row in rows:
-            cur.execute(sql, tuple(row))
-            written += 1
-        conn.commit()
-    finally:
-        close = getattr(conn, "close", None)
-        if close:
-            close()
-    return written
-
-
-def write_inserts(
-    df: DataFrame, table: str, conn_factory: Callable[[], object]
-) -> None:
-    """Row-at-a-time sink over foreachPartition (B3)."""
-    columns = list(df.columns)
-
-    def run(part: Iterator) -> None:
-        insert_rows_partition(part, table, columns, conn_factory)
-
-    df.foreachPartition(run)

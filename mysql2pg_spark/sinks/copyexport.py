@@ -25,11 +25,11 @@ COPY text format contract (PostgreSQL's default): ``\\t`` field
 separator, ``\\N`` for NULL, backslash-escaped ``\\ \\t \\n \\r``,
 booleans as ``t``/``f``, bytea as ``\\x<hex>`` (the file carries the
 backslash doubled so COPY's escape pass delivers the ``\\x…`` literal
-to bytea input). Value fixes ride the export exactly like the live
-data stage (zero dates → NULL, WKB → WKT, tinyint(1) → boolean);
-generated columns are EXCLUDED — the emitted DDL declares them
-``GENERATED ALWAYS AS … STORED`` and PostgreSQL rejects explicit
-values for them.
+to bytea input). Rows pass through the live data stage's own
+``MigrationPipeline._sink_frame`` (normalized column case, zero dates →
+NULL, WKB → WKT, tinyint(1) → boolean, generated columns EXCLUDED — the
+emitted DDL declares them ``GENERATED ALWAYS AS … STORED`` and
+PostgreSQL rejects explicit values for them).
 
 Reference parity: net-new surface (the reference's internal/db reads
 MySQL and writes a live PG; no artifact path exists).
@@ -117,8 +117,8 @@ def export_pg_dir(
     """Export ``pipeline``'s snapshot as the offline PG artifact.
 
     ``pipeline`` is a ``MigrationPipeline`` (its plan() supplies the
-    DDL in stage order and its value-fix transform keeps the data
-    contract identical to a live migration); ``source_loader(name) ->
+    DDL in stage order and its ``_sink_frame`` is the live migration's
+    data contract); ``source_loader(name) ->
     DataFrame`` supplies rows (the same loader shape as
     ``tables.parquet_endpoints``).
     Returns ``{"tables": [...], "load_script": path}``.
@@ -150,7 +150,6 @@ def export_pg_dir(
         ) + "\n")
 
     wanted = set(t.lower() for t in tables) if tables is not None else None
-    norm = pipeline._norm
     done: list[str] = []
     copy_lines: list[str] = []
     # the DATA loop honors the config's include/exclude selection
@@ -159,24 +158,14 @@ def export_pg_dir(
     for t in pipeline._selected_tables():
         if wanted is not None and t.name.lower() not in wanted:
             continue
-        name = norm(t.name)
-        df = source_loader(t.name)
-        # normalize the DataFrame's column case FIRST (review r13c):
-        # the DDL, the value-fix matcher, the generated-column
-        # exclusion and the \copy column list all speak normalized
-        # identifiers, while a dump/parquet source may carry raw case
-        df = df.toDF(*[norm(c) for c in df.columns])
-        df = pipeline._value_fix_transform(t)(df)
-        gen = {
-            norm(c.name)
-            for c in t.columns
-            if getattr(c, "generated_expr", None)
-        }
-        keep = [c for c in df.columns if c not in gen]
-        df = df.select(*keep)
+        name = pipeline._norm(t.name)
+        # the same sink frame a live migration writes (normalized
+        # column case, value fixes, generated columns dropped), so the
+        # \copy column list speaks the DDL's identifiers
+        df = pipeline._sink_frame(t, source_loader(t.name))
         data_dir = os.path.join(out_dir, f"{name}.copy")
         write_pg_copy(df, data_dir)
-        col_list = ", ".join(f'"{c}"' for c in keep)
+        col_list = ", ".join(f'"{c}"' for c in df.columns)
         for part in _list_copy_parts(df.sparkSession, data_dir):
             copy_lines.append(
                 f"\\copy \"{name}\" ({col_list}) from "

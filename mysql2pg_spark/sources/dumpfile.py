@@ -33,6 +33,24 @@ from pyspark.sql.types import StructType
 
 _log = logging.getLogger(__name__)
 
+
+def cast_field(c, field):
+    """A file reader's text (or binary) cell → ``field``'s type, aliased
+    to its name: the one typed cast every file reader ends with (dump
+    INSERTs, LOAD DATA, --tab). A MySQL zero date (``0000-00-00…``, the
+    B7 case) becomes NULL on a date/timestamp target instead of failing
+    the whole table under ANSI casts; any other malformed value still
+    raises."""
+    from pyspark.sql.types import DateType, TimestampNTZType, TimestampType
+
+    from mysql2pg_spark.sinks.jdbc_sink import ZERO_DATE
+
+    if isinstance(
+        field.dataType, (DateType, TimestampType, TimestampNTZType)
+    ):
+        c = F.when(~c.cast("string").startswith(ZERO_DATE), c)
+    return c.cast(field.dataType).alias(field.name)
+
 # mysqldump string-literal escapes (--default-character-set output).
 _ESCAPES = {
     "0": "\x00",
@@ -309,7 +327,7 @@ def _parse_blob_frame(matched: DataFrame, schema: StructType) -> DataFrame:
 
     parsed = matched.mapInPandas(parse, mid_schema)
     return parsed.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
+        *[cast_field(F.col(f.name), f) for f in schema.fields]
     )
 
 
@@ -349,7 +367,7 @@ def parse_blob_pairs_local(
                 )
     parsed = spark.createDataFrame(out, mid_schema)
     return parsed.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
+        *[cast_field(F.col(f.name), f) for f in schema.fields]
     )
 
 

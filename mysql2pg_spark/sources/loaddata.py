@@ -462,15 +462,16 @@ def read_load_data(
                 )
             return F.lit(None)
 
+        from mysql2pg_spark.sources.dumpfile import cast_field
+
         return df.select(
             *[
-                (
+                cast_field(
                     F.col(by_listed[f.name.lower()])
                     if f.name.lower() in listed
-                    else _omitted(f)
+                    else _omitted(f),
+                    f,
                 )
-                .cast(f.dataType)
-                .alias(f.name)
                 for f in schema.fields
             ]
         )

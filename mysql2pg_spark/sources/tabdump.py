@@ -420,16 +420,19 @@ def read_tab_dump(
             )
         )
     )
+    from mysql2pg_spark.sources.dumpfile import cast_field
+
     split = lines.select(guarded.alias("f"))
     return split.select(
         *[
-            _decode_field_col(
-                F.element_at(F.col("f"), j + 1),
-                enclosed_by=enclosed_by,
-                escaped_by=escaped_by,
+            cast_field(
+                _decode_field_col(
+                    F.element_at(F.col("f"), j + 1),
+                    enclosed_by=enclosed_by,
+                    escaped_by=escaped_by,
+                ),
+                fld,
             )
-            .cast(fld.dataType)
-            .alias(fld.name)
             for j, fld in enumerate(schema.fields)
         ]
     )

@@ -437,20 +437,10 @@ def test_source_reader_end_to_end_migration(spark, tmp_path):
     assert result["validation"]["t"]["consistent"]
 
 
-def test_cli_duckdb_mode_with_load_data_dump(
-    spark, tmp_path, capsys, monkeypatch
-):
-    """The top-level CLI --mode duckdb path over a dump whose bulk is a
-    LOAD DATA statement: schema from the dump, data through the parsed
-    statement's file, cross-engine validation green in a real engine."""
-    import json
-
-    import duckdb
+def _load_data_dump(spark, tmp_path):
+    """(config path, dump path) of a dump whose bulk is a LOAD DATA
+    statement (50 rows) plus one INSERT (id 99)."""
     import yaml
-
-    from mysql2pg_spark.__main__ import main
-
-    monkeypatch.chdir(tmp_path)  # the run log lands under ./logs
 
     src = spark.createDataFrame(
         [(i, f"u{i}", float(i) * 1.5) for i in range(1, 51)],
@@ -480,6 +470,24 @@ def test_cli_duckdb_mode_with_load_data_dump(
             "limits": {"concurrency": 1, "max_rows_per_batch": 100},
         },
     }))
+    return cfgp, dump
+
+
+def test_cli_duckdb_mode_with_load_data_dump(
+    spark, tmp_path, capsys, monkeypatch
+):
+    """The top-level CLI --mode duckdb path over a dump whose bulk is a
+    LOAD DATA statement: schema from the dump, data through the parsed
+    statement's file, cross-engine validation green in a real engine."""
+    import json
+
+    import duckdb
+
+    from mysql2pg_spark.__main__ import main
+
+    monkeypatch.chdir(tmp_path)  # the run log lands under ./logs
+
+    cfgp, dump = _load_data_dump(spark, tmp_path)
     db = tmp_path / "target.duckdb"
     rc = main([
         "-c", str(cfgp),
@@ -499,6 +507,32 @@ def test_cli_duckdb_mode_with_load_data_dump(
         "SELECT name FROM users WHERE id = 99"
     ).fetchone()[0] == "manual"
     con.close()
+
+
+def test_cli_pgexport_mode_with_load_data_dump(spark, tmp_path, capsys):
+    """--mode pgexport resolves the dump through the same source reader
+    as duckdb mode, so the LOAD DATA bulk reaches the COPY artifact: all
+    51 rows, not only the one INSERT."""
+    import json
+
+    from mysql2pg_spark.__main__ import main
+    from tests.test_copyexport import _read_copy_dir
+
+    cfgp, dump = _load_data_dump(spark, tmp_path)
+    out = tmp_path / "pgout"
+    rc = main([
+        "-c", str(cfgp),
+        "--mode", "pgexport",
+        "--dump-file", str(dump),
+        "--pg-out", str(out),
+    ])
+    assert rc == 0
+    res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert res["tables"] == ["users"]
+    rows = _read_copy_dir(str(out / "users.copy"))
+    assert len(rows) == 51
+    names = {int(r[0]): r[1] for r in rows}
+    assert names[7] == "u7" and names[99] == "manual"
 
 
 # --------------------------------------------------------------------------

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from mysql2pg_spark.config import load_config
 from mysql2pg_spark.orchestrator import (
     Action,
@@ -651,6 +653,133 @@ def test_cli_exit_status_reports_a_failed_table(
     assert (tmp_path / "logs" / "errors.log").read_text().count("bad") >= 1
 
 
+def _write_cli_config(tmp_path):
+    import yaml
+
+    path = tmp_path / "config.yml"
+    path.write_text(yaml.safe_dump({
+        "mysql": {"host": "h", "database": "d"},
+        "postgresql": {"host": "p", "database": "d"},
+        "conversion": {"options": {}, "limits": {"concurrency": 2}},
+    }))
+    return str(path)
+
+
+def test_cli_local_and_pgexport_write_the_same_sink_frame(
+    tmp_path, spark, capsys, monkeypatch
+):
+    """A mixed-case dump table (`Orders`, `Id`, `Flag tinyint(1)`) lands
+    the same through --mode local and --mode pgexport: normalized
+    column names, and `flag` value-fixed to a boolean on both paths."""
+    import json
+
+    from mysql2pg_spark.__main__ import main
+    from tests.test_copyexport import _read_copy_dir
+
+    monkeypatch.chdir(tmp_path)
+    cfg = _write_cli_config(tmp_path)
+    dump = tmp_path / "dump.sql"
+    dump.write_text(
+        "CREATE TABLE `Orders` (\n"
+        "  `Id` int NOT NULL,\n"
+        "  `Flag` tinyint(1) DEFAULT NULL,\n"
+        "  PRIMARY KEY (`Id`)\n"
+        ");\n"
+        "INSERT INTO `Orders` VALUES (1,1),(2,0);\n"
+    )
+    rc = main([
+        "-c", cfg, "--mode", "local",
+        "--dump-file", str(dump), "--sink-dir", str(tmp_path / "sink"),
+    ])
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rc == 0, out
+    assert out["validation"] == {"orders": True}
+    df = spark.read.parquet(str(tmp_path / "sink" / "orders"))
+    assert df.columns == ["id", "flag"]
+    assert dict(df.dtypes)["flag"] == "boolean"
+    assert sorted(tuple(r) for r in df.collect()) == [(1, True), (2, False)]
+
+    rc = main([
+        "-c", cfg, "--mode", "pgexport",
+        "--dump-file", str(dump), "--pg-out", str(tmp_path / "pg"),
+    ])
+    assert rc == 0
+    assert sorted(_read_copy_dir(str(tmp_path / "pg" / "orders.copy"))) == [
+        ["1", "t"], ["2", "f"],
+    ]
+    load = (tmp_path / "pg" / "load.sql").read_text()
+    assert '\\copy "orders" ("id", "flag") from ' in load
+
+
+@pytest.mark.parametrize("source", ["--dump-file", "--tab-dir"])
+def test_cli_file_sources_load_zero_dates_as_null(
+    source, tmp_path, spark, capsys, monkeypatch
+):
+    """MySQL zero dates (B7) in a dump or a --tab directory load as NULL
+    instead of failing the table's typed cast; the run exits 0 with both
+    rows synced and validation consistent."""
+    import json
+
+    from mysql2pg_spark.__main__ import main
+
+    monkeypatch.chdir(tmp_path)
+    cfg = _write_cli_config(tmp_path)
+    create = (
+        "CREATE TABLE `ev` (\n"
+        "  `id` int NOT NULL,\n"
+        "  `at` datetime DEFAULT NULL,\n"
+        "  `on_day` date DEFAULT NULL,\n"
+        "  PRIMARY KEY (`id`)\n"
+        ");\n"
+    )
+    if source == "--dump-file":
+        src = tmp_path / "dump.sql"
+        src.write_text(
+            create + "INSERT INTO `ev` VALUES "
+            "(1,'2024-01-02 03:04:05','2024-01-02'),"
+            "(2,'0000-00-00 00:00:00','0000-00-00');\n"
+        )
+    else:
+        src = tmp_path / "tab"
+        src.mkdir()
+        (src / "ev.sql").write_text(create)
+        (src / "ev.txt").write_text(
+            "1\t2024-01-02 03:04:05\t2024-01-02\n"
+            "2\t0000-00-00 00:00:00\t0000-00-00\n"
+        )
+    rc = main([
+        "-c", cfg, "--mode", "local",
+        source, str(src), "--sink-dir", str(tmp_path / "sink"),
+    ])
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rc == 0, out
+    assert out["synced"] == {"ev": 2}
+    assert out["validation"] == {"ev": True}
+    rows = {
+        r["id"]: r
+        for r in spark.read.parquet(str(tmp_path / "sink" / "ev")).collect()
+    }
+    assert rows[2]["at"] is None and rows[2]["on_day"] is None
+    assert str(rows[1]["at"]) == "2024-01-02 03:04:05"
+    assert str(rows[1]["on_day"]) == "2024-01-02"
+
+
+def test_file_reader_cast_still_rejects_malformed_dates(spark):
+    """Only the zero date becomes NULL: any other malformed temporal
+    value still fails the typed cast (no silent try_cast)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructField, TimestampType
+
+    from mysql2pg_spark.sources.dumpfile import cast_field
+
+    field = StructField("at", TimestampType())
+    df = spark.createDataFrame([("0000-00-00 00:00:00",)], "at string")
+    assert df.select(cast_field(F.col("at"), field)).collect()[0][0] is None
+    bad = spark.createDataFrame([("not a date",)], "at string")
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        bad.select(cast_field(F.col("at"), field)).collect()
+
+
 def test_cli_diff_mode(tmp_path, capsys):
     """--mode diff prints the executable catch-up plan for two snapshot
     files (statement-terminated; destructive skips as comments)."""
@@ -1156,41 +1285,12 @@ def test_plan_surfaces_disabled_triggers(tmp_path):
     assert len(trig) == 1 and trig[0].kind == "ddl"
 
 
-class _SavepointConn(_TxnConn):
-    """Savepoint-capable transaction model (PostgreSQL semantics):
-    SAVEPOINT marks the pending list, ROLLBACK TO discards statements
-    after the mark (and un-poisons), RELEASE drops the mark — the seam
-    that proves ddl_commit="savepoint" keeps per-statement durability
-    while collapsing N commits to one per stage."""
-
-    def __init__(self, fail_if=None):
-        super().__init__(fail_if)
-        self.marks: dict[str, int] = {}
-
-    def execute(self, sql):
-        s = sql.strip()
-        up = s.upper()
-        if up.startswith("SAVEPOINT "):
-            self.marks[s.split()[1]] = len(self.pending)
-            return
-        if up.startswith("ROLLBACK TO SAVEPOINT"):
-            self.poisoned = False
-            self.pending = self.pending[: self.marks.get(s.split()[-1], 0)]
-            return
-        if up.startswith("RELEASE SAVEPOINT"):
-            self.marks.pop(s.split()[-1], None)
-            return
-        super().execute(sql)
-
-
-def test_savepoint_commit_mode_preserves_earlier_ddl(tmp_path, spark):
-    """Round 9 (VERDICT ask #4): ddl_commit="savepoint" — each DDL in a
-    SAVEPOINT/RELEASE pair, ONE commit per stage. A failing statement
-    rolls back to ITS savepoint only: earlier statements in the stage
-    survive the stage commit (same keep-going durability as
-    per-statement commits) while commit round-trips collapse from N to
-    1 — the evaluated alternative for a real network PG sink where
-    commit RTTs dominate wide-schema migrations."""
+def test_statement_commit_preserves_ddl_around_a_failure(tmp_path, spark):
+    """The one DDL protocol: every statement commits on success and
+    rolls back on failure. A failing statement in the middle of a stage
+    loses only itself — the statements before AND after it are durable,
+    nothing is left pending, and the executed count matches what was
+    committed."""
     cfg = _cfg(tmp_path)
     snap = CatalogSnapshot(
         tables=[
@@ -1222,53 +1322,36 @@ def test_savepoint_commit_mode_preserves_earlier_ddl(tmp_path, spark):
 
     from mysql2pg_spark.runlog import RunLogger
 
-    def run(mode: str):
-        conn = _SavepointConn(fail_if="bad")
-        result = MigrationPipeline(cfg, snap).execute(
-            spark,
-            conn,
-            source_reader=lambda sp, plan: src,
-            sink_writer=lambda df, table: written.setdefault(
-                f"{mode}:{table}", df.collect()
-            ),
-            dest_reader=lambda sp, table: sp.createDataFrame(
-                written[f"{mode}:{table}"], "id long"
-            ),
-            logger=RunLogger(str(tmp_path / f"logs_{mode}")),
-            ddl_commit=mode,
-        )
-        return conn, result
-
-    sp_conn, sp_result = run("savepoint")
-    st_conn, st_result = run("statement")
-
-    for conn, result in ((sp_conn, sp_result), (st_conn, st_result)):
-        # identical durability in both modes: statements around the
-        # failure survive, the failed one does not
-        assert any(
-            "good" in s and "CREATE TABLE" in s for s in conn.committed
-        ), conn.committed
-        assert any(
-            "zafter" in s and "CREATE TABLE" in s for s in conn.committed
-        )
-        assert not any(
-            "bad" in s and "CREATE TABLE" in s for s in conn.committed
-        )
-        assert conn.pending == []
-        assert result["ddl"] == len(
-            [s for s in conn.committed if not s.startswith("SELECT setval")]
-            + [s for s in conn.committed if s.startswith("SELECT setval")]
-        )
-        # round 9: the per-stage wall breakdown rides the result
-        assert "tableddl" in result["stage_sec"]
-    # ...but savepoint mode committed once per DDL-bearing stage instead
-    # of once per statement
-    assert sp_conn.commits < st_conn.commits, (
-        sp_conn.commits, st_conn.commits,
+    conn = _TxnConn(fail_if="bad")
+    result = MigrationPipeline(cfg, snap).execute(
+        spark,
+        conn,
+        source_reader=lambda sp, plan: src,
+        sink_writer=lambda df, table: written.setdefault(
+            table, df.collect()
+        ),
+        dest_reader=lambda sp, table: sp.createDataFrame(
+            written[table], "id long"
+        ),
+        logger=RunLogger(str(tmp_path / "logs")),
     )
-    # the failure never forced a FULL rollback in savepoint mode (that
-    # would discard the stage's earlier statements)
-    assert sp_conn.rollbacks == 0
+    # statements around the failure survive, the failed one does not
+    assert any(
+        "good" in s and "CREATE TABLE" in s for s in conn.committed
+    ), conn.committed
+    assert any(
+        "zafter" in s and "CREATE TABLE" in s for s in conn.committed
+    )
+    assert not any(
+        "bad" in s and "CREATE TABLE" in s for s in conn.committed
+    )
+    assert conn.pending == []
+    assert result["ddl"] == len(conn.committed)
+    # one commit per executed statement, one rollback for the failure
+    assert conn.commits == result["ddl"]
+    assert conn.rollbacks == 1
+    # the per-stage wall breakdown rides the result
+    assert "tableddl" in result["stage_sec"]
 
 
 def test_file_backed_execute_emits_stage_seconds(tmp_path, spark):
@@ -1307,28 +1390,3 @@ def test_file_backed_execute_emits_stage_seconds(tmp_path, spark):
     assert set(result["stage_sec"]) <= set(STAGE_ORDER)
     assert all(v >= 0 for v in result["stage_sec"].values())
     assert result["validation"]["region"]["consistent"]
-
-
-def test_ddl_commit_config_plumbing(tmp_path):
-    """conversion.options.ddl_commit reaches execute(); invalid values
-    fail fast instead of silently running in statement mode."""
-    import pytest
-    import yaml
-
-    from mysql2pg_spark.config import load_config
-
-    p = tmp_path / "c.yml"
-    p.write_text(yaml.safe_dump({
-        "mysql": {"host": "h", "database": "d"},
-        "postgresql": {"host": "p", "database": "d"},
-        "conversion": {"options": {"ddl_commit": "savepoint"},
-                       "limits": {}},
-    }))
-    cfg = load_config(str(p))
-    assert cfg.options.ddl_commit == "savepoint"
-
-    bad = load_config(str(p))
-    bad.options.ddl_commit = "autocommit"
-    pipe = MigrationPipeline(bad, CatalogSnapshot(tables=[]))
-    with pytest.raises(ValueError, match="ddl_commit"):
-        pipe.execute(None, _FakeConn())

@@ -140,6 +140,36 @@ def test_stateful_partition_formula_is_scale_neutral(spark):
         prev = n
 
 
+def test_stateful_partitions_leave_a_non_numeric_setting_alone():
+    """A non-numeric spark.sql.shuffle.partitions (e.g. "auto") has no
+    count to cap: the formula returns it unchanged and the per-query pin
+    leaves the session value as it was, instead of raising."""
+    from mysql2pg_spark.streaming.ingest import (
+        _state_partitions,
+        stateful_shuffle_partitions,
+    )
+
+    class Conf:
+        value = "auto"
+
+        def get(self, key):
+            assert key == "spark.sql.shuffle.partitions"
+            return self.value
+
+        def set(self, key, value):
+            self.value = value
+
+    class Session:
+        conf = Conf()
+
+    sess = Session()
+    n = stateful_shuffle_partitions(sess, 10)
+    assert n == "auto"
+    with _state_partitions(sess, n):
+        assert sess.conf.value == "auto"
+    assert sess.conf.value == "auto"
+
+
 def test_d13_prefilter_keeps_rows_identical(spark):
     """The length prefilter (round 17, guide §2.3) only removes pairs
     the bounded levenshtein would emit -1 for: edit_dist >= |la-lb|,

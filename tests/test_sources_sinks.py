@@ -262,37 +262,6 @@ def test_estimate_row_bytes_and_byte_budgeted_partitions():
     assert plan["numPartitions"] == 10
 
 
-def test_row_at_a_time_insert_fallback():
-    """B3: one parameterized INSERT per row through the DB-API seam
-    (reference InsertData parity; legacy/fallback path only)."""
-    from mysql2pg_spark.sinks.copy_sink import insert_rows_partition
-
-    class Conn:
-        def __init__(self):
-            self.sql = []
-            self.commits = 0
-
-        def cursor(self):
-            return self
-
-        def execute(self, sql, params):
-            self.sql.append((sql, params))
-
-        def commit(self):
-            self.commits += 1
-
-        def close(self):
-            pass
-
-    conn = Conn()
-    n = insert_rows_partition(
-        iter([(1, "a"), (2, "b")]), "t", ["id", "val"], lambda: conn
-    )
-    assert n == 2 and conn.commits == 1
-    assert conn.sql[0] == ('INSERT INTO "t" (id, val) VALUES (%s, %s)', (1, "a"))
-    assert conn.sql[1][1] == (2, "b")
-
-
 def test_write_dbapi_foreachpartition_executor_side(spark, tmp_path):
     """The dbapi sink's executors transport (the client-server shape):
     each partition opens its own connection and pumps B4-capped
