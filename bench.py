@@ -313,10 +313,11 @@ def _teardown_prev_worktree(path: str | None) -> None:
 
 
 def _bench_dump_parse(spark, sf_dir: str, reps: int, tmpdir: str) -> dict:
-    """Time the mysqldump DataSource over a dump synthesized from the
-    sf's orders table (extended-insert, 1000 tuples/line). Generation is
-    untimed; the timed span is the distributed parse + full
-    materialization. Median-of-reps with spread (round-7 ask #4)."""
+    """Time ``read_dump_inserts``, the line-by-line reader a dump over
+    ``SMALL_DUMP_BYTES`` takes, over a dump synthesized from the sf's
+    orders table (extended-insert, 1000 tuples/line). Generation is
+    untimed; the timed span is the DELIMITER scan, the distributed parse
+    and full materialization. Median-of-reps with spread."""
     import pyarrow.parquet as pq
 
     tb = pq.read_table(
@@ -334,22 +335,17 @@ def _bench_dump_parse(spark, sf_dir: str, reps: int, tmpdir: str) -> dict:
             )
             fh.write(f"INSERT INTO `orders` VALUES {vals};\n")
 
-    from mysql2pg_spark.sources.dumpfile import MysqlDumpDataSource
+    from mysql2pg_spark.sources.dumpfile import read_dump_inserts
 
-    spark.dataSource.register(MysqlDumpDataSource)
     times: list[float] = []
     for _ in range(reps):
         t = time.perf_counter()
-        (
-            spark.read.format("mysqldump")
-            .schema("o_orderkey bigint, o_custkey bigint, o_totalprice double")
-            .option("table", "orders")
-            .option("split_bytes", 4 * 1024 * 1024)
-            .load(path)
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
+        read_dump_inserts(
+            spark,
+            path,
+            "orders",
+            "o_orderkey bigint, o_custkey bigint, o_totalprice double",
+        ).write.format("noop").mode("overwrite").save()
         times.append(time.perf_counter() - t)
     out = {"dump_parse_orders": round(sorted(times)[len(times) // 2], 3)}
     if reps > 1:

@@ -13,32 +13,26 @@ from mysql2pg_spark.plans.registry import (
     query,
 )
 
-# Import for registration side effects — each module registers its queries.
-from mysql2pg_spark.plans import relational  # noqa: E402,F401
-
-_ALL_PLAN_MODULES = ["relational"]
-
-for _mod in (
-    "functions_demo",
-    "dedup",
-    "similarity",
-    "textops",
-    "timeseries",
-    "multimodal",
-    "stored_demo",
-    "scale_demo",
-    "merge_demo",
-    "valuefix_demo",
-    "validation",
-    "schema_demo",
-    "dialect_demo",
-    "merged",  # must import last: composes the other modules' registrations
-):
-    try:
-        __import__(f"mysql2pg_spark.plans.{_mod}")
-        _ALL_PLAN_MODULES.append(_mod)
-    except ImportError:
-        pass  # module not built yet (incremental rounds)
+# Imported for their registration side effects: each module registers its
+# queries. A module that fails to import fails the registry import.
+from mysql2pg_spark.plans import (  # noqa: E402,F401
+    relational,
+    functions_demo,
+    dedup,
+    similarity,
+    textops,
+    timeseries,
+    multimodal,
+    stored_demo,
+    scale_demo,
+    merge_demo,
+    valuefix_demo,
+    validation,
+    schema_demo,
+    dialect_demo,
+)
+# merged composes the other modules' registrations, so it imports last
+from mysql2pg_spark.plans import merged  # noqa: E402,F401
 
 
 __all__ = [

@@ -3,22 +3,30 @@ dumps into DataFrames with no live MySQL server.
 
 The reference tool only reads from a running MySQL
 (internal/db/mysql/connection.go); a dump file is the other way MySQL
-data arrives, and the natural one for an offline migration. Spark-first
-shape:
+data arrives, and the natural one for an offline migration.
 
-- ``spark.read.text`` splits the dump by LINE across tasks (mysqldump's
-  extended-insert format emits one INSERT statement per line), so a
-  multi-TB dump parallelizes for free — no driver-side reading.
-- The INSERT filter and table-name match are JVM-side (`startswith` /
-  `regexp_extract`), so partition pruning of foreign tables costs a
-  scan, not a parse.
-- Tuple splitting and value decoding need a real tokenizer (string
-  literals may contain ``),(``, escaped quotes, NULLs) — exactly the
-  "built-ins genuinely can't express it" case, done as an Arrow-batched
-  ``mapInPandas``. One line usually carries thousands of tuples, so the
-  per-line Python cost amortizes across rows.
-- Typed output: parsed string cells are cast through the user schema
-  JVM-side (one `select`), keeping the Python layer schema-free.
+One rule decides which text of a dump is a row of table T and how it
+becomes a typed row: ``_INSERT_RE`` locates the table, column list and
+VALUES tuples, ``split_tuples`` tokenizes the tuples, ``_typed_rows``
+builds schema-ordered cells, and ``cast_field`` types them (a MySQL
+zero date becomes NULL). Lines of DELIMITER-switched routine/trigger
+bodies are never rows. ``load_data_source_reader`` applies the rule on
+one of two paths, chosen by size:
+
+- a plain local dump of at most ``SMALL_DUMP_BYTES`` is split into
+  statements in one driver-side pass (``small_dump_insert_pairs``), so
+  an INSERT may span lines;
+- a bigger dump, a glob or a remote URI is read line by line
+  (``read_dump_inserts``). mysqldump writes each extended INSERT as one
+  line, so ``spark.read.text`` splits a multi-TB dump across tasks
+  (a ``.gz`` stays one split), the table match runs JVM-side, and only
+  the table's lines reach the tokenizer, an Arrow-batched
+  ``mapInPandas`` (string literals may hold ``),(``, escaped quotes and
+  NULLs, which built-ins can't split).
+
+An INSERT/REPLACE into T that is not a VALUES list (INSERT … SELECT, or
+an INSERT spread over several lines on the line path) fails T by name
+on either path; its rows are never dropped silently.
 """
 
 from __future__ import annotations
@@ -218,24 +226,68 @@ def _coerce_cell(v, want_bytes: bool):
     return v
 
 
-#: the three row-verb spellings mysqldump emits: plain (default),
-#: --insert-ignore, --replace
-_VERBS = ("insert into", "insert ignore into", "replace into")
-
-#: optional --complete-insert column list between table name and VALUES
-_COLLIST_RE = (
-    r"(?i)^\s*(?:INSERT\s+(?:IGNORE\s+)?|REPLACE\s+)INTO"
-    r"\s+`?\w+`?\s*\(([^)]*)\)\s*VALUES"
+#: One row statement of a dump, matched against a whole statement (the
+#: driver pass) or against one line (the line path, where it also runs
+#: JVM-side in ``regexp_extract``, so it stays Java-regex compatible).
+#: Group 1 is the table, group 2 the optional ``--complete-insert``
+#: column list, group 3 the VALUES tuples. The VALUES tail is optional:
+#: a statement that names a table but is not a VALUES list (INSERT …
+#: SELECT, or the first line of an INSERT spread over several lines)
+#: still yields its table, without group 3, and ``_typed_rows`` refuses
+#: it.
+_INSERT_RE = _tokre.compile(
+    r"(?is)^\s*(?:INSERT\s+(?:IGNORE\s+)?|REPLACE\s+)INTO\s+`?(\w+)`?"
+    r"(?:\s*(?:\(([^)]*)\))?\s*VALUES\s*(\(.*\))\s*;?\s*$)?"
 )
 
+#: A plain local dump of at most this many bytes is read by one
+#: driver-side statement pass (``small_dump_insert_pairs``); a bigger
+#: one, a glob or a remote URI is read line by line
+#: (``read_dump_inserts``).
+SMALL_DUMP_BYTES = 16 << 20
 
-def _line_prefixes(table: str) -> list[str]:
-    """Lowercase line prefixes that start a row statement for ``table``
-    under any verb/quoting spelling."""
-    t = table.lower()
-    return [
-        p for verb in _VERBS for p in (f"{verb} `{t}`", f"{verb} {t} ", f"{verb} {t}(")
-    ]
+
+def _typed_rows(matches, schema: StructType) -> Iterator[tuple]:
+    """``_INSERT_RE`` groups ``(table, column list, VALUES tuples)`` →
+    one cell tuple per row in ``schema`` order: bytes for binary
+    columns, text for the rest, for ``_typed_frame`` to cast. The one
+    row builder of both dump paths. A statement without VALUES tuples
+    fails its table by name: its rows would otherwise vanish."""
+    from pyspark.sql.types import BinaryType
+
+    cols = [f.name for f in schema.fields]
+    is_binary = [isinstance(f.dataType, BinaryType) for f in schema.fields]
+    for table, collist, blob in matches:
+        if not blob:
+            raise ValueError(
+                f"dump table `{table}`: an INSERT/REPLACE into it is not "
+                "a VALUES list (INSERT … SELECT or … SET, or an INSERT "
+                "spread over several lines of a dump read line by line); "
+                "refusing to drop its rows"
+            )
+        for r in _align_rows(split_tuples(blob), collist or "", cols):
+            yield tuple(
+                _coerce_cell(r[j] if j < len(r) else None, b)
+                for j, b in enumerate(is_binary)
+            )
+
+
+def _cell_schema(schema: StructType) -> str:
+    """DDL of ``_typed_rows``' untyped cells."""
+    from pyspark.sql.types import BinaryType
+
+    return ", ".join(
+        f"`{f.name}` "
+        f"{'binary' if isinstance(f.dataType, BinaryType) else 'string'}"
+        for f in schema.fields
+    )
+
+
+def _typed_frame(cells: DataFrame, schema: StructType) -> DataFrame:
+    """Untyped cells → ``schema``, one JVM-side cast per column."""
+    return cells.select(
+        *[cast_field(F.col(f.name), f) for f in schema.fields]
+    )
 
 
 def read_dump_inserts(
@@ -245,129 +297,57 @@ def read_dump_inserts(
     schema: StructType | str,
 ) -> DataFrame:
     """DataFrame of ``table``'s rows from a mysqldump file (or directory
-    of files). ``schema`` gives column names/types; parsed cells are cast
-    through it JVM-side. Binary columns take ``0x...``/``_binary``
-    literals byte-exact; ``--complete-insert`` column lists reorder
-    against the schema."""
+    of files), read line by line: the path ``load_data_source_reader``
+    takes for dumps over ``SMALL_DUMP_BYTES``. mysqldump writes each
+    extended INSERT as one line, so ``spark.read.text`` splits the dump
+    across tasks, the table match runs JVM-side, and only the table's
+    lines reach the Python tokenizer. ``schema`` gives column
+    names/types. Binary columns take ``0x...``/``_binary`` literals
+    byte-exact; ``--complete-insert`` column lists reorder against the
+    schema."""
+    return _line_inserts(_dump_lines(spark, path), table, schema)
+
+
+def _line_inserts(
+    lines: DataFrame, table: str, schema: StructType | str
+) -> DataFrame:
+    """``table``'s rows from ``_dump_lines`` output, outside
+    DELIMITER-switched bodies."""
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-
-    lines = spark.read.text(path)  # .gz dumps decompress via JVM codec
-    # An INSERT line INSIDE a DELIMITER-switched routine/trigger body is
-    # body text, not bulk data (the audit-trigger repro: its body
-    # `INSERT INTO t VALUES (NEW.id, …)` would otherwise parse as a row
-    # whose cells are the literal strings 'NEW.id'). Same section
-    # awareness as dump_schema_text, pushed into the distributed filter;
-    # the directive rows are collected once per file and cached.
-    delim_rows = _delim_directive_rows(spark, path)
-    if delim_rows:
-        mid = F.monotonically_increasing_id()
-        protected = F.lit(False)
-        for start, end in _protected_intervals(delim_rows):
-            c = mid >= F.lit(start)
-            if end != float("inf"):
-                c = c & (mid < F.lit(end))
-            protected = protected | c
-        lines = lines.withColumn("_prot", protected).filter(
-            ~F.col("_prot")
-        ).drop("_prot")
-    # JVM-side pre-filter: only this table's INSERT/REPLACE lines reach
-    # Python.
-    prefix = F.lower(F.ltrim(F.col("value")))
-    cond = None
-    for p in _line_prefixes(table):
-        c = prefix.startswith(p)
-        cond = c if cond is None else (cond | c)
-    matched = lines.filter(cond).select(
-        F.regexp_extract(F.col("value"), _COLLIST_RE, 1).alias("collist"),
-        F.regexp_extract(
-            F.col("value"), r"(?i)VALUES\s*(\(.*\));?\s*$", 1
-        ).alias("blob"),
-    )
-
-    return _parse_blob_frame(matched, schema)
-
-
-def _parse_blob_frame(matched: DataFrame, schema: StructType) -> DataFrame:
-    """(collist, blob) rows → typed DataFrame: distributed tokenize via
-    mapInPandas, then one JVM-side cast through the declared schema.
-    Shared by the line-oriented dump readers and the statement-oriented
-    .sql reader."""
-    from pyspark.sql.types import BinaryType
-
     cols = [f.name for f in schema.fields]
-    is_binary = [isinstance(f.dataType, BinaryType) for f in schema.fields]
-    mid_schema = ", ".join(
-        f"`{c}` {'binary' if b else 'string'}"
-        for c, b in zip(cols, is_binary)
-    )
+    named = F.regexp_extract("value", _INSERT_RE.pattern, 1)
+    matched = lines.filter(
+        ~F.col("body") & (F.lower(named) == table.lower())
+    ).select("value")
 
     def parse(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
 
         for pdf in it:
-            out: list[list] = []
-            for collist, blob in zip(pdf["collist"], pdf["blob"]):
-                if blob:
-                    out.extend(_align_rows(split_tuples(blob), collist, cols))
-            yield pd.DataFrame(
-                {
-                    c: pd.Series(
-                        [
-                            _coerce_cell(
-                                r[j] if j < len(r) else None, is_binary[j]
-                            )
-                            for r in out
-                        ],
-                        dtype="object",
-                    )
-                    for j, c in enumerate(cols)
-                }
-            )
+            groups = (_INSERT_RE.match(v).groups() for v in pdf["value"])
+            rows = list(_typed_rows(groups, schema))
+            yield pd.DataFrame(rows, columns=cols, dtype="object")
 
-    parsed = matched.mapInPandas(parse, mid_schema)
-    return parsed.select(
-        *[cast_field(F.col(f.name), f) for f in schema.fields]
-    )
+    cells = matched.mapInPandas(parse, _cell_schema(schema))
+    return _typed_frame(cells, schema)
 
 
 def parse_blob_pairs_local(
-    spark, pairs: list[tuple[str, str]], schema: StructType
+    spark, matches: list[tuple], schema: StructType
 ) -> DataFrame:
-    """(collist, blob) pairs → typed DataFrame, tokenized ON THE DRIVER
-    (round 16, guide §4): for the small-dump path the pairs are already
-    driver-local and kilobyte-sized, so routing them back out through a
-    ``createDataFrame`` + ``mapInPandas`` round trip paid a Python-worker
-    launch per table (~1 s of fixed cost per 2-row corpus table,
-    measured 3-4 s/table under the 4-way data-stage pool). Same
-    tokenizer (``split_tuples``/``_align_rows``/``_coerce_cell``) and
-    the same final JVM cast through the declared schema, so cell
-    semantics are identical; the result is a local relation whose
-    downstream value-fix/observe/collect never touches a Python worker.
-    Big or remote dumps keep the distributed ``_parse_blob_frame``."""
-    from pyspark.sql.types import BinaryType
-
-    cols = [f.name for f in schema.fields]
-    is_binary = [isinstance(f.dataType, BinaryType) for f in schema.fields]
-    mid_schema = ", ".join(
-        f"`{c}` {'binary' if b else 'string'}"
-        for c, b in zip(cols, is_binary)
-    )
-    out: list[tuple] = []
-    for collist, blob in pairs:
-        if blob:
-            for r in _align_rows(split_tuples(blob), collist, cols):
-                out.append(
-                    tuple(
-                        _coerce_cell(
-                            r[j] if j < len(r) else None, is_binary[j]
-                        )
-                        for j in range(len(cols))
-                    )
-                )
-    parsed = spark.createDataFrame(out, mid_schema)
-    return parsed.select(
-        *[cast_field(F.col(f.name), f) for f in schema.fields]
+    """``_INSERT_RE`` groups → typed DataFrame, built ON THE DRIVER: on
+    the small-dump path the groups are already driver-local kilobytes,
+    and a ``createDataFrame`` → ``mapInPandas`` round trip paid a
+    Python-worker launch per table (~1 s per 2-row table). The result
+    is a local relation whose downstream value-fix/observe/collect
+    never touches a Python worker. Same row builder and cast as the
+    line path."""
+    return _typed_frame(
+        spark.createDataFrame(
+            list(_typed_rows(matches, schema)), _cell_schema(schema)
+        ),
+        schema,
     )
 
 
@@ -439,57 +419,22 @@ def iter_sql_statements(text: str) -> Iterator[str]:
         yield tail
 
 
-_STMT_INSERT_RE = _tokre.compile(
-    r"(?is)^\s*(?:INSERT\s+(?:IGNORE\s+)?|REPLACE\s+)INTO\s+`?(\w+)`?"
-    r"\s*(?:\(([^)]*)\))?\s*VALUES\s*(\(.*\))\s*$"
-)
-
-
-def read_sql_inserts(
-    spark: SparkSession,
-    path: str,
-    table: str,
-    schema: StructType | str,
-) -> DataFrame:
-    """Rows of ``table`` from a hand-written ``.sql`` script whose
-    INSERT statements may span MULTIPLE lines (the reference's own
-    fixture seed file does). Statement splitting runs driver-side —
-    authored scripts are human-scale by construction; multi-TB dumps
-    use the line-oriented readers — but the VALUES tokenizing still
-    fans out through the same distributed parse stage."""
-    if isinstance(schema, str):
-        schema = StructType.fromDDL(schema)
-    pairs: list[tuple[str, str]] = []
-    for stmt in _script_statements(path):
-        mo = _STMT_INSERT_RE.match(stmt)
-        if mo and mo.group(1).lower() == table.lower():
-            pairs.append((mo.group(2) or "", mo.group(3)))
-    matched = spark.createDataFrame(pairs, "collist string, blob string")
-    return _parse_blob_frame(matched, schema)
-
-
 def small_dump_insert_pairs(
-    path: str | list[str], max_bytes: int | None = None
-) -> dict[str, list[tuple[str, str]]] | None:
-    """Driver-side (collist, blob) pairs per table for a SMALL local
-    dump, or ``None`` when the dump is too big / not plain local files
-    (→ callers use the distributed readers). Round 12: a many-small-
-    table migration paid one full-dump Spark text scan PER TABLE
-    (~0.5 s each of pure job fixed cost for 20-row tables); below the
-    size gate the same extraction is one ~ms driver pass, and the
-    VALUES tokenizing still fans out through ``_parse_blob_frame``.
+    path: str | list[str],
+) -> dict[str, list[tuple]] | None:
+    """``_INSERT_RE`` groups per table (lowercase name) of a plain local
+    dump of at most ``SMALL_DUMP_BYTES``, from one driver-side pass, or
+    ``None`` for a bigger dump or a glob/remote URI (→
+    ``read_dump_inserts``). Below the size gate a many-small-table
+    migration pays one ~ms pass instead of one full-dump Spark text scan
+    per table.
 
-    Semantics mirror the distributed path exactly: DELIMITER-switched
-    sections are dropped whole (a trigger-body INSERT is body text,
-    not bulk — the round-11 rule), splitting is the quote/comment-aware
-    ``iter_sql_statements``, and the statement regex is the one
-    ``read_sql_inserts`` uses (multi-line INSERTs included)."""
+    Lines inside DELIMITER-switched sections are dropped (a trigger-body
+    INSERT is body text, not rows, as on the line path); the rest is
+    split by the quote/comment-aware ``iter_sql_statements``, so an
+    INSERT may span lines here."""
     import os as _os
 
-    if max_bytes is None:
-        max_bytes = int(
-            _os.environ.get("SPARK_GRAFT_SMALL_DUMP_BYTES", 16 << 20)
-        )
     paths = [path] if isinstance(path, str) else list(path)
     files: list[str] = []
     for p in paths:
@@ -506,14 +451,14 @@ def small_dump_insert_pairs(
             )
         elif _os.path.isfile(p):
             files.append(p)
-        else:  # glob / remote URI: the distributed readers own those
+        else:  # glob / remote URI: the line path owns those
             return None
     try:
-        if sum(_os.path.getsize(f) for f in files) > max_bytes:
+        if sum(_os.path.getsize(f) for f in files) > SMALL_DUMP_BYTES:
             return None
     except OSError:
         return None
-    out: dict[str, list[tuple[str, str]]] = {}
+    out: dict[str, list[tuple]] = {}
     for f in files:
         with _open_text(f) as fh:
             text = fh.read()
@@ -527,56 +472,28 @@ def small_dump_insert_pairs(
             if not protected:
                 kept.append(line)
         for stmt in iter_sql_statements("".join(kept)):
-            mo = _STMT_INSERT_RE.match(stmt)
+            mo = _INSERT_RE.match(stmt)
             if mo:
-                out.setdefault(mo.group(1).lower(), []).append(
-                    (mo.group(2) or "", mo.group(3))
-                )
+                out.setdefault(mo.group(1).lower(), []).append(mo.groups())
     return out
-
-
-def dump_source_reader(path: str, schemas: dict[str, StructType | str]):
-    """Factory adapting the dump source to ``MigrationPipeline.execute``'s
-    ``source_reader`` seam: a dump-file migration runs the SAME plan/DDL/
-    sink/validation control flow as a live-MySQL one, swapping only this
-    callable. ``schemas`` maps table name → DDL string or StructType
-    (typically built from the catalog snapshot's column metadata)."""
-
-    def reader(spark: SparkSession, plan: dict) -> DataFrame:
-        table = plan["table"]
-        return read_dump_inserts(spark, path, table, schemas[table])
-
-    return reader
 
 
 def scan_dump_tables(spark: SparkSession, path: str) -> DataFrame:
     """Table inventory of a dump: (table, n_insert_lines). The A1-style
     catalog scan for file-based sources — one distributed pass over the
-    text, aggregate map-side combined. DELIMITER-section-aware (round
-    11): an ``INSERT INTO audit_log …`` line inside a routine/trigger
-    body is body text, not bulk — counting it would report a table as
-    seeded that has no data."""
-    lines = spark.read.text(path)
-    delim_rows = _delim_directive_rows(spark, path)
-    if delim_rows:
-        mid = F.monotonically_increasing_id()
-        protected = F.lit(False)
-        for start, end in _protected_intervals(delim_rows):
-            c = mid >= F.lit(start)
-            if end != float("inf"):
-                c = c & (mid < F.lit(end))
-            protected = protected | c
-        lines = lines.withColumn("_prot", protected).filter(
-            ~F.col("_prot")
-        ).drop("_prot")
-    tbl = F.regexp_extract(
-        F.col("value"),
-        r"(?i)^\s*(?:INSERT(?:\s+IGNORE)?|REPLACE)\s+INTO"
-        r"\s+`?([A-Za-z0-9_]+)`?",
-        1,
-    )
+    text, aggregate map-side combined. An ``INSERT INTO audit_log …``
+    line inside a routine/trigger body is body text, not bulk, and is
+    not counted."""
+    return _tables_in(_dump_lines(spark, path))
+
+
+def _tables_in(lines: DataFrame) -> DataFrame:
+    """``scan_dump_tables`` over ``_dump_lines`` output."""
     return (
-        lines.select(tbl.alias("table"))
+        lines.filter(~F.col("body"))
+        .select(
+            F.regexp_extract("value", _INSERT_RE.pattern, 1).alias("table")
+        )
         .filter(F.col("table") != "")
         .groupBy("table")
         .agg(F.count(F.lit(1)).alias("n_insert_lines"))
@@ -584,198 +501,10 @@ def scan_dump_tables(spark: SparkSession, path: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Spark 4 Python DataSource wrapper: spark.read.format("mysqldump").
-# Byte-range input splits give within-file parallelism (a real dump is
-# ONE multi-GB file): each partition seeks to its start offset, skips to
-# the first full line (unless at 0), and parses lines whose START lies
-# inside the split — the standard text input-split contract, so every
-# line is owned by exactly one partition.
-# --------------------------------------------------------------------------
-DEFAULT_SPLIT_BYTES = 64 * 1024 * 1024
-
-
-class _DumpPartition:
-    def __init__(self, path: str, start: int, end: int):
-        self.path, self.start, self.end = path, start, end
-
-
-def _dump_partitions(path: str, split_bytes: int):
-    import os
-
-    files = (
-        [os.path.join(path, f) for f in sorted(os.listdir(path))]
-        if os.path.isdir(path)
-        else [path]
-    )
-    parts = []
-    for f in files:
-        size = os.path.getsize(f)
-        if f.endswith(".gz"):
-            # gzip is not seekable/splittable: one partition per file —
-            # a directory of per-table .gz dumps still fans out across
-            # files (the standard Hadoop unsplittable-codec behavior)
-            parts.append(_DumpPartition(f, 0, size))
-            continue
-        for off in range(0, max(size, 1), split_bytes):
-            parts.append(_DumpPartition(f, off, min(off + split_bytes, size)))
-    return parts
-
-
-def _read_split(part: _DumpPartition, table: str, columns: list[str]):
-    """Yield schema-ordered parsed rows for every INSERT line the split
-    OWNS.
-
-    Ownership follows the Hadoop LineRecordReader contract: a split
-    reads lines while the position BEFORE the read is <= end, so the
-    line starting exactly at ``end`` belongs to THIS split — which
-    pairs with the next split (start == end, start > 0) unconditionally
-    discarding its first line. Reading only while tell() < end would
-    orphan a line that starts exactly on a split boundary: neither
-    split would emit it (silent row loss).
-
-    ``.gz`` files arrive as one whole-file partition (see
-    _dump_partitions) and stream through gzip without boundary logic."""
-    needles = tuple(_line_prefixes(table))
-    n_cols = len(columns)
-
-    def parse_lines(line_iter):
-        for raw in line_iter:
-            line = raw.decode("utf-8", errors="replace")
-            low = line.lstrip().lower()
-            if not low.startswith(needles):
-                continue
-            # word-bounded VALUES followed by a tuple — a table like
-            # `config_values` or a column named values must not match
-            vm = _tokre.search(r"(?i)\bVALUES\s*\(", line)
-            if vm is None:
-                continue
-            idx = vm.start()
-            mo = _tokre.search(r"\(([^)]*)\)\s*$", line[:idx])
-            collist = mo.group(1) if mo else ""
-            for row in _align_rows(
-                split_tuples(line[vm.end() - 1:]), collist, columns
-            ):
-                yield tuple(
-                    (row[j] if j < len(row) else None) for j in range(n_cols)
-                )
-
-    if part.path.endswith(".gz"):
-        import gzip
-
-        with gzip.open(part.path, "rb") as fh:
-            yield from parse_lines(fh)
-        return
-
-    def split_lines(fh):
-        fh.seek(part.start)
-        if part.start > 0:
-            fh.readline()  # owned by the previous split
-        while fh.tell() <= part.end:
-            raw = fh.readline()
-            if not raw:
-                break
-            yield raw
-
-    with open(part.path, "rb") as fh:
-        yield from parse_lines(split_lines(fh))
-
-
-try:  # pyspark >= 4: Python DataSource API
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceReader,
-        InputPartition,
-    )
-
-    class MysqlDumpDataSource(DataSource):
-        """``spark.read.format("mysqldump").schema(ddl)
-        .option("table", t).load(path)``. Register once per session with
-        ``spark.dataSource.register(MysqlDumpDataSource)``. Options:
-        ``table`` (required), ``split_bytes`` (input-split size,
-        default 64 MiB)."""
-
-        @classmethod
-        def name(cls) -> str:
-            return "mysqldump"
-
-        def schema(self):
-            raise ValueError(
-                "mysqldump source needs an explicit .schema(...) — a dump "
-                "stores values untyped, so the reader cannot infer one"
-            )
-
-        def reader(self, schema) -> "MysqlDumpReader":
-            return MysqlDumpReader(schema, self.options)
-
-    class MysqlDumpReader(DataSourceReader):
-        def __init__(self, schema, options):
-            self.schema = schema
-            self.path = options.get("path")
-            self.table = options.get("table")
-            if not self.path or not self.table:
-                raise ValueError("mysqldump source requires path and table")
-            self.split_bytes = int(
-                options.get("split_bytes", DEFAULT_SPLIT_BYTES)
-            )
-
-        def partitions(self):
-            return [
-                InputPartition((p.path, p.start, p.end))
-                for p in _dump_partitions(self.path, self.split_bytes)
-            ]
-
-        def read(self, partition):
-            path, start, end = partition.value
-            part = _DumpPartition(path, start, end)
-            names = [f.name for f in self.schema.fields]
-            # the DataSource contract wants tuples already matching the
-            # declared types — the tokenizer emits str/bytes, cast here
-            casters = [_pycast(f.dataType) for f in self.schema.fields]
-            for row in _read_split(part, self.table, names):
-                yield tuple(
-                    None if v is None else caster(v)
-                    for v, caster in zip(row, casters)
-                )
-
-    def _pycast(dt):
-        from pyspark.sql.types import (
-            BinaryType,
-            BooleanType,
-            DoubleType,
-            FloatType,
-            IntegerType,
-            LongType,
-            StringType,
-        )
-
-        def text(v):  # hex-literal bytes feeding a non-binary column
-            return (
-                bytes(v).decode("utf-8", errors="replace")
-                if isinstance(v, (bytes, bytearray))
-                else v
-            )
-
-        if isinstance(dt, BinaryType):
-            return lambda v: _coerce_cell(v, True)
-        if isinstance(dt, (LongType, IntegerType)):
-            return lambda v: int(text(v))
-        if isinstance(dt, (DoubleType, FloatType)):
-            return lambda v: float(text(v))
-        if isinstance(dt, BooleanType):
-            return lambda v: text(v) not in ("0", "false", "FALSE")
-        if isinstance(dt, StringType):
-            return lambda v: str(text(v))
-        return lambda v: str(text(v))  # dates/decimals: cast downstream
-
-except ImportError:  # pragma: no cover — pyspark < 4 fallback
-    MysqlDumpDataSource = None  # type: ignore[assignment]
-
-
-# --------------------------------------------------------------------------
 # Dump DDL → CatalogSnapshot: the A-plane catalog scan for file-based
 # sources. With this, a FULL offline migration runs from one dump file:
 # snapshot_from_dump → MigrationPipeline.plan()/execute(
-#   source_reader=dump_source_reader(path, dump_read_schemas(snapshot))).
+#   source_reader=load_data_source_reader(path, dump_read_schemas(snapshot))).
 # --------------------------------------------------------------------------
 import re as _re
 
@@ -1413,7 +1142,7 @@ def users_from_sql(path: str | list[str]):
 def dump_read_schemas(snapshot) -> dict[str, StructType]:
     """Per-table Spark read schemas from a parsed snapshot (via the same
     MySQL→Spark type map the DDL translator uses), ready for
-    ``dump_source_reader``."""
+    ``load_data_source_reader``."""
     from mysql2pg_spark.schema.schema_map import struct_field_for
 
     return {
@@ -1549,55 +1278,38 @@ def functions_from_text(
 
 _DELIM_DIRECTIVE_RE = _re.compile(r"(?i)^\s*DELIMITER\s+(\S+)\s*$")
 
-#: (abspath, size, mtime_ns) → ordered DELIMITER directive rows. A
-#: 61-table migration calls read_dump_inserts once per table over the
-#: SAME file; the directive scan is one cheap job, cached so it runs
-#: once per artifact instead of once per table.
-_DELIM_ROWS_CACHE: dict[tuple, list] = {}
 
+def _dump_lines(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.text(path)`` as ``(mid, value, body)``: the one
+    DELIMITER-aware view every distributed dump scan starts from.
+    ``body`` marks the lines of DELIMITER-switched regions, where
+    mysqldump writes routine and trigger bodies: an ``INSERT INTO t
+    VALUES (NEW.id, …)`` there is body text, not a row of ``t``.
 
-def _delim_directive_rows(spark: "SparkSession", path: str) -> list:
-    """Ordered ``(line_id, token)`` DELIMITER directives of a dump,
-    collected distributed (O(#routines) rows come back). line_ids are
-    ``monotonically_increasing_id`` values over ``spark.read.text``,
-    which are stable across reads of the same input (same splits →
-    same partition ids and in-partition offsets) — the same contract
-    ``dump_schema_text`` already relies on."""
-    import os as _os
-
-    try:
-        # plain files only: a directory's mtime doesn't change when a
-        # member is edited in place, so dir inputs skip the cache. The
-        # applicationId scopes entries to ONE session — the cached mids
-        # depend on that session's input-split planning.
-        if _os.path.isfile(path):
-            st = _os.stat(path)
-            key = (
-                spark.sparkContext.applicationId,
-                _os.path.abspath(path),
-                st.st_size,
-                st.st_mtime_ns,
-            )
-        else:
-            key = None
-    except OSError:
-        key = None  # glob/dir inputs: skip the cache, not the scan
-    if key is not None and key in _DELIM_ROWS_CACHE:
-        return _DELIM_ROWS_CACHE[key]
+    The directive lines come back in one small job (O(#routines) rows).
+    ``mid`` (``monotonically_increasing_id``) orders the lines of a file
+    and is stable across reads of the same input (same splits → same
+    partition ids and offsets), so their intervals push back into the
+    line filter. Callers that scan one dump several times hold on to
+    the returned frame instead of re-running that job."""
     lines = spark.read.text(path).select(
         F.monotonically_increasing_id().alias("mid"), "value"
     )
-    rows = [
+    directives = [
         (r.mid, _DELIM_DIRECTIVE_RE.match(r.value).group(1))
         for r in lines.filter(
-            F.col("value").rlike(r"(?i)^\s*DELIMITER\s+\S+\s*$")
+            F.col("value").rlike(_DELIM_DIRECTIVE_RE.pattern)
         )
         .sort("mid")
         .collect()
     ]
-    if key is not None:
-        _DELIM_ROWS_CACHE[key] = rows
-    return rows
+    body = F.lit(False)
+    for start, end in _protected_intervals(directives):
+        c = F.col("mid") >= F.lit(start)
+        if end != float("inf"):
+            c = c & (F.col("mid") < F.lit(end))
+        body = body | c
+    return lines.withColumn("body", body)
 
 
 def _protected_intervals(
@@ -1636,35 +1348,14 @@ def dump_schema_text(path: str, spark: SparkSession | None = None) -> str:
     Only lines outside every DELIMITER-switched region are candidates
     for the drop.
 
-    With a SparkSession the line filter runs DISTRIBUTED (the same
-    split-scan ``_ddl_lines`` uses, ordered by
-    monotonically_increasing_id — a multi-TB dump never funnels through
-    one driver thread just to find its schema sections); the rare
-    DELIMITER directives are collected first (O(#routines) rows) and
-    their protected intervals pushed back into the line filter. Without
-    a session it streams the local file tracking the delimiter
-    directly. The data itself only ever moves through the distributed
-    readers (``read_dump_inserts`` / the mysqldump DataSource)."""
-    drop = ("insert into", "insert ignore into", "replace into")
+    With a SparkSession the line filter runs DISTRIBUTED over
+    ``_dump_lines`` (a multi-TB dump never funnels through one driver
+    thread just to find its schema sections). Without a session it
+    streams the local file tracking the delimiter directly. The data
+    itself only ever moves through the INSERT readers
+    (``load_data_source_reader``)."""
     if spark is not None:
-        lines = spark.read.text(path).select(
-            F.monotonically_increasing_id().alias("mid"), "value"
-        )
-        delim_rows = _delim_directive_rows(spark, path)
-        low = F.lower(F.ltrim(F.col("value")))
-        is_insert = (
-            low.startswith(drop[0])
-            | low.startswith(drop[1])
-            | low.startswith(drop[2])
-        )
-        protected = F.lit(False)
-        for start, end in _protected_intervals(delim_rows):
-            cond = F.col("mid") >= F.lit(start)
-            if end != float("inf"):
-                cond = cond & (F.col("mid") < F.lit(end))
-            protected = protected | cond
-        keep_df = lines.filter(~is_insert | protected)
-        return "\n".join(r.value for r in keep_df.sort("mid").collect())
+        return _schema_text(_dump_lines(spark, path))
     keep: list[str] = []
     delim = ";"
     with _open_text(path) as fh:
@@ -1672,10 +1363,18 @@ def dump_schema_text(path: str, spark: SparkSession | None = None) -> str:
             mo = _DELIM_DIRECTIVE_RE.match(line)
             if mo:
                 delim = mo.group(1)
-            elif delim == ";" and line.lstrip().lower().startswith(drop):
+            elif delim == ";" and _INSERT_RE.match(line):
                 continue
             keep.append(line.rstrip("\n"))
     return "\n".join(keep)
+
+
+def _schema_text(lines: DataFrame) -> str:
+    """``dump_schema_text`` over ``_dump_lines`` output."""
+    keep = lines.filter(
+        F.col("body") | ~F.col("value").rlike(_INSERT_RE.pattern)
+    )
+    return "\n".join(r.value for r in keep.sort("mid").collect())
 
 
 #: CREATE TEMPORARY TABLE inside a stored-routine body (round 9): very

@@ -332,17 +332,16 @@ def load_data_specs(
     through ``dump_schema_text``'s distributed INSERT-drop filter (a
     multi-TB dump never funnels through the driver); LOAD DATA lines
     survive that filter because only INSERT/REPLACE bulk is dropped."""
-    from mysql2pg_spark.sources.dumpfile import (
-        dump_schema_text,
-        iter_sql_statements,
-    )
+    from mysql2pg_spark.sources.dumpfile import dump_schema_text
 
-    specs: list[LoadDataSpec] = []
-    for stmt in iter_sql_statements(dump_schema_text(path, spark)):
-        spec = parse_load_data(stmt)
-        if spec is not None:
-            specs.append(spec)
-    return specs
+    return _specs_in(dump_schema_text(path, spark))
+
+
+def _specs_in(schema_text: str) -> list[LoadDataSpec]:
+    from mysql2pg_spark.sources.dumpfile import iter_sql_statements
+
+    specs = map(parse_load_data, iter_sql_statements(schema_text))
+    return [s for s in specs if s is not None]
 
 
 def read_load_data(
@@ -484,19 +483,38 @@ def load_data_source_reader(
     base_dir: str | None = None,
 ):
     """Factory for ``MigrationPipeline.execute``'s ``source_reader``
-    seam over a script that may carry BOTH bulk forms: per table, every
-    LOAD DATA statement's file (unioned, in statement order) plus any
-    INSERT statements (``read_dump_inserts``) — a restore script
-    commonly LOADs the big tables and INSERTs the small ones. Tables
-    with neither read as empty through the INSERT reader, matching the
-    plain dump reader's behavior.
+    seam over a mysqldump or restore script; every dump-fed CLI mode
+    reads through it. A table's rows are every LOAD DATA statement's
+    file (unioned, in statement order) plus its INSERT/REPLACE rows — a
+    restore script commonly LOADs the big tables and INSERTs the small
+    ones.
 
-    One distributed pass (``scan_dump_tables``) decides which tables
-    have INSERT bulk, so tables fed purely by LOAD DATA never pay a
-    full-dump text scan per table."""
+    INSERT rows take one of two paths with one semantics (see the
+    ``dumpfile`` module docstring), chosen once by size:
+
+    - a plain local dump of at most ``dumpfile.SMALL_DUMP_BYTES``
+      (16 MiB) is split into statements in one driver-side pass, and
+      each table's rows are built on the driver;
+    - a bigger dump, a glob or a remote URI is read line by line
+      through ``spark.read.text``, one INSERT per line as mysqldump
+      writes it.
+
+    An INSERT/REPLACE into a table that is not a VALUES list — INSERT …
+    SELECT on either path, or an INSERT spread over several lines on the
+    line path — fails that table with an error naming it, and the run
+    goes on as for any failed table; its rows are never dropped
+    silently.
+
+    The DELIMITER directives are scanned once per factory. On the line
+    path, with LOAD DATA present, one inventory pass decides which
+    tables have INSERT rows, so a table fed only by LOAD DATA pays no
+    full-dump scan."""
     from mysql2pg_spark.sources.dumpfile import (
-        read_dump_inserts,
-        scan_dump_tables,
+        _dump_lines,
+        _line_inserts,
+        _schema_text,
+        _tables_in,
+        parse_blob_pairs_local,
         small_dump_insert_pairs,
     )
 
@@ -508,61 +526,44 @@ def load_data_source_reader(
         if "specs" not in state:
             # the orchestrator calls this reader from a thread pool:
             # "specs" is the init sentinel, so it must be assigned LAST
-            # (a racing thread that sees it present must also see
-            # insert_tables; worst case both threads run the same
-            # idempotent init)
+            # (a racing thread that sees it present must also see the
+            # rest; worst case both threads run the same idempotent init)
+            lines = _dump_lines(spark, script_path)
             by_table: dict[str, list[LoadDataSpec]] = {}
-            for spec in load_data_specs(script_path, spark):
+            for spec in _specs_in(_schema_text(lines)):
                 by_table.setdefault(spec.table.lower(), []).append(spec)
-            # small local scripts (round 12): ONE driver pass extracts
-            # every table's INSERT payloads — the per-table full-dump
-            # Spark text scan was ~0.5 s of fixed cost per tiny table;
-            # big/remote dumps keep the distributed readers
             small = small_dump_insert_pairs(script_path)
-            state["small"] = small
             if small is not None:
-                state["insert_tables"] = set(small)
-            else:
-                state["insert_tables"] = (
-                    {
-                        r.table.lower()
-                        for r in scan_dump_tables(
-                            spark, script_path
-                        ).collect()
-                    }
-                    if by_table
-                    else None  # no LOAD DATA anywhere: skip the scan,
-                    # every table goes through the INSERT reader
-                )
+                insert_tables = set(small)
+            elif by_table:
+                insert_tables = {
+                    r.table.lower() for r in _tables_in(lines).collect()
+                }
+            else:  # no LOAD DATA: every table reads its INSERT rows
+                insert_tables = None
+            state.update(lines=lines, small=small, inserts=insert_tables)
             state["specs"] = by_table
         table = plan["table"]
         schema = schemas[table]
         if isinstance(schema, str):
             schema = StructType.fromDDL(schema)
-        parts: list[DataFrame] = []
-        for spec in state["specs"].get(table.lower(), ()):
-            parts.append(read_load_data(spark, spec, schema, base_dir))
+        parts = [
+            read_load_data(spark, spec, schema, base_dir)
+            for spec in state["specs"].get(table.lower(), ())
+        ]
         if (
             not parts
-            or state["insert_tables"] is None
-            or table.lower() in state["insert_tables"]
+            or state["inserts"] is None
+            or table.lower() in state["inserts"]
         ):
             if state["small"] is not None:
-                from mysql2pg_spark.sources.dumpfile import (
-                    parse_blob_pairs_local,
-                )
-
-                pairs = state["small"].get(table.lower(), [])
-                # round 16: driver-side tokenize — the pairs are local
-                # kilobytes; the old createDataFrame → mapInPandas round
-                # trip paid a Python-worker job per tiny table
                 parts.append(
-                    parse_blob_pairs_local(spark, pairs, schema)
+                    parse_blob_pairs_local(
+                        spark, state["small"].get(table.lower(), []), schema
+                    )
                 )
             else:
-                parts.append(
-                    read_dump_inserts(spark, script_path, table, schema)
-                )
+                parts.append(_line_inserts(state["lines"], table, schema))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

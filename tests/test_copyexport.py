@@ -290,9 +290,9 @@ def test_pgexport_artifact_loads_into_engine_matching_live_checksums(
     from mysql2pg_spark.sources.dumpfile import (
         dump_read_schemas,
         iter_sql_statements,
-        read_sql_inserts,
         snapshot_from_dump,
     )
+    from mysql2pg_spark.sources.loaddata import load_data_source_reader
 
     TABLES = "/root/reference/scripts/mysql/create_table.sql"
     SEED = "/root/reference/scripts/mysql/insert_data.sql"
@@ -327,8 +327,10 @@ def test_pgexport_artifact_loads_into_engine_matching_live_checksums(
         "foreign_keys": False, "validate_data": False,
     }
 
+    read_seed = load_data_source_reader(SEED, schemas)
+
     def loader(name):
-        return read_sql_inserts(spark, SEED, name, schemas[name])
+        return read_seed(spark, {"table": name})
 
     # ---- side A: LIVE migration (DDL + data) into engine A ----
     con_live = duckdb.connect()

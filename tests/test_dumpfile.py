@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from mysql2pg_spark.sources.dumpfile import (
     read_dump_inserts,
     scan_dump_tables,
@@ -109,35 +111,89 @@ def test_read_dump_inserts_column_list(spark, tmp_path):
     assert rows[10].name == "carol" and rows[10].note == "x"
 
 
-def test_mysqldump_datasource_hex_and_column_list(spark, tmp_path):
-    """The byte-range DataSource path handles the same spellings."""
-    from mysql2pg_spark.sources.dumpfile import MysqlDumpDataSource
+#: One dump holding every case the two INSERT paths of
+#: load_data_source_reader must agree on.
+PARITY_DUMP = """INSERT INTO `ml` VALUES (1,'a'),(2,'b');
+INSERT INTO `ml` VALUES
+(3,'c'),
+(4,'d');
+DELIMITER ;;
+CREATE TRIGGER trg AFTER INSERT ON ml FOR EACH ROW BEGIN
+INSERT INTO `audit` VALUES (NEW.id,'trigger');
+END ;;
+DELIMITER ;
+INSERT INTO `audit` VALUES (100,'row');
+INSERT INTO config_values (a, b) VALUES (1,'x'),(2,'y');
+INSERT INTO `zd` VALUES (1,'0000-00-00','0000-00-00 00:00:00'),(2,'2024-02-29','2024-02-29 12:00:00');
+INSERT IGNORE INTO `verbs` VALUES (1,'i');
+REPLACE INTO `verbs` VALUES (2,'r');
+REPLACE INTO verbs (name, id) VALUES ('c', 3);
+INSERT INTO `bin` VALUES (1,0x00FF10,_binary 'ab\\'c'),(2,NULL,0x68690a);
+INSERT INTO `sel` SELECT * FROM `ml`;
+"""
 
-    p = tmp_path / "ds.sql"
-    p.write_text(
-        "INSERT INTO `files` (`payload`, `id`) VALUES (0x0102, 1);\n"
-        "INSERT INTO `files` VALUES (2, _binary 'zz');\n"
-    )
-    spark.dataSource.register(MysqlDumpDataSource)
-    df = (
-        spark.read.format("mysqldump")
-        .schema("id bigint, payload binary")
-        .option("table", "files")
-        .load(str(p))
-    )
-    rows = {r.id: bytes(r.payload) for r in df.collect()}
-    assert rows == {1: b"\x01\x02", 2: b"zz"}
+PARITY_CASES = {
+    # name: (table, schema, rows); None is a refusal naming the table
+    "multiline": (
+        "ml", "id bigint, v string", [(1, "a"), (2, "b"), (3, "c"), (4, "d")]
+    ),
+    "delimiter_trigger": ("audit", "id bigint, src string", [(100, "row")]),
+    "config_values": (
+        "config_values", "a bigint, b string", [(1, "x"), (2, "y")]
+    ),
+    "zero_date": ("zd", "id bigint, d date, ts timestamp", "zero dates"),
+    "ignore_replace": (
+        "verbs", "id bigint, name string", [(1, "i"), (2, "r"), (3, "c")]
+    ),
+    "binary": (
+        "bin", "id bigint, payload binary, note string",
+        [(1, b"\x00\xff\x10", "ab'c"), (2, None, "hi\n")],
+    ),
+    "insert_select": ("sel", "id bigint, v string", None),
+}
+#: read line by line, an INSERT spread over several lines is refused
+LINE_PATH_REFUSES = {"multiline"}
+
+
+@pytest.mark.parametrize("case", sorted(PARITY_CASES))
+def test_dump_paths_agree(spark, tmp_path, monkeypatch, case):
+    """The driver-side statement pass (dumps up to SMALL_DUMP_BYTES) and
+    the line path (every bigger dump) read the same dump to the same
+    rows, or the line path fails the table by name; neither drops rows
+    silently."""
+    import datetime
+
+    from mysql2pg_spark.sources import dumpfile
+    from mysql2pg_spark.sources.loaddata import load_data_source_reader
+
+    table, schema, rows = PARITY_CASES[case]
+    if rows == "zero dates":  # read as NULL
+        ts = spark.sql("SELECT TIMESTAMP'2024-02-29 12:00:00'").first()[0]
+        rows = [(1, None, None), (2, datetime.date(2024, 2, 29), ts)]
+    p = tmp_path / "parity.sql"
+    p.write_text(PARITY_DUMP)
+
+    def read():
+        reader = load_data_source_reader(str(p), {table: schema})
+        return sorted(
+            tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+            for r in reader(spark, {"table": table}).collect()
+        )
+
+    for line_path in (False, True):
+        if line_path:
+            monkeypatch.setattr(dumpfile, "SMALL_DUMP_BYTES", 0)
+        if rows is None or (line_path and case in LINE_PATH_REFUSES):
+            with pytest.raises(Exception, match=f"`{table}`.*not a VALUES"):
+                read()
+        else:
+            assert read() == rows
 
 
 def test_dump_verbs_insert_ignore_and_replace(spark, tmp_path):
     """mysqldump --insert-ignore / --replace emit different row verbs;
     all three spellings must load (previously they silently yielded 0
-    rows). Both reader paths."""
-    from mysql2pg_spark.sources.dumpfile import (
-        MysqlDumpDataSource,
-        scan_dump_tables,
-    )
-
+    rows) and count in the inventory."""
     p = tmp_path / "verbs.sql"
     p.write_text(
         "INSERT INTO `t` VALUES (1,'a');\n"
@@ -150,26 +206,18 @@ def test_dump_verbs_insert_ignore_and_replace(spark, tmp_path):
         1: "a", 2: "b", 3: "c", 4: "d"
     }
 
-    spark.dataSource.register(MysqlDumpDataSource)
-    ds = (
-        spark.read.format("mysqldump")
-        .schema("id bigint, name string")
-        .option("table", "t")
-        .load(str(p))
-    )
-    assert sorted(r.id for r in ds.collect()) == [1, 2, 3, 4]
-
     inv = {r.table: r.n_insert_lines
            for r in scan_dump_tables(spark, str(p)).collect()}
     assert inv == {"t": 4}
 
 
 def test_gzipped_dump_both_paths(spark, tmp_path):
-    """A .gz dump decompresses via the JVM codec on the text path and
-    via a whole-file gzip partition on the DataSource path."""
+    """A .gz dump decompresses via the JVM codec on the line path and
+    via gzip on the driver-side statement pass."""
     import gzip
 
-    from mysql2pg_spark.sources.dumpfile import MysqlDumpDataSource
+    from mysql2pg_spark.sources import dumpfile
+    from mysql2pg_spark.sources.loaddata import load_data_source_reader
 
     p = tmp_path / "dump.sql.gz"
     body = "".join(
@@ -181,16 +229,9 @@ def test_gzipped_dump_both_paths(spark, tmp_path):
     df = read_dump_inserts(spark, str(p), "t", "id bigint, name string")
     assert df.count() == 200
 
-    spark.dataSource.register(MysqlDumpDataSource)
-    ds = (
-        spark.read.format("mysqldump")
-        .schema("id bigint, name string")
-        .option("table", "t")
-        .option("split_bytes", 64)  # must NOT split the gz file
-        .load(str(p))
-    )
-    assert ds.rdd.getNumPartitions() == 1
-    rows = {r.id: r.name for r in ds.collect()}
+    assert dumpfile.small_dump_insert_pairs(str(p)) is not None
+    reader = load_data_source_reader(str(p), {"t": "id bigint, name string"})
+    rows = {r.id: r.name for r in reader(spark, {"table": "t"}).collect()}
     assert len(rows) == 200 and rows[199] == "n199"
 
 
@@ -232,7 +273,7 @@ def test_execute_migration_from_dump(spark, tmp_path):
         TableMeta,
     )
     from mysql2pg_spark.runlog import RunLogger
-    from mysql2pg_spark.sources.dumpfile import dump_source_reader
+    from mysql2pg_spark.sources.loaddata import load_data_source_reader
     from tests.test_orchestrator import _FakeConn
 
     dump = tmp_path / "dump.sql"
@@ -274,7 +315,7 @@ def test_execute_migration_from_dump(spark, tmp_path):
     result = MigrationPipeline(load_config(str(cfgp)), snap).execute(
         spark,
         _FakeConn(),
-        source_reader=dump_source_reader(
+        source_reader=load_data_source_reader(
             str(dump),
             {"users": "id bigint, name string, note string, score double"},
         ),
@@ -286,79 +327,6 @@ def test_execute_migration_from_dump(spark, tmp_path):
     )
     assert result["synced"] == {"users": 3}
     assert result["validation"]["users"]["consistent"] is True
-
-
-def test_mysqldump_datasource_with_splits(spark, tmp_path):
-    """spark.read.format('mysqldump') with a tiny split size: the file
-    fans out over multiple byte-range partitions, each line is owned by
-    exactly one split (no dropped or doubled rows)."""
-    from mysql2pg_spark.sources.dumpfile import MysqlDumpDataSource
-
-    assert MysqlDumpDataSource is not None
-    p = tmp_path / "big.sql"
-    lines = [
-        f"INSERT INTO `t` VALUES ({i},'name{i}'),({i + 1000},'x({i})y');"
-        for i in range(50)
-    ]
-    p.write_text("-- header\n" + "\n".join(lines) + "\n")
-
-    spark.dataSource.register(MysqlDumpDataSource)
-    df = (
-        spark.read.format("mysqldump")
-        .schema("id bigint, name string")
-        .option("table", "t")
-        .option("split_bytes", 256)  # force many partitions
-        .load(str(p))
-    )
-    assert df.rdd.getNumPartitions() > 3
-    rows = {r.id: r.name for r in df.collect()}
-    assert len(rows) == 100
-    assert rows[3] == "name3" and rows[1003] == "x(3)y"
-
-
-def test_read_split_owns_boundary_aligned_line(tmp_path):
-    """A line starting EXACTLY at a split boundary must be owned by the
-    split ending there (LineRecordReader contract): reading only while
-    tell() < end orphaned it — the earlier split stopped short and the
-    later split unconditionally skipped its first line (silent loss)."""
-    from mysql2pg_spark.sources.dumpfile import (
-        _DumpPartition,
-        _read_split,
-    )
-
-    l1 = "INSERT INTO `t` VALUES (1,'a');\n"  # exactly 32 bytes
-    l2 = "INSERT INTO `t` VALUES (2,'b');\n"
-    assert len(l1.encode()) == 32
-    p = tmp_path / "b.sql"
-    p.write_bytes((l1 + l2).encode())
-
-    parts = [_DumpPartition(str(p), 0, 32), _DumpPartition(str(p), 32, 64)]
-    rows = [
-        r for part in parts for r in _read_split(part, "t", ["id", "name"])
-    ]
-    assert sorted(r[0] for r in rows) == ["1", "2"]  # both, exactly once
-
-
-def test_mysqldump_datasource_boundary_split(spark, tmp_path):
-    """End-to-end repro of the boundary case through the DataSource: a
-    dump whose every line is exactly split_bytes long loses no rows."""
-    from mysql2pg_spark.sources.dumpfile import MysqlDumpDataSource
-
-    line = "INSERT INTO `t` VALUES ({:03d},'abc');\n"
-    width = len(line.format(0).encode())
-    p = tmp_path / "aligned.sql"
-    p.write_text("".join(line.format(i) for i in range(40)))
-
-    spark.dataSource.register(MysqlDumpDataSource)
-    df = (
-        spark.read.format("mysqldump")
-        .schema("id bigint, name string")
-        .option("table", "t")
-        .option("split_bytes", width)  # every boundary hits a line start
-        .load(str(p))
-    )
-    ids = sorted(r.id for r in df.collect())
-    assert ids == list(range(40))
 
 
 REAL_DUMP = """-- MySQL dump 10.13  Distrib 8.0.32
@@ -422,9 +390,9 @@ def test_full_offline_migration_from_dump_only(spark, tmp_path):
     from mysql2pg_spark.runlog import RunLogger
     from mysql2pg_spark.sources.dumpfile import (
         dump_read_schemas,
-        dump_source_reader,
         snapshot_from_dump,
     )
+    from mysql2pg_spark.sources.loaddata import load_data_source_reader
     from tests.test_orchestrator import _FakeConn
 
     p = tmp_path / "full.sql"
@@ -448,7 +416,9 @@ def test_full_offline_migration_from_dump_only(spark, tmp_path):
     result = MigrationPipeline(load_config(str(cfgp)), snap).execute(
         spark,
         conn,
-        source_reader=dump_source_reader(str(p), dump_read_schemas(snap)),
+        source_reader=load_data_source_reader(
+            str(p), dump_read_schemas(snap)
+        ),
         sink_writer=lambda df, table: df.write.mode("overwrite").parquet(
             str(sink / table)
         ),
@@ -461,26 +431,6 @@ def test_full_offline_migration_from_dump_only(spark, tmp_path):
     executed = " ".join(conn.executed)
     assert "CREATE TABLE" in executed and "customers" in executed
     assert "CREATE UNIQUE INDEX" in executed or "uq_name" in executed
-
-
-def test_values_inside_table_name_datasource(spark, tmp_path):
-    """A table named *_values must not confuse the DataSource's VALUES
-    locator (it previously matched the substring inside the name and
-    parsed the column list as data)."""
-    from mysql2pg_spark.sources.dumpfile import MysqlDumpDataSource
-
-    p = tmp_path / "cv.sql"
-    p.write_text(
-        "INSERT INTO `config_values` (`a`, `b`) VALUES (1,'x'),(2,'y');\n"
-    )
-    spark.dataSource.register(MysqlDumpDataSource)
-    df = (
-        spark.read.format("mysqldump")
-        .schema("a bigint, b string")
-        .option("table", "config_values")
-        .load(str(p))
-    )
-    assert {r.a: r.b for r in df.collect()} == {1: "x", 2: "y"}
 
 
 def test_quoted_default_with_apostrophe_undoubled(spark, tmp_path):

@@ -186,3 +186,28 @@ def test_driver_window_contract():
     assert set(DRIVER_ORACLES) == set(DRIVER_QUERIES)  # all oracled
     assert set(DRIVER_QUERIES) <= set(QUERIES)
     assert set(DRIVER_ORACLES) <= set(ORACLES)
+
+
+@pytest.mark.parametrize("module", ["textops", "merged"])
+def test_registry_import_is_strict(module):
+    """A plan module that fails to import fails the registry import,
+    naming the module, instead of dropping its queries (without
+    ``merged`` the registry used to import with 140 queries and a
+    75-entry driver window)."""
+    import subprocess
+    import sys
+
+    code = (
+        "import sys\n"
+        f"sys.modules['mysql2pg_spark.plans.{module}'] = None\n"
+        "try:\n"
+        "    import mysql2pg_spark.plans\n"
+        "except ImportError as e:\n"
+        "    print('refused:', e)\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert proc.stdout.startswith("refused:") and module in proc.stdout

@@ -11,9 +11,9 @@ metadata:
   the corpus: ints, decimals, enums/sets, temporals with precision,
   JSON, every blob width, geometry, bit) — executed by DuckDB's
   parser via the dialect seam;
-- the seed data (`insert_data.sql`) loads through the statement-
-  oriented reader — its INSERTs span multiple lines and use column
-  lists, both previously unsupported spellings;
+- the seed data (`insert_data.sql`) loads through the dump reader's
+  driver-side statement pass — its INSERTs span multiple lines and use
+  column lists;
 - the view corpus (`create_view.sql`) renders through dialect/ansi.py
   and CREATEs inside the engine over the REAL migrated tables;
 - the user corpus (`create_user.sql`) parses into role DDL + grants
@@ -36,11 +36,11 @@ from mysql2pg_spark.sinks.dbapi_sink import make_dbapi_writer
 from mysql2pg_spark.sources.dumpfile import (
     dump_read_schemas,
     iter_sql_statements,
-    read_sql_inserts,
     snapshot_from_dump,
     users_from_sql,
     views_from_sql,
 )
+from mysql2pg_spark.sources.loaddata import load_data_source_reader
 
 TABLES = "/root/reference/scripts/mysql/create_table.sql"
 INDEXES = "/root/reference/scripts/mysql/create_index.sql"
@@ -63,7 +63,10 @@ def test_iter_sql_statements_quote_and_comment_aware():
     assert stmts[2] == "SELECT 1"
 
 
-def test_read_sql_inserts_multiline_and_column_list(spark, tmp_path):
+def test_statement_pass_multiline_and_column_list(spark, tmp_path):
+    """A small script reads statement by statement, so an INSERT may
+    span lines and carry a column list (the reference's seed file
+    does both)."""
     p = tmp_path / "seed.sql"
     p.write_text(
         "INSERT INTO t (b, a) VALUES\n"
@@ -71,12 +74,8 @@ def test_read_sql_inserts_multiline_and_column_list(spark, tmp_path):
         "  (2.5, 20);\n"
         "INSERT INTO t VALUES (30, 3.5);\n"
     )
-    rows = {
-        r.a: r.b
-        for r in read_sql_inserts(
-            spark, str(p), "t", "a bigint, b double"
-        ).collect()
-    }
+    reader = load_data_source_reader(str(p), {"t": "a bigint, b double"})
+    rows = {r.a: r.b for r in reader(spark, {"table": "t"}).collect()}
     assert rows == {10: 1.5, 20: 2.5, 30: 3.5}
 
 
@@ -149,9 +148,7 @@ def test_reference_corpus_migrates_into_duckdb(spark, tmp_path, corpus_snapshot)
     result = MigrationPipeline(data_cfg, snap).execute(
         spark,
         con,
-        source_reader=lambda sp, plan: read_sql_inserts(
-            sp, SEED, plan["table"], schemas[plan["table"]]
-        ),
+        source_reader=load_data_source_reader(SEED, schemas),
         sink_writer=make_dbapi_writer(
             con.cursor, paramstyle="qmark", via="driver"
         ),
