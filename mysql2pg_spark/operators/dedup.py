@@ -3,11 +3,11 @@ embedding-cosine near-dup.
 
 Scale design (100 TB):
 - exact: one shuffle on the 16-byte fingerprint; map-side combine.
-- MinHash: shingle explode is map-local; the ONLY shuffle is the
-  groupBy(doc_id) for signatures (k mins combine map-side), then the LSH
-  band self-join shuffles on the band key — candidates only, never all
-  pairs. Band-key hot spots (a shingle shared by millions of docs) are
-  handled by AQE skew-join splitting (on in session.py).
+- MinHash: shingles and signatures come from one map-local Arrow
+  kernel pass (no shuffle); the LSH band self-join shuffles on the band
+  key — candidates only, never all pairs. Band-key hot spots (a shingle
+  shared by millions of docs) are handled by AQE skew-join splitting
+  (on in session.py).
 - Jaccard verify runs only on LSH candidates.
 - SimHash: explode + 32 conditional sums → one shuffle.
 - embedding near-dup is blocked (label/bucket) so the pair join is
@@ -44,10 +44,16 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def shingle_sets(
-    df: DataFrame, id_col: str, text_col: str, ngram: int = 3
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    ngram: int = 3,
+    num_hashes: int = 0,
 ) -> DataFrame:
     """(id, distinct word-ngram array) — the shared input of signature
-    computation and Jaccard verification.
+    computation and Jaccard verification — plus, when ``num_hashes`` > 0,
+    the document's MinHash signature ``mh0 … mh{num_hashes-1}`` from the
+    same kernel pass (NULL for a document with no shingle).
 
     Round 16 (guide §4.2, the winnow/CDC precedent): the n-gram build is
     an Arrow ``mapInArrow`` kernel instead of the previous Catalyst
@@ -60,39 +66,65 @@ def shingle_sets(
     slices with single spaces and dedups keeping first occurrence
     (``dict.fromkeys`` == ``array_distinct`` order), which is
     locale/regex-free — equivalence is structural, and verified by a
-    direct sorted-collect compare plus every shingle-family oracle."""
+    direct sorted-collect compare plus every shingle-family oracle.
+
+    The signature is fused into the kernel (operator fusion): minhash i
+    is the minimum over the document's shingles of :func:`minhash_slice`
+    computed with ``hashlib`` on the same UTF-8 bytes, so the values are
+    byte-identical to the JVM expression, and the signature costs no
+    explode, no shuffle and no aggregation."""
     from mysql2pg_spark.operators.textops import tokens
 
     src = df.select(F.col(id_col), tokens(text_col).alias("_toks"))
     id_ddl = src.schema[0].dataType.simpleString()
+    mh_cols = [f"mh{i}" for i in range(num_hashes)]
 
     def kernel(batches):
+        import hashlib
+
         import pyarrow as pa
 
+        prefixes = [f"{g}|" for g in range((num_hashes + 3) // 4)]
         for batch in batches:
             toks_col = batch.column(1).to_pylist()
             out: list = []
+            mins: list = [[] for _ in mh_cols]
             for toks in toks_col:
                 # JVM twin: null text and < ngram tokens both yield an
                 # EMPTY array (when(count >= 1, ...).otherwise(array()))
                 if toks is None or len(toks) < ngram:
-                    out.append([])
-                    continue
-                out.append(
-                    list(
+                    sh = []
+                else:
+                    sh = list(
                         dict.fromkeys(
                             " ".join(toks[i : i + ngram])
                             for i in range(len(toks) - ngram + 1)
                         )
                     )
-                )
+                out.append(sh)
+                for g, pre in enumerate(prefixes):
+                    # one digest is four 8-hex-digit hash functions
+                    digests = [
+                        hashlib.md5((pre + s).encode()).hexdigest()
+                        for s in sh
+                    ]
+                    for i in range(4 * g, min(4 * g + 4, num_hashes)):
+                        o = 8 * (i % 4)
+                        mins[i].append(
+                            min((d[o : o + 8] for d in digests), default=None)
+                        )
             yield pa.record_batch(
-                [batch.column(0), pa.array(out, type=pa.list_(pa.string()))],
-                names=[id_col, "shingles"],
+                [batch.column(0), pa.array(out, type=pa.list_(pa.string()))]
+                + [pa.array(m, type=pa.string()) for m in mins],
+                names=[id_col, "shingles", *mh_cols],
             )
 
     return src.mapInArrow(
-        kernel, f"{id_col} {id_ddl}, shingles array<string>"
+        kernel,
+        ", ".join(
+            [f"{id_col} {id_ddl}", "shingles array<string>"]
+            + [f"{c} string" for c in mh_cols]
+        ),
     )
 
 
@@ -101,7 +133,9 @@ def minhash_slice(i: int, shingle: Column) -> Column:
     md5('<i//4>|' || shingle): one digest yields FOUR independent
     minhashes (4× fewer md5 calls than hash-per-function), and
     fixed-length lowercase hex keeps min() on strings ≡ min() on values.
-    Deterministic + engine-independent like everything in this module."""
+    Deterministic + engine-independent like everything in this module.
+    The JVM spelling of the hash :func:`shingle_sets` computes in its
+    kernel (and the DuckDB oracles in SQL)."""
     digest = F.md5(F.concat(F.lit(f"{i // 4}|"), shingle))
     return F.substring(digest, 8 * (i % 4) + 1, 8)
 
@@ -109,14 +143,12 @@ def minhash_slice(i: int, shingle: Column) -> Column:
 def _signatures_from_shingles(
     sh_sets: DataFrame, id_col: str, num_hashes: int
 ) -> DataFrame:
-    sh = sh_sets.select(
-        F.col(id_col), F.explode("shingles").alias("shingle")
+    """The signature rows of a ``shingle_sets(..., num_hashes=k)`` frame:
+    every document with at least one shingle (an empty set has no
+    minimum), projected to ``(id, mh0 … mh{k-1})``."""
+    return sh_sets.filter(F.size("shingles") > 0).select(
+        F.col(id_col), *[F.col(f"mh{i}") for i in range(num_hashes)]
     )
-    aggs = [
-        F.min(minhash_slice(i, F.col("shingle"))).alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
-    return sh.groupBy(id_col).agg(*aggs)
 
 
 def minhash_signatures(
@@ -127,9 +159,11 @@ def minhash_signatures(
     ngram: int = 3,
 ) -> DataFrame:
     """MinHash signature per document: mh_i = min over shingles of
-    md5('<i>|' || shingle). Shingle explode → single groupBy(doc)."""
+    md5('<i>|' || shingle), from the one shingle kernel pass."""
     return _signatures_from_shingles(
-        shingle_sets(df, id_col, text_col, ngram), id_col, num_hashes
+        shingle_sets(df, id_col, text_col, ngram, num_hashes),
+        id_col,
+        num_hashes,
     )
 
 
@@ -153,7 +187,7 @@ def lsh_candidate_pairs_capped(
     num_hashes: int = DEFAULT_NUM_HASHES,
     max_bucket: int = 64,
     rows_per_band: int = 1,
-    plan_time_stats: bool = True,
+    max_n: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Skew-hardened LSH candidates (round 14): real corpora have
     power-law duplicate clusters — one template shared by 1% of docs
@@ -203,29 +237,25 @@ def lsh_candidate_pairs_capped(
         F.count(F.lit(1)).alias("n"), F.min("id").alias("bmin")
     )
     # Plan-time statistics short-circuit (round 15): one scalar — the
-    # corpus' max bucket size — decides the physical plan, the same
-    # shape as AQE reading map-output stats (and the d15 profile
+    # corpus' max bucket size ``max_n`` — decides the physical plan, the
+    # same shape as AQE reading map-output stats (and the d15 profile
     # collect). Below the cap the capped tree and the plain self-join
     # produce THE SAME pair set by definition, but the capped tree
     # pays two extra bucket-annotation joins — a measured 4× on d04's
     # warm sf0.1 wall, pure insurance premium on corpora that need no
-    # insurance. The agg is map-side-combined O(buckets) and runs
-    # once per call. The decision is FROZEN into the returned plan: if
+    # insurance. The decision is FROZEN into the returned plan: if
     # the underlying data changes under the same path, rebuild the
     # DataFrame (the plans layer builds every query from its files, so
     # its queries always do).
     #
-    # NOTE (ADVICE r15): with plan_time_stats=True (the default, what
-    # the plans layer uses) THIS FUNCTION IS EAGER — it runs one Spark
-    # job at build time. Library callers that need lazy semantics
-    # should pass plan_time_stats=False: the capped tree is then built
-    # unconditionally, which is correct at every bucket size and only
-    # costs the two bucket-annotation joins.
-    max_n = (
-        (buckets.agg(F.max("n")).collect()[0][0] or 0)
-        if plan_time_stats
-        else max_bucket + 1
-    )
+    # EAGER unless the caller passes ``max_n``: None collects it here
+    # (one query, a map-side-combined O(buckets) aggregate). A caller
+    # that needs other statistics too gets them in the same query from
+    # :func:`plan_time_stats`; ``max_n=max_bucket + 1`` builds the
+    # capped tree with no job at all, correct at every bucket size at
+    # the cost of the two bucket-annotation joins.
+    if max_n is None:
+        max_n = buckets.agg(F.max("n")).collect()[0][0] or 0
     if max_n <= max_bucket:
         pairs = (
             keys.select("band", "key", F.col("id").alias("id_a"))
@@ -293,10 +323,10 @@ def jaccard_verified_pairs(
 ) -> DataFrame:
     """MinHash-LSH candidates verified with exact n-gram Jaccard ≥
     threshold. Verification joins shingle sets only for candidates; the
-    shingle arrays are computed ONCE and cached — they feed both the
-    signature aggregation and the verification join (shingling is the
-    dominant scan cost at scale)."""
-    sh_sets = shingle_sets(df, id_col, text_col, ngram).cache()
+    shingle arrays and signatures come from ONE kernel pass and are
+    cached — they feed both the band join and the verification join
+    (shingling is the dominant scan cost at scale)."""
+    sh_sets = shingle_sets(df, id_col, text_col, ngram, num_hashes).cache()
     cands = lsh_candidate_pairs(
         _signatures_from_shingles(sh_sets, id_col, num_hashes), id_col, num_hashes
     )
@@ -346,9 +376,9 @@ def hashed_shingle_sets(sh_sets: DataFrame, id_col: str) -> DataFrame:
     dropped ~3× — joins 6.0→2.1 s, intersects 3.8→1.5 s).
 
     EXACT ONLY when the hash is injective on the corpus vocabulary —
-    callers must gate on :func:`shingle_hash_is_injective` (the plans
-    layer's ``verify_sets`` checks per query and falls back to the
-    string arrays when the check fails). Injectivity makes per-pair
+    callers must gate on :func:`shingle_hash_is_injective` or
+    :func:`plan_time_stats` (the plans layer checks per query and falls
+    back to the string arrays when the check fails). Injectivity makes per-pair
     intersection counts on hashes equal the counts on strings, so the
     Jaccard doubles are bit-identical."""
     return sh_sets.select(
@@ -357,21 +387,70 @@ def hashed_shingle_sets(sh_sets: DataFrame, id_col: str) -> DataFrame:
     )
 
 
+def _vocabulary_rows(sh_sets: DataFrame) -> DataFrame:
+    """``(kind=1, g)``: one row per shingle occurrence."""
+    return sh_sets.select(
+        F.lit(1).alias("kind"), F.explode("shingles").alias("g")
+    )
+
+
+def _grouped_stats(rows: DataFrame):
+    """Both plan-time statistics from ``(kind, g)`` rows in one query:
+
+    - ``max_n``: the largest kind-0 group (an LSH bucket);
+    - ``collides``: whether two distinct kind-1 values (shingles) share
+      one xxhash64 — exactly ``countDistinct(g) != countDistinct(h)``.
+
+    Level one counts each ``(kind, g)``; level two regroups by
+    ``xxhash64(g)``, keeping the largest count (a bucket that shares a
+    hash with another keeps its own size in the max) and the number of
+    distinct values (a vocabulary collision); a global aggregate ends
+    it. Every aggregation buffer is fixed-width, so all three levels
+    are hash aggregates: a ``min``/``max`` of strings would fall back
+    to a sort aggregate (measured ~3× slower at sf1), and two distinct
+    counts pay an Expand. NULLs where a kind has no rows."""
+    return (
+        rows.groupBy("kind", "g")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .groupBy("kind", F.xxhash64("g").alias("h"))
+        .agg(F.max("n").alias("n"), F.count(F.lit(1)).alias("values"))
+        .agg(
+            F.max(F.when(F.col("kind") == 0, F.col("n"))).alias("max_n"),
+            F.max(F.when(F.col("kind") == 1, F.col("values"))).alias("most"),
+        )
+        .select("max_n", (F.col("most") > 1).alias("collides"))
+        .first()
+    )
+
+
 def shingle_hash_is_injective(sh_sets: DataFrame) -> bool:
     """True iff xxhash64 is collision-free on the corpus' distinct
-    shingle vocabulary. NOTE: EAGER — runs one map-side-combinable
-    aggregation job over the exploded shingles (same plan-time-statistic
-    shape as the max-bucket scalar above). O(vocabulary) work, run once
-    per call."""
-    row = (
-        sh_sets.select(F.explode("shingles").alias("s"))
-        .agg(
-            F.countDistinct("s").alias("ns"),
-            F.countDistinct(F.xxhash64("s")).alias("nh"),
-        )
-        .collect()[0]
+    shingle vocabulary. NOTE: EAGER — one O(vocabulary) aggregate query
+    per call (:func:`plan_time_stats` folds it into the max-bucket
+    query)."""
+    return not _grouped_stats(_vocabulary_rows(sh_sets))["collides"]
+
+
+def plan_time_stats(
+    signatures: DataFrame,
+    sh_sets: DataFrame,
+    id_col: str,
+    num_hashes: int = DEFAULT_NUM_HASHES,
+    rows_per_band: int = 1,
+) -> tuple[int, bool]:
+    """``(max_n, injective)``: the largest LSH bucket of ``signatures``
+    (``lsh_candidate_pairs_capped``'s ``max_n``) and whether xxhash64 is
+    injective on ``sh_sets``' vocabulary (whether
+    :func:`hashed_shingle_sets` verifies exactly). EAGER: both come back
+    from ONE query over the union of bucket and vocabulary rows."""
+    keys = _band_keys(signatures, id_col, "id", num_hashes, rows_per_band)
+    buckets = keys.select(
+        F.lit(0).alias("kind"),
+        # band ids hold no "|", so the first one splits band from key
+        F.concat_ws("|", "band", "key").alias("g"),
     )
-    return row["ns"] == row["nh"]
+    row = _grouped_stats(buckets.unionByName(_vocabulary_rows(sh_sets)))
+    return int(row["max_n"] or 0), not row["collides"]
 
 
 def _band_keys(
@@ -435,9 +514,10 @@ def incremental_dedup(
     on candidates. History is scanned once to build its fp/signature
     index; in a production pipeline that index is PRECOMPUTED and
     bucketed on the band key, so each delta batch costs
-    O(delta × bands) lookups, independent of history size. Delta
-    shingles are cached (used by both the signature agg and the verify
-    join); history never joins history.
+    O(delta × bands) lookups, independent of history size. Each side's
+    shingles and signatures come from one kernel pass and are cached
+    (used by both the band join and the verify join); history never
+    joins history.
 
     ``max_bucket`` (round 15) BANS hot history band keys — the
     stop-shingle mitigation for the continuous-ingest shape: a band
@@ -463,8 +543,8 @@ def incremental_dedup(
         .agg(F.min("h_id").alias("exact_dup_of"))
     )
 
-    h_sh = shingle_sets(history, id_col, text_col, ngram).cache()
-    d_sh = shingle_sets(delta, id_col, text_col, ngram).cache()
+    h_sh = shingle_sets(history, id_col, text_col, ngram, num_hashes).cache()
+    d_sh = shingle_sets(delta, id_col, text_col, ngram, num_hashes).cache()
     h_band = _band_keys(
         _signatures_from_shingles(h_sh, id_col, num_hashes),
         id_col,

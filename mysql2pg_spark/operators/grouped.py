@@ -1,30 +1,17 @@
-"""Grouped-map operators via applyInPandas (the per-group imperative
-escape hatch — SURVEY §2 UDF surface; pattern per SNIPPETS.md [1]).
+"""Grouped-map operators via pandas (the per-group imperative escape
+hatch — SURVEY §2 UDF surface; pattern per SNIPPETS.md [1]).
 
-Used when per-group logic genuinely needs a dataframe view of the whole
-group (sequence numbering with gap features here; model scoring,
-per-group curve fitting, resampling in general). Outputs are integers /
-carried-through values so results stay exactly reproducible — float
-reductions inside pandas would be numpy-order-dependent and break
-cross-engine checks.
+Used only where per-group logic is a genuinely stateful scan that SQL
+window functions cannot express: first-fit sequence packing, where
+each decision depends on the running fill. (Sessionization, a lag and
+a row number, is a window query: plans/timeseries.sessionize.) Outputs
+are integers / carried-through values so results stay exactly
+reproducible — float reductions inside pandas would be
+numpy-order-dependent and break cross-engine checks.
 
 Scale: one shuffle on the group key; each group must fit in one
-executor's memory (the applyInPandas contract) — group by high-
-cardinality keys (user, session), never by low-cardinality ones.
-
-Two implementations of the same contract:
-
-- ``sessionize_events`` — the canonical ``groupBy().applyInPandas``
-  form. Spark materializes ONE Arrow batch + one Python call PER GROUP
-  (~4 ms of plumbing each, measured local[32]); with millions of small
-  groups that fixed cost dominates the actual work by 10-20×.
-- ``sessionize_events_fast`` — same shuffle (``repartition(key)``),
-  same per-group ordering (``sortWithinPartitions``), but ONE
-  ``mapInPandas`` pass per partition with vectorized pandas groupby
-  inside the batch and a carry buffer for groups that straddle Arrow
-  batch boundaries. Per-batch plumbing instead of per-group: ~18×
-  faster here, and at 10^9 groups it is the difference between the
-  grouped-map stage being Arrow-bound vs Python-call-bound.
+executor's memory (the grouped-map contract) — group by high-
+cardinality keys, never by low-cardinality ones.
 """
 
 from __future__ import annotations
@@ -33,104 +20,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-
-SESSIONIZE_SCHEMA = (
-    "user_id bigint, event_id bigint, ts timestamp, seq int, "
-    "gap_us bigint, is_session_start boolean"
-)
-
-
-def sessionize_events(
-    events: DataFrame, gap_minutes: int = 10
-) -> DataFrame:
-    """Per-user event sequencing: order by (ts, event_id), emit sequence
-    number, microsecond gap to the previous event, and session-start flag
-    (gap ≥ threshold). The pandas body sees one user's full history —
-    the grouped-map shape streaming can't express row-wise."""
-    gap_us_threshold = gap_minutes * 60 * 1_000_000
-
-    def one_user(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
-        ts_us = pdf["ts"].astype("int64") // 1000  # ns → us
-        gap = ts_us.diff()
-        out = pd.DataFrame(
-            {
-                "user_id": pdf["user_id"],
-                "event_id": pdf["event_id"],
-                "ts": pdf["ts"],
-                "seq": (pdf.index + 1).astype("int32"),
-                "gap_us": gap.fillna(-1).astype("int64"),
-                "is_session_start": gap.isna() | (gap >= gap_us_threshold),
-            }
-        )
-        return out
-
-    return (
-        events.select("user_id", "event_id", "ts")
-        .groupBy("user_id")
-        .applyInPandas(one_user, SESSIONIZE_SCHEMA)
-    )
-
-
-def _sessionize_sorted_batch(
-    pdf: pd.DataFrame, gap_us_threshold: int
-) -> pd.DataFrame:
-    """Vectorized sessionize over a batch already sorted by
-    (user_id, ts, event_id) and containing only whole groups."""
-    ts_us = pdf["ts"].astype("int64") // 1000  # ns → us
-    grouped = ts_us.groupby(pdf["user_id"].to_numpy(), sort=False)
-    gap = grouped.diff()
-    seq = grouped.cumcount() + 1
-    return pd.DataFrame(
-        {
-            "user_id": pdf["user_id"],
-            "event_id": pdf["event_id"],
-            "ts": pdf["ts"],
-            "seq": seq.astype("int32"),
-            "gap_us": gap.fillna(-1).astype("int64"),
-            "is_session_start": gap.isna() | (gap >= gap_us_threshold),
-        }
-    )
-
-
-def sessionize_events_fast(
-    events: DataFrame, gap_minutes: int = 10
-) -> DataFrame:
-    """Same result as :func:`sessionize_events`, built partition-aware:
-    hash-repartition on user_id (all of a user's rows in one partition),
-    sort within partitions so groups are contiguous and pre-ordered,
-    then a single mapInPandas pass. The only subtlety is that one
-    user's rows may straddle consecutive Arrow batches of a partition,
-    so each batch holds back its trailing (possibly incomplete) group
-    and prepends it to the next batch."""
-    gap_us_threshold = gap_minutes * 60 * 1_000_000
-
-    def per_partition(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            last_uid = pdf["user_id"].iloc[-1]
-            trailing = pdf["user_id"] == last_uid
-            carry = pdf[trailing].reset_index(drop=True)
-            whole = pdf[~trailing]
-            if len(whole):
-                yield _sessionize_sorted_batch(whole, gap_us_threshold)
-        if carry is not None and len(carry):
-            yield _sessionize_sorted_batch(carry, gap_us_threshold)
-
-    return (
-        events.select("user_id", "event_id", "ts")
-        .repartition("user_id")
-        .sortWithinPartitions("user_id", "ts", "event_id")
-        .mapInPandas(per_partition, SESSIONIZE_SCHEMA)
-    )
-
 
 PACK_SCHEMA = (
     "source string, doc_id bigint, n_chars bigint, "
@@ -171,10 +60,10 @@ def pack_sequences(
 
     A genuinely stateful per-group scan — each decision depends on the
     running fill — i.e. exactly the shape SQL window functions can NOT
-    express (the oracle needs a recursive CTE). Built like
-    ``sessionize_events_fast``: hash-repartition on the group key, sort
-    within partitions so groups arrive contiguous and ordered, then ONE
-    mapInPandas pass. Unlike sessionize, the cross-batch carry is just
+    express (the oracle needs a recursive CTE). Built partition-aware:
+    hash-repartition on the group key, sort within partitions so groups
+    arrive contiguous and ordered, then ONE mapInPandas pass (one Python
+    call per Arrow batch, not per group). The cross-batch carry is just
     three scalars (current key, open bin, fill) — no rows are buffered,
     so peak memory is one Arrow batch regardless of group size. A group
     is processed by a single task (first-fit with cross-shard bins is

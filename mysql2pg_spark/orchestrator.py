@@ -803,8 +803,12 @@ class MigrationPipeline:
 
     def _value_fix_transform(self, t: TableMeta):
         """Default per-table transform: B7 zero-date → NULL on temporal
-        columns, B8 POINT decode on geometry columns, then C90 generated
-        columns (ordered specs may chain). Returns df → df."""
+        columns that arrive as strings (a typed date or timestamp never
+        renders as ``0000-00-00``, so it is left as it is), B8 POINT
+        decode on geometry columns, then C90 generated columns (ordered
+        specs may chain). Returns df → df."""
+        from pyspark.sql.types import StringType
+
         from mysql2pg_spark.operators.generated import apply_generated_columns
         from mysql2pg_spark.sinks.jdbc_sink import (
             decode_mysql_geometry,
@@ -813,6 +817,9 @@ class MigrationPipeline:
         )
 
         def transform(df):
+            strings = {
+                f.name for f in df.schema if isinstance(f.dataType, StringType)
+            }
             for c in t.columns:
                 name = self._norm(c.name)
                 if name not in df.columns:
@@ -820,7 +827,8 @@ class MigrationPipeline:
                 ct = c.column_type.lower()
                 base = ct.split("(")[0]
                 if base in self._ZERO_DATE_TYPES:
-                    df = df.withColumn(name, normalize_zero_dates(name))
+                    if name in strings:
+                        df = df.withColumn(name, normalize_zero_dates(name))
                 elif base in self._POINT_TYPES:
                     df = df.withColumn(name, decode_mysql_point(df[name]))
                 elif base in self._GEOM_TYPES:
@@ -942,8 +950,6 @@ class MigrationPipeline:
         "log": logger.summary()}.
         """
         from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark.sql import functions as F
 
         from mysql2pg_spark.operators.validate import (
             checksum_validation,
@@ -1173,12 +1179,12 @@ class MigrationPipeline:
                         except Exception as e:
                             logger.table_error(stage, a.target, e)
 
-            # Observed-path destination checksums BATCH into one union
-            # job (round 12): the per-table collect() was ~0.7 s of
-            # fixed Spark-job cost per table — a 1,000-small-table
-            # migration paid ~12 min of pure scheduling. One job still
-            # scans each table once (the work is identical); only the
-            # N-1 extra job launches disappear. A batch failure falls
+            # Observed-path destination checksums ride ONE job: each
+            # table's read-back carries its checksum as an Observation
+            # and one noop write scans their union. The per-table
+            # collect() was ~0.7 s of fixed Spark-job cost per table
+            # (round 12), and a union of per-table aggregates still ran
+            # one shuffle-map job per table under AQE. A failure falls
             # back to the per-table loop so keep-going error semantics
             # are preserved.
             observed_checks: list[tuple[Action, object]] = []
@@ -1196,43 +1202,39 @@ class MigrationPipeline:
                 except Exception as e:
                     logger.table_error(stage, a.target, e)
             if observed_checks:
-
-                def dst_checksum(a: Action, dst):
-                    cols = src_checksums[a.target][1]
-                    return table_checksum(dst.select(*cols))
-
                 try:
                     from functools import reduce
 
-                    tagged = [
-                        dst_checksum(a, dst).withColumn(
-                            "_table", F.lit(a.target)
+                    frames, observations = [], []
+                    for a, dst in observed_checks:
+                        df, obs, _ = observe_checksum(
+                            dst.select(*src_checksums[a.target][1]),
+                            f"dst_checksum_{a.target}",
                         )
-                        for a, dst in observed_checks
-                    ]
-                    got = {
-                        r["_table"]: {
-                            k: v
-                            for k, v in r.asDict().items()
-                            if k != "_table"
-                        }
-                        for r in reduce(
-                            lambda x, y: x.unionByName(y), tagged
-                        ).collect()
-                    }
-                    for a, _dst in observed_checks:
+                        frames.append(df.select())
+                        observations.append(obs)
+                    reduce(lambda x, y: x.union(y), frames).write.format(
+                        "noop"
+                    ).mode("overwrite").save()
+                    got = [get_observation(obs) for obs in observations]
+                    if None in got:
+                        raise RuntimeError("a read-back checksum is missing")
+                    for (a, _dst), row in zip(observed_checks, got):
                         validation[a.target] = verdict(
-                            src_checksums[a.target][0], got[a.target]
+                            src_checksums[a.target][0], row
                         )
                 except Exception:
-                    # batched job failed (one bad table fails the whole
-                    # union): re-run per table so every OTHER table
-                    # still validates and only the bad one errors
+                    # one bad table fails the whole scan: re-run per
+                    # table so every OTHER table still validates and
+                    # only the bad one errors
                     for a, dst in observed_checks:
                         try:
+                            cols = src_checksums[a.target][1]
                             validation[a.target] = verdict(
                                 src_checksums[a.target][0],
-                                dst_checksum(a, dst).collect()[0].asDict(),
+                                table_checksum(dst.select(*cols))
+                                .collect()[0]
+                                .asDict(),
                             )
                         except Exception as e:
                             logger.table_error(stage, a.target, e)

@@ -16,49 +16,53 @@ from mysql2pg_spark.plans.registry import query
 from mysql2pg_spark.tables import fan_out, load_table
 
 # The MinHash family's shared stages are plain values one query builds
-# and uses: shingles → signatures → (verify sets, candidates) → verified
-# pairs. A query that reads a stage from more than one job — an eager
-# plan-time statistic (the injectivity check, the max-bucket scalar,
-# d15's profile) and then its main job — gets it pinned with a lazy
-# localCheckpoint, so the stage's kernel runs once per query. Nothing
+# and uses: shingles (with the signatures fused into the same kernel
+# pass) → signatures → (verify sets, candidates) → verified pairs.
+# The kernel's output is pinned with a lazy localCheckpoint, so the
+# kernel runs once per query although an eager plan-time statistic
+# (the max-bucket/injectivity query, d15's profile) and the main job
+# both read it. "Lazy" holds only while no exchange sits below the
+# pin: under AQE, a localCheckpoint over a shuffle runs that shuffle's
+# map stage as a job when the frame is built. Hence the kernel input
+# is fanned out by size, not by core count (see ``shingles``). Nothing
 # outlives the query: a rewrite of the same path or a sibling session
 # always builds from the current files.
 
 
 def shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct word-NGRAM shingle sets per document (pinned)."""
-    # round 16: fan_out the docs scan ahead of the shingle kernel —
-    # the sf1 leg reads documents as 2 splits, so tokenize+shingle
-    # ran on 2 of 32 cores (no-op at real scale; with the Arrow
-    # kernel this took the sf1 signature stage 35 s → 1.5 s).
-    d = fan_out(load_table(spark, sf_dir, "documents"))
-    return D.shingle_sets(d, "doc_id", "text", NGRAM).localCheckpoint(
-        eager=False
+    """Per document: the distinct word-NGRAM shingle set and its
+    NUM_HASHES MinHash columns, from one Arrow kernel pass (pinned)."""
+    # round 16: fan_out the docs scan ahead of the kernel — the sf1
+    # leg reads documents as 2 splits, so tokenize+shingle ran on 2 of
+    # 32 cores. The kernel is Python-bound (md5 per shingle: ~0.2 s of
+    # one core per 128 KiB of parquet text, measured), so a corpus
+    # under 256 KiB stays one narrow task with no exchange under the
+    # pin, and a bigger one spreads over up to every core.
+    d = fan_out(
+        load_table(spark, sf_dir, "documents"), bytes_per_partition=1 << 17
     )
-
-
-def signatures(sh: DataFrame) -> DataFrame:
-    """NUM_HASHES MinHash signatures over the shingle stage (pinned:
-    the band self-join and the capped stage's max-bucket job read it
-    more than once)."""
-    return D._signatures_from_shingles(
-        sh, "doc_id", NUM_HASHES
+    return D.shingle_sets(
+        d, "doc_id", "text", NGRAM, NUM_HASHES
     ).localCheckpoint(eager=False)
 
 
-def verify_sets(sh: DataFrame) -> DataFrame:
+def signatures(sh: DataFrame) -> DataFrame:
+    """NUM_HASHES MinHash signatures: a projection of the pinned shingle
+    stage (documents with no shingle have no signature)."""
+    return D._signatures_from_shingles(sh, "doc_id", NUM_HASHES)
+
+
+def verify_sets(sh: DataFrame, injective: bool) -> DataFrame:
     """The shingle arrays every Jaccard VERIFY consumes (round 16, guide
-    §2.3): int64-hashed arrays when xxhash64 is injective on this
+    §2.3): int64-hashed arrays when xxhash64 is ``injective`` on this
     corpus' vocabulary (at sf1 the hashed payload cut the 3.96M-pair
     verify wall ~3×), else the string arrays unchanged. Verify results
     are bit-identical either way — injectivity makes every per-pair
-    intersection count equal the string count. Signatures keep reading
-    the string stage (they md5 the STRINGS).
-
-    EAGER: runs the O(vocabulary) injectivity job once per call."""
-    if D.shingle_hash_is_injective(sh):
+    intersection count equal the string count. ``injective`` comes from
+    ``D.plan_time_stats`` or ``D.shingle_hash_is_injective`` (EAGER)."""
+    if injective:
         return D.hashed_shingle_sets(sh, "doc_id")
-    return sh  # collision on this corpus — exactness over speed
+    return sh.select("doc_id", "shingles")  # exactness over speed
 
 
 # Production bucket cap for the default near-dup path (round 15 —
@@ -78,12 +82,16 @@ PROD_MAX_BUCKET = 64
 
 def verified_pairs(sh: DataFrame, sigs: DataFrame) -> DataFrame:
     """Near-dup pairs from given stages: capped candidates (see
-    PROD_MAX_BUCKET) verified by exact Jaccard ≥ JACCARD_T. Eager:
-    the injectivity and max-bucket jobs run here."""
+    PROD_MAX_BUCKET) verified by exact Jaccard ≥ JACCARD_T. EAGER: one
+    query collects both plan-time statistics, the max bucket and the
+    hash injectivity."""
+    max_n, injective = D.plan_time_stats(sigs, sh, "doc_id", NUM_HASHES)
     cands, _stats = D.lsh_candidate_pairs_capped(
-        sigs, "doc_id", NUM_HASHES, max_bucket=PROD_MAX_BUCKET
+        sigs, "doc_id", NUM_HASHES, max_bucket=PROD_MAX_BUCKET, max_n=max_n
     )
-    return D.verify_jaccard(cands, verify_sets(sh), "doc_id", JACCARD_T)
+    return D.verify_jaccard(
+        cands, verify_sets(sh, injective), "doc_id", JACCARD_T
+    )
 
 
 def neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -632,7 +640,7 @@ def d16_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = shingles(spark, sf_dir)
     return D.lsh_tuning_profile(
         signatures(sh),
-        verify_sets(sh),
+        verify_sets(sh, D.shingle_hash_is_injective(sh)),
         "doc_id",
         JACCARD_T,
         rows_per_band_configs=_TUNING_CONFIGS,
@@ -862,7 +870,7 @@ def d15_capped_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pipeline profiles inline (rows_per_band=None) to pick the banding
     sh = shingles(spark, sf_dir)
     return D.capped_neardup_pipeline(
-        verify_sets(sh),
+        verify_sets(sh, D.shingle_hash_is_injective(sh)),
         signatures(sh),
         "doc_id",
         JACCARD_T,

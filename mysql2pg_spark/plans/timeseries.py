@@ -11,9 +11,9 @@ import itertools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from mysql2pg_spark.operators.asof import asof_join
-from mysql2pg_spark.operators.grouped import sessionize_events_fast
 from mysql2pg_spark.operators.rangejoin import range_lookback_join
 from mysql2pg_spark.plans.registry import query
 from mysql2pg_spark.plans.relational import DEC, dsum
@@ -160,12 +160,32 @@ def a01_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# p01 — pandas grouped-map (per-user sessionization). Runs the
-# partition-aware mapInPandas formulation (per-batch plumbing) rather
-# than naive applyInPandas (per-group plumbing, ~18× slower with many
-# small groups); operators/grouped.py documents the trade and a test
-# pins both implementations to identical output.
+# p01 — per-user sessionization (the name is kept from its pandas
+# grouped-map days). Sequence number, gap to the previous event and the
+# session flag are window functions over one user-ordered window: one
+# shuffle on user_id, one sort, no Python worker.
 # --------------------------------------------------------------------------
+def sessionize(events: DataFrame, gap_minutes: int = 10) -> DataFrame:
+    """Per-user event sequencing ordered by (ts, event_id): ``seq``
+    (1-based), ``gap_us`` (microseconds since the user's previous event,
+    -1 on the first) and ``is_session_start`` (first event, or a gap of
+    at least ``gap_minutes``)."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    ts_us = F.unix_micros("ts")
+    prev = F.lag(ts_us).over(w)
+    gap = ts_us - prev
+    return events.select(
+        "user_id",
+        "event_id",
+        "ts",
+        F.row_number().over(w).cast("int").alias("seq"),
+        F.coalesce(gap, F.lit(-1)).alias("gap_us"),
+        (prev.isNull() | (gap >= gap_minutes * 60 * 1_000_000)).alias(
+            "is_session_start"
+        ),
+    )
+
+
 @query(
     "p01_grouped_map_sessionize",
     oracle="""
@@ -180,8 +200,7 @@ ORDER BY user_id, seq
 """,
 )
 def p01_grouped_map_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "events")
-    return sessionize_events_fast(e, gap_minutes=10)
+    return sessionize(load_table(spark, sf_dir, "events"), gap_minutes=10)
 
 
 # --------------------------------------------------------------------------

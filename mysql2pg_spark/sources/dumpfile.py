@@ -14,8 +14,8 @@ bodies are never rows. ``load_data_source_reader`` applies the rule on
 one of two paths, chosen by size:
 
 - a plain local dump of at most ``SMALL_DUMP_BYTES`` is split into
-  statements in one driver-side pass (``small_dump_insert_pairs``), so
-  an INSERT may span lines;
+  statements in one driver-side pass (``read_small_dump``), so an
+  INSERT may span lines, and no Spark job runs before its rows;
 - a bigger dump, a glob or a remote URI is read line by line
   (``read_dump_inserts``). mysqldump writes each extended INSERT as one
   line, so ``spark.read.text`` splits a multi-TB dump across tasks
@@ -25,8 +25,11 @@ one of two paths, chosen by size:
   NULLs, which built-ins can't split).
 
 An INSERT/REPLACE into T that is not a VALUES list (INSERT … SELECT, or
-an INSERT spread over several lines on the line path) fails T by name
-on either path; its rows are never dropped silently.
+an INSERT spread over several lines on the line path), one with text
+after its tuples (ON DUPLICATE KEY UPDATE), or one that qualifies T
+with a database other than the dump's own (``USE`` / the mysqldump
+header) fails T by name on either path; its rows are never dropped
+silently or loaded wrongly.
 """
 
 from __future__ import annotations
@@ -34,6 +37,7 @@ from __future__ import annotations
 import logging
 
 from collections.abc import Iterator
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -98,6 +102,8 @@ def split_tuples(blob: str) -> list[list[str | bytes | None]]:
     plus mysqldump's binary spellings: ``0xDEADBEEF`` hex literals and
     ``X'1f'`` decode to ``bytes``; ``_binary '...'`` / ``_utf8mb4 '...'``
     / ``N'...'`` introducers are stripped (the quoted text is the value).
+    Any other text between or after the tuples raises ``ValueError``:
+    an ``ON DUPLICATE KEY UPDATE v=VALUES(v)`` tail is not a row.
     """
     rows: list[list[str | bytes | None]] = []
     cur: list[str | bytes | None] = []
@@ -152,6 +158,11 @@ def split_tuples(blob: str) -> list[list[str | bytes | None]]:
             if ch == "(":
                 in_tuple = True
                 cur = []
+            elif not (ch.isspace() or ch in ",;"):
+                raise ValueError(
+                    f"the text after its VALUES tuples ({blob[i:i + 40]!r},"
+                    " e.g. ON DUPLICATE KEY UPDATE) is not a row"
+                )
             i += 1
             continue
         if ch in ("'", '"'):
@@ -229,35 +240,60 @@ def _coerce_cell(v, want_bytes: bool):
 #: One row statement of a dump, matched against a whole statement (the
 #: driver pass) or against one line (the line path, where it also runs
 #: JVM-side in ``regexp_extract``, so it stays Java-regex compatible).
-#: Group 1 is the table, group 2 the optional ``--complete-insert``
-#: column list, group 3 the VALUES tuples. The VALUES tail is optional:
-#: a statement that names a table but is not a VALUES list (INSERT …
-#: SELECT, or the first line of an INSERT spread over several lines)
-#: still yields its table, without group 3, and ``_typed_rows`` refuses
-#: it.
+#: Group 1 is the optional schema qualifier (``db.t``), group 2 the
+#: table, group 3 the optional ``--complete-insert`` column list, group
+#: 4 the VALUES tuples. The VALUES tail is optional: a statement that
+#: names a table but is not a VALUES list (INSERT … SELECT, or the
+#: first line of an INSERT spread over several lines) still yields its
+#: table, without group 4, and ``_typed_rows`` refuses it.
 _INSERT_RE = _tokre.compile(
-    r"(?is)^\s*(?:INSERT\s+(?:IGNORE\s+)?|REPLACE\s+)INTO\s+`?(\w+)`?"
+    r"(?is)^\s*(?:INSERT\s+(?:IGNORE\s+)?|REPLACE\s+)INTO\s+"
+    r"(?:`?(\w+)`?\s*\.\s*)?`?(\w+)`?"
     r"(?:\s*(?:\(([^)]*)\))?\s*VALUES\s*(\(.*\))\s*;?\s*$)?"
 )
 
+#: The database a dump declares as its own: a ``USE `db``` statement,
+#: or mysqldump's ``-- Host: …  Database: db`` header. Only these may
+#: qualify an INSERT's table. Java-regex compatible (the line path
+#: matches it JVM-side).
+_OWN_DB_RE = _tokre.compile(
+    r"(?i)^\s*(?:USE\s+`?(\w+)`?\s*;?\s*$|--.*\bDatabase:\s*`?(\w+)`?)"
+)
+
+
+def _own_db(line: str) -> str | None:
+    mo = _OWN_DB_RE.match(line)
+    return (mo.group(1) or mo.group(2)).lower() if mo else None
+
 #: A plain local dump of at most this many bytes is read by one
-#: driver-side statement pass (``small_dump_insert_pairs``); a bigger
+#: driver-side statement pass (``read_small_dump``); a bigger
 #: one, a glob or a remote URI is read line by line
 #: (``read_dump_inserts``).
 SMALL_DUMP_BYTES = 16 << 20
 
 
-def _typed_rows(matches, schema: StructType) -> Iterator[tuple]:
-    """``_INSERT_RE`` groups ``(table, column list, VALUES tuples)`` →
-    one cell tuple per row in ``schema`` order: bytes for binary
-    columns, text for the rest, for ``_typed_frame`` to cast. The one
-    row builder of both dump paths. A statement without VALUES tuples
-    fails its table by name: its rows would otherwise vanish."""
+def _typed_rows(
+    matches, schema: StructType, databases: frozenset
+) -> Iterator[tuple]:
+    """``_INSERT_RE`` groups ``(qualifier, table, column list, VALUES
+    tuples)`` → one cell tuple per row in ``schema`` order: bytes for
+    binary columns, text for the rest, for ``_typed_frame`` to cast.
+    The one row builder of both dump paths. A statement it cannot read
+    whole fails its table by name, so its rows never vanish: no VALUES
+    tuples, text after them (``ON DUPLICATE KEY UPDATE``), or a schema
+    qualifier other than one of the dump's own ``databases``."""
     from pyspark.sql.types import BinaryType
 
     cols = [f.name for f in schema.fields]
     is_binary = [isinstance(f.dataType, BinaryType) for f in schema.fields]
-    for table, collist, blob in matches:
+    for qual, table, collist, blob in matches:
+        if qual and qual.lower() not in databases:
+            own = ", ".join(f"`{d}`" for d in sorted(databases)) or "none"
+            raise ValueError(
+                f"dump table `{table}`: an INSERT names it `{qual}`.`{table}`"
+                f", outside the dump's own database ({own}); refusing to "
+                "load another database's rows into it"
+            )
         if not blob:
             raise ValueError(
                 f"dump table `{table}`: an INSERT/REPLACE into it is not "
@@ -265,7 +301,13 @@ def _typed_rows(matches, schema: StructType) -> Iterator[tuple]:
                 "spread over several lines of a dump read line by line); "
                 "refusing to drop its rows"
             )
-        for r in _align_rows(split_tuples(blob), collist or "", cols):
+        try:
+            tuples = split_tuples(blob)
+        except ValueError as e:
+            raise ValueError(
+                f"dump table `{table}`: {e}; refusing to load it"
+            ) from None
+        for r in _align_rows(tuples, collist or "", cols):
             yield tuple(
                 _coerce_cell(r[j] if j < len(r) else None, b)
                 for j, b in enumerate(is_binary)
@@ -309,15 +351,16 @@ def read_dump_inserts(
 
 
 def _line_inserts(
-    lines: DataFrame, table: str, schema: StructType | str
+    lines: DumpLines, table: str, schema: StructType | str
 ) -> DataFrame:
     """``table``'s rows from ``_dump_lines`` output, outside
     DELIMITER-switched bodies."""
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     cols = [f.name for f in schema.fields]
-    named = F.regexp_extract("value", _INSERT_RE.pattern, 1)
-    matched = lines.filter(
+    databases = lines.databases
+    named = F.regexp_extract("value", _INSERT_RE.pattern, 2)
+    matched = lines.frame.filter(
         ~F.col("body") & (F.lower(named) == table.lower())
     ).select("value")
 
@@ -326,7 +369,7 @@ def _line_inserts(
 
         for pdf in it:
             groups = (_INSERT_RE.match(v).groups() for v in pdf["value"])
-            rows = list(_typed_rows(groups, schema))
+            rows = list(_typed_rows(groups, schema, databases))
             yield pd.DataFrame(rows, columns=cols, dtype="object")
 
     cells = matched.mapInPandas(parse, _cell_schema(schema))
@@ -334,7 +377,7 @@ def _line_inserts(
 
 
 def parse_blob_pairs_local(
-    spark, matches: list[tuple], schema: StructType
+    spark, matches: list[tuple], schema: StructType, databases: frozenset
 ) -> DataFrame:
     """``_INSERT_RE`` groups → typed DataFrame, built ON THE DRIVER: on
     the small-dump path the groups are already driver-local kilobytes,
@@ -345,7 +388,8 @@ def parse_blob_pairs_local(
     line path."""
     return _typed_frame(
         spark.createDataFrame(
-            list(_typed_rows(matches, schema)), _cell_schema(schema)
+            list(_typed_rows(matches, schema, databases)),
+            _cell_schema(schema),
         ),
         schema,
     )
@@ -419,15 +463,25 @@ def iter_sql_statements(text: str) -> Iterator[str]:
         yield tail
 
 
-def small_dump_insert_pairs(
-    path: str | list[str],
-) -> dict[str, list[tuple]] | None:
-    """``_INSERT_RE`` groups per table (lowercase name) of a plain local
-    dump of at most ``SMALL_DUMP_BYTES``, from one driver-side pass, or
-    ``None`` for a bigger dump or a glob/remote URI (→
-    ``read_dump_inserts``). Below the size gate a many-small-table
-    migration pays one ~ms pass instead of one full-dump Spark text scan
-    per table.
+class SmallDump(NamedTuple):
+    """What ``load_data_source_reader`` needs of a small local dump,
+    from one driver-side pass: no Spark job."""
+
+    #: ``_INSERT_RE`` groups per table (lowercase name)
+    inserts: dict[str, list[tuple]]
+    #: every other statement outside DELIMITER-switched sections (the
+    #: LOAD DATA statements are among them)
+    statements: list[str]
+    #: the dump's own databases (``_OWN_DB_RE``), lowercase
+    databases: frozenset
+
+
+def read_small_dump(path: str | list[str]) -> SmallDump | None:
+    """A plain local dump of at most ``SMALL_DUMP_BYTES``, split into
+    statements in one driver-side pass, or ``None`` for a bigger dump
+    or a glob/remote URI (→ ``read_dump_inserts``). Below the size gate
+    a many-small-table migration pays one ~ms pass instead of one
+    full-dump Spark text scan per table.
 
     Lines inside DELIMITER-switched sections are dropped (a trigger-body
     INSERT is body text, not rows, as on the line path); the rest is
@@ -458,7 +512,9 @@ def small_dump_insert_pairs(
             return None
     except OSError:
         return None
-    out: dict[str, list[tuple]] = {}
+    inserts: dict[str, list[tuple]] = {}
+    statements: list[str] = []
+    databases: set[str] = set()
     for f in files:
         with _open_text(f) as fh:
             text = fh.read()
@@ -471,11 +527,15 @@ def small_dump_insert_pairs(
                 continue
             if not protected:
                 kept.append(line)
+                if db := _own_db(line):
+                    databases.add(db)
         for stmt in iter_sql_statements("".join(kept)):
             mo = _INSERT_RE.match(stmt)
             if mo:
-                out.setdefault(mo.group(1).lower(), []).append(mo.groups())
-    return out
+                inserts.setdefault(mo.group(2).lower(), []).append(mo.groups())
+            else:
+                statements.append(stmt)
+    return SmallDump(inserts, statements, frozenset(databases))
 
 
 def scan_dump_tables(spark: SparkSession, path: str) -> DataFrame:
@@ -484,7 +544,7 @@ def scan_dump_tables(spark: SparkSession, path: str) -> DataFrame:
     text, aggregate map-side combined. An ``INSERT INTO audit_log …``
     line inside a routine/trigger body is body text, not bulk, and is
     not counted."""
-    return _tables_in(_dump_lines(spark, path))
+    return _tables_in(_dump_lines(spark, path).frame)
 
 
 def _tables_in(lines: DataFrame) -> DataFrame:
@@ -492,7 +552,7 @@ def _tables_in(lines: DataFrame) -> DataFrame:
     return (
         lines.filter(~F.col("body"))
         .select(
-            F.regexp_extract("value", _INSERT_RE.pattern, 1).alias("table")
+            F.regexp_extract("value", _INSERT_RE.pattern, 2).alias("table")
         )
         .filter(F.col("table") != "")
         .groupBy("table")
@@ -1279,29 +1339,44 @@ def functions_from_text(
 _DELIM_DIRECTIVE_RE = _re.compile(r"(?i)^\s*DELIMITER\s+(\S+)\s*$")
 
 
-def _dump_lines(spark: SparkSession, path: str) -> DataFrame:
+class DumpLines(NamedTuple):
+    """``_dump_lines`` output."""
+
+    #: ``(mid, value, body)``, one row per line of the dump
+    frame: DataFrame
+    #: the dump's own databases (``_OWN_DB_RE``), lowercase
+    databases: frozenset
+
+
+def _dump_lines(spark: SparkSession, path: str) -> DumpLines:
     """``spark.read.text(path)`` as ``(mid, value, body)``: the one
     DELIMITER-aware view every distributed dump scan starts from.
     ``body`` marks the lines of DELIMITER-switched regions, where
     mysqldump writes routine and trigger bodies: an ``INSERT INTO t
     VALUES (NEW.id, …)`` there is body text, not a row of ``t``.
 
-    The directive lines come back in one small job (O(#routines) rows).
-    ``mid`` (``monotonically_increasing_id``) orders the lines of a file
-    and is stable across reads of the same input (same splits → same
-    partition ids and offsets), so their intervals push back into the
-    line filter. Callers that scan one dump several times hold on to
-    the returned frame instead of re-running that job."""
+    The directive lines and the lines naming the dump's own database
+    come back in one small job (O(#routines) rows). ``mid``
+    (``monotonically_increasing_id``) orders the lines of a file and is
+    stable across reads of the same input (same splits → same partition
+    ids and offsets), so their intervals push back into the line
+    filter. Callers that scan one dump several times hold on to the
+    result instead of re-running that job."""
     lines = spark.read.text(path).select(
         F.monotonically_increasing_id().alias("mid"), "value"
     )
-    directives = [
-        (r.mid, _DELIM_DIRECTIVE_RE.match(r.value).group(1))
-        for r in lines.filter(
+    marks = (
+        lines.filter(
             F.col("value").rlike(_DELIM_DIRECTIVE_RE.pattern)
+            | F.col("value").rlike(_OWN_DB_RE.pattern)
         )
         .sort("mid")
         .collect()
+    )
+    directives = [
+        (r.mid, mo.group(1))
+        for r in marks
+        if (mo := _DELIM_DIRECTIVE_RE.match(r.value))
     ]
     body = F.lit(False)
     for start, end in _protected_intervals(directives):
@@ -1309,7 +1384,8 @@ def _dump_lines(spark: SparkSession, path: str) -> DataFrame:
         if end != float("inf"):
             c = c & (F.col("mid") < F.lit(end))
         body = body | c
-    return lines.withColumn("body", body)
+    databases = frozenset(filter(None, (_own_db(r.value) for r in marks)))
+    return DumpLines(lines.withColumn("body", body), databases)
 
 
 def _protected_intervals(
@@ -1355,7 +1431,7 @@ def dump_schema_text(path: str, spark: SparkSession | None = None) -> str:
     itself only ever moves through the INSERT readers
     (``load_data_source_reader``)."""
     if spark is not None:
-        return _schema_text(_dump_lines(spark, path))
+        return _schema_text(_dump_lines(spark, path).frame)
     keep: list[str] = []
     delim = ";"
     with _open_text(path) as fh:

@@ -332,15 +332,16 @@ def load_data_specs(
     through ``dump_schema_text``'s distributed INSERT-drop filter (a
     multi-TB dump never funnels through the driver); LOAD DATA lines
     survive that filter because only INSERT/REPLACE bulk is dropped."""
-    from mysql2pg_spark.sources.dumpfile import dump_schema_text
+    from mysql2pg_spark.sources.dumpfile import (
+        dump_schema_text,
+        iter_sql_statements,
+    )
 
-    return _specs_in(dump_schema_text(path, spark))
+    return _specs_in(iter_sql_statements(dump_schema_text(path, spark)))
 
 
-def _specs_in(schema_text: str) -> list[LoadDataSpec]:
-    from mysql2pg_spark.sources.dumpfile import iter_sql_statements
-
-    specs = map(parse_load_data, iter_sql_statements(schema_text))
+def _specs_in(statements) -> list[LoadDataSpec]:
+    specs = map(parse_load_data, statements)
     return [s for s in specs if s is not None]
 
 
@@ -505,17 +506,20 @@ def load_data_source_reader(
     goes on as for any failed table; its rows are never dropped
     silently.
 
-    The DELIMITER directives are scanned once per factory. On the line
-    path, with LOAD DATA present, one inventory pass decides which
-    tables have INSERT rows, so a table fed only by LOAD DATA pays no
-    full-dump scan."""
+    A small dump's DELIMITER sections, LOAD DATA statements and own
+    database come from the same driver-side pass as its rows, so no
+    Spark job runs before the first row. On the line path they are
+    scanned once per factory, and, with LOAD DATA present, one
+    inventory pass decides which tables have INSERT rows, so a table
+    fed only by LOAD DATA pays no full-dump scan."""
     from mysql2pg_spark.sources.dumpfile import (
         _dump_lines,
         _line_inserts,
         _schema_text,
         _tables_in,
+        iter_sql_statements,
         parse_blob_pairs_local,
-        small_dump_insert_pairs,
+        read_small_dump,
     )
 
     if base_dir is None:
@@ -528,19 +532,21 @@ def load_data_source_reader(
             # "specs" is the init sentinel, so it must be assigned LAST
             # (a racing thread that sees it present must also see the
             # rest; worst case both threads run the same idempotent init)
-            lines = _dump_lines(spark, script_path)
-            by_table: dict[str, list[LoadDataSpec]] = {}
-            for spec in _specs_in(_schema_text(lines)):
-                by_table.setdefault(spec.table.lower(), []).append(spec)
-            small = small_dump_insert_pairs(script_path)
+            small = read_small_dump(script_path)
+            lines = None
             if small is not None:
-                insert_tables = set(small)
-            elif by_table:
+                specs = _specs_in(small.statements)
+                insert_tables = set(small.inserts)
+            else:
+                lines = _dump_lines(spark, script_path)
+                text = _schema_text(lines.frame)
+                specs = _specs_in(iter_sql_statements(text))
                 insert_tables = {
-                    r.table.lower() for r in _tables_in(lines).collect()
-                }
-            else:  # no LOAD DATA: every table reads its INSERT rows
-                insert_tables = None
+                    r.table.lower() for r in _tables_in(lines.frame).collect()
+                } if specs else None  # None: every table reads its INSERTs
+            by_table: dict[str, list[LoadDataSpec]] = {}
+            for spec in specs:
+                by_table.setdefault(spec.table.lower(), []).append(spec)
             state.update(lines=lines, small=small, inserts=insert_tables)
             state["specs"] = by_table
         table = plan["table"]
@@ -557,9 +563,13 @@ def load_data_source_reader(
             or table.lower() in state["inserts"]
         ):
             if state["small"] is not None:
+                small = state["small"]
                 parts.append(
                     parse_blob_pairs_local(
-                        spark, state["small"].get(table.lower(), []), schema
+                        spark,
+                        small.inserts.get(table.lower(), []),
+                        schema,
+                        small.databases,
                     )
                 )
             else:

@@ -13,6 +13,21 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    BooleanType,
+    DateType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 TABLE_NAMES = (
     "region",
@@ -164,9 +179,75 @@ def parquet_endpoints(loader, sink_dir: str) -> dict:
     }
 
 
+#: Spark writes its own schema into this footer key and reads it back in
+#: preference to the parquet types (char/varchar, UDTs, field metadata).
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema ``spark.read.parquet(path)`` would infer, read from the
+    file's footer on the driver, or None where it might differ.
+
+    Inference is a Spark job (the footer read runs as a distributed
+    task); ``spark.read.schema(s).parquet(path)`` runs none. Only the
+    Arrow types whose Spark type is exactly what Spark's own parquet
+    inference yields are mapped. Everything else, and every file whose
+    footer Spark reads differently (an INT96 column, Spark's own row
+    metadata), gets None, so the caller infers as before."""
+    if not os.path.isfile(path):
+        return None  # a directory or URI: Spark lists and merges it
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    meta = pq.read_metadata(path)
+    if _SPARK_ROW_METADATA in (meta.metadata or {}):
+        return None
+    leaves = [meta.schema.column(i) for i in range(meta.num_columns)]
+    if any(c.physical_type == "INT96" for c in leaves):
+        return None
+    conf = spark.conf.get
+    ntz = conf("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+    bin_str = conf("spark.sql.parquet.binaryAsString", "false")
+    plain = {
+        pa.int32(): IntegerType(),
+        pa.int64(): LongType(),
+        pa.float32(): FloatType(),
+        pa.float64(): DoubleType(),
+        pa.bool_(): BooleanType(),
+        pa.string(): StringType(),
+        pa.binary(): StringType() if bin_str == "true" else BinaryType(),
+        pa.date32(): DateType(),
+    }
+
+    def spark_type(t):
+        if pa.types.is_list(t):
+            elem = spark_type(t.value_type)
+            return elem and ArrayType(elem, t.value_field.nullable)
+        if pa.types.is_timestamp(t):
+            if t.unit != "us":
+                return None  # ns is a long under nanosAsLong; ms/s differ
+            if t.tz is None and ntz == "true":
+                return TimestampNTZType()
+            return TimestampType()
+        return plain.get(t)
+
+    fields = []
+    for f in meta.schema.to_arrow_schema():
+        t = spark_type(f.type)
+        if t is None:
+            return None
+        fields.append(StructField(f.name, t, f.nullable))
+    return StructType(fields)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One corpus table. The schema comes from the footer on the driver
+    (``footer_schema``), so loading a table runs no Spark job."""
     _pin_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     if name == "events":
         df = normalize_events_ts(df)
     return df

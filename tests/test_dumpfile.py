@@ -113,7 +113,8 @@ def test_read_dump_inserts_column_list(spark, tmp_path):
 
 #: One dump holding every case the two INSERT paths of
 #: load_data_source_reader must agree on.
-PARITY_DUMP = """INSERT INTO `ml` VALUES (1,'a'),(2,'b');
+PARITY_DUMP = """-- Host: localhost    Database: shop
+INSERT INTO `ml` VALUES (1,'a'),(2,'b');
 INSERT INTO `ml` VALUES
 (3,'c'),
 (4,'d');
@@ -130,10 +131,15 @@ REPLACE INTO `verbs` VALUES (2,'r');
 REPLACE INTO verbs (name, id) VALUES ('c', 3);
 INSERT INTO `bin` VALUES (1,0x00FF10,_binary 'ab\\'c'),(2,NULL,0x68690a);
 INSERT INTO `sel` SELECT * FROM `ml`;
+INSERT INTO `upsert` VALUES (1,'x') ON DUPLICATE KEY UPDATE v=VALUES(v);
+INSERT INTO shop.q VALUES (1,'own');
+INSERT INTO `shop`.`q` VALUES (2,'own quoted');
+INSERT INTO archive.old VALUES (1,'foreign');
 """
 
 PARITY_CASES = {
     # name: (table, schema, rows); None is a refusal naming the table
+    # as not a VALUES list, a string a refusal naming it with that text
     "multiline": (
         "ml", "id bigint, v string", [(1, "a"), (2, "b"), (3, "c"), (4, "d")]
     ),
@@ -150,6 +156,9 @@ PARITY_CASES = {
         [(1, b"\x00\xff\x10", "ab'c"), (2, None, "hi\n")],
     ),
     "insert_select": ("sel", "id bigint, v string", None),
+    "on_duplicate": ("upsert", "v string, w string", "not a row"),
+    "qualified": ("q", "id bigint, v string", [(1, "own"), (2, "own quoted")]),
+    "foreign_qualifier": ("old", "id bigint, v string", "`archive`.`old`"),
 }
 #: read line by line, an INSERT spread over several lines is refused
 LINE_PATH_REFUSES = {"multiline"}
@@ -186,8 +195,38 @@ def test_dump_paths_agree(spark, tmp_path, monkeypatch, case):
         if rows is None or (line_path and case in LINE_PATH_REFUSES):
             with pytest.raises(Exception, match=f"`{table}`.*not a VALUES"):
                 read()
+        elif isinstance(rows, str):
+            with pytest.raises(Exception, match=f"table `{table}`.*{rows}"):
+                read()
         else:
             assert read() == rows
+
+
+def test_small_dump_fires_no_job_before_its_rows(spark, tmp_path):
+    """A small local dump's DELIMITER sections, LOAD DATA statements and
+    own database come from the driver-side pass that reads its rows:
+    building the factory's frame runs no Spark job."""
+    from mysql2pg_spark.sources.loaddata import load_data_source_reader
+
+    (tmp_path / "t.tsv").write_text("3\tc\n")
+    p = tmp_path / "small.sql"
+    p.write_text(
+        "USE `shop`;\n"
+        "INSERT INTO `t` VALUES (1,'a');\n"
+        "INSERT INTO shop.t VALUES (2,'b');\n"
+        "LOAD DATA INFILE 't.tsv' INTO TABLE `t`;\n"
+        "DELIMITER ;;\n"
+        "CREATE TRIGGER g AFTER INSERT ON t FOR EACH ROW BEGIN\n"
+        "INSERT INTO `t` VALUES (NEW.id,'trigger');\n"
+        "END ;;\n"
+        "DELIMITER ;\n"
+    )
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    reader = load_data_source_reader(str(p), {"t": "id bigint, v string"})
+    df = reader(spark, {"table": "t"})
+    assert set(tracker.getJobIdsForGroup(None)) == before
+    assert sorted(df.collect()) == [(1, "a"), (2, "b"), (3, "c")]
 
 
 def test_dump_verbs_insert_ignore_and_replace(spark, tmp_path):
@@ -229,7 +268,7 @@ def test_gzipped_dump_both_paths(spark, tmp_path):
     df = read_dump_inserts(spark, str(p), "t", "id bigint, name string")
     assert df.count() == 200
 
-    assert dumpfile.small_dump_insert_pairs(str(p)) is not None
+    assert dumpfile.read_small_dump(str(p)) is not None
     reader = load_data_source_reader(str(p), {"t": "id bigint, name string"})
     rows = {r.id: r.name for r in reader(spark, {"table": "t"}).collect()}
     assert len(rows) == 200 and rows[199] == "n199"

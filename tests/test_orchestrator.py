@@ -213,6 +213,85 @@ def test_file_backed_execute_applies_value_fix(tmp_path, spark):
     assert rows == {1: (True, "2024-01-02 03:04:05"), 2: (False, None)}
 
 
+def test_value_fix_casts_no_typed_temporal_to_string(tmp_path, spark):
+    """B7 zero dates arrive only as text: a string column still maps
+    '0000-00-00' to NULL, while a typed timestamp column (which never
+    renders as a zero date) passes through with no string cast."""
+    snap = CatalogSnapshot(tables=[
+        TableMeta(
+            name="t",
+            columns=[
+                ColumnMeta("id", "bigint", False),
+                ColumnMeta("d", "date"),
+                ColumnMeta("ts", "datetime"),
+            ],
+        )
+    ])
+    pipe = MigrationPipeline(_cfg(tmp_path), snap)
+    src = spark.createDataFrame(
+        [(1, "0000-00-00", None), (2, "2024-02-29", None)],
+        "id bigint, d string, ts timestamp",
+    )
+    out = pipe._sink_frame(snap.tables[0], src)
+    assert {r.id: r.d for r in out.collect()} == {1: None, 2: "2024-02-29"}
+    plan = (
+        out.select("ts")._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert "as string" not in plan.lower(), plan
+
+
+def test_validate_checksums_ride_one_job(tmp_path, spark):
+    """The validate stage reads each destination back and checks all of
+    their checksums in ONE Spark job (one Observation per table on a
+    single noop scan), on top of the read-backs' own schema jobs."""
+    from mysql2pg_spark.runlog import RunLogger
+    from mysql2pg_spark.sinks.ddl import RecordingConnection
+    from mysql2pg_spark.tables import parquet_endpoints
+
+    names = ["a", "b", "c"]
+    snap = CatalogSnapshot(tables=[
+        TableMeta(name=n, columns=[ColumnMeta("id", "bigint", False),
+                                   ColumnMeta("v", "text")],
+                  primary_key=["id"])
+        for n in names
+    ])
+    frames = {
+        "a": spark.createDataFrame([(1, "x"), (2, None)], "id bigint, v string"),
+        "b": spark.createDataFrame([], "id bigint, v string"),
+        "c": spark.createDataFrame([(3, "y")], "id bigint, v string"),
+    }
+    tracker = spark.sparkContext.statusTracker()
+    jobs: dict[str, int] = {}
+
+    class Counting(RunLogger):
+        def stage_start(self, stage):
+            super().stage_start(stage)
+            jobs[stage] = -len(tracker.getJobIdsForGroup(None))
+
+        def stage_end(self, stage, detail=""):
+            jobs[stage] += len(tracker.getJobIdsForGroup(None))
+            super().stage_end(stage, detail)
+
+    endpoints = parquet_endpoints(frames.__getitem__, str(tmp_path / "sink"))
+    reads = []
+    read = endpoints["dest_reader"]
+
+    def dest_reader(sp, table):
+        before = len(tracker.getJobIdsForGroup(None))
+        df = read(sp, table)
+        reads.append(len(tracker.getJobIdsForGroup(None)) - before)
+        return df
+
+    result = MigrationPipeline(_cfg(tmp_path), snap).execute(
+        spark, RecordingConnection(),
+        **{**endpoints, "dest_reader": dest_reader},
+        logger=Counting(str(tmp_path / "logs")),
+    )
+    assert all(result["validation"][n]["consistent"] for n in names)
+    assert result["validation"]["b"]["dst"]["n_rows"] == 0
+    assert jobs["validate"] == sum(reads) + 1
+
+
 class _FakeConn:
     """DB-API seam: records SQL; optionally fails on matching statements."""
 

@@ -122,28 +122,37 @@ FROM packed p JOIN o ON o.source = p.source AND o.shard = p.shard
     compare_spark_duckdb(df, duck, oracle)
 
 
-def test_grouped_map_fast_matches_applyinpandas(spark):
-    """sessionize_events (canonical applyInPandas, one Python call per
-    group) and sessionize_events_fast (partition-aware mapInPandas with
-    cross-batch carry) implement one contract — results must be
-    row-identical, including across Arrow batch boundaries (forced tiny
-    maxRecordsPerBatch so groups straddle batches)."""
-    from mysql2pg_spark.operators.grouped import (
-        sessionize_events,
-        sessionize_events_fast,
-    )
+def test_sessionize_matches_a_python_reference(spark):
+    """p01's window sessionization against a plain-Python walk of each
+    user's events ordered by (ts, event_id): sequence number, gap in
+    microseconds (-1 first) and the 10-minute session flag, row for
+    row."""
+    import datetime
+    from itertools import groupby
+
+    from mysql2pg_spark.plans.timeseries import sessionize
     from mysql2pg_spark.tables import load_table
 
     e = load_table(spark, SF_CORRECT, "events")
-    slow = sessionize_events(e).orderBy("user_id", "seq").collect()
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-    try:
-        fast = sessionize_events_fast(e).orderBy("user_id", "seq").collect()
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    assert fast == slow
-    assert len(fast) > 0
+    got = sessionize(e).orderBy("user_id", "seq").collect()
+    epoch = datetime.datetime(1970, 1, 1)
+    want = []
+    rows = sorted(
+        e.select("user_id", "event_id", "ts").collect(),
+        key=lambda r: (r.user_id, r.ts, r.event_id),
+    )
+    for uid, evs in groupby(rows, key=lambda r: r.user_id):
+        prev = None
+        for seq, r in enumerate(evs, 1):
+            us = (r.ts - epoch) // datetime.timedelta(microseconds=1)
+            gap = -1 if prev is None else us - prev
+            want.append(
+                (uid, r.event_id, r.ts, seq, gap,
+                 prev is None or gap >= 600_000_000)
+            )
+            prev = us
+    assert [tuple(r) for r in got] == want
+    assert len(got) > 0
 
 
 def test_incremental_dedup_handmade(spark):

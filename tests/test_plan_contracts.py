@@ -40,6 +40,16 @@ def test_no_cartesian_products_anywhere(spark):
         assert "CartesianProduct" not in plan, f"{name} went all-pairs"
 
 
+def test_sessionize_runs_no_python(spark):
+    """p01 is window functions over one user-ordered window: no pandas
+    kernel and no Python UDF anywhere in its plan."""
+    plan = _plan(spark, "p01_grouped_map_sessionize")
+    for node in ("MapInPandas", "PythonUDF", "ArrowEvalPython",
+                 "FlatMapGroupsInPandas"):
+        assert node not in plan, f"p01 runs Python: {node}"
+    assert "Window" in plan
+
+
 def test_winnowing_is_map_only(spark):
     """t07 must stay a scan-speed pipeline: zero shuffle exchanges."""
     assert _n_exchanges(_plan(spark, "t07_winnowing_fingerprints")) == 0

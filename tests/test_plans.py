@@ -94,7 +94,7 @@ def test_frame_sample_no_shuffle(spark):
 
 def test_sessionize_fast_single_exchange(spark):
     """p01: one hash repartition on user_id, in-partition sort, one
-    Arrow pass — exactly one Exchange, no per-group FlatMapGroups."""
+    Window pass — exactly one Exchange, no per-group FlatMapGroups."""
     import re
 
     plan = plan_of(spark, "p01_grouped_map_sessionize")

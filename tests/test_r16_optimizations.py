@@ -250,16 +250,34 @@ def test_verify_sets_falls_back_to_strings_on_collision(
 ):
     """The plans-layer verify stage must keep the STRING shingle arrays
     when the injectivity check fails (exactness over speed), and serve
-    the int64-hashed stage when it passes."""
+    the int64-hashed stage when it passes. verified_pairs takes the
+    flag from its one plan-time statistics query; a forced collision
+    there must route it to the strings with identical pairs."""
     from mysql2pg_spark.plans import dedup as PD
 
     sh = PD.shingles(spark, SF_CORRECT)
-    monkeypatch.setattr(PD.D, "shingle_hash_is_injective", lambda sh: False)
-    out = PD.verify_sets(sh)
+    out = PD.verify_sets(sh, False)
     assert dict(out.dtypes)["shingles"] == "array<string>"
-    monkeypatch.setattr(PD.D, "shingle_hash_is_injective", lambda sh: True)
-    out = PD.verify_sets(sh)
+    out = PD.verify_sets(sh, True)
     assert dict(out.dtypes)["shingles"] == "array<bigint>"
+
+    stats, verify_sets = PD.D.plan_time_stats, PD.verify_sets
+    seen = []
+
+    def recording(sh, injective):
+        out = verify_sets(sh, injective)
+        seen.append(dict(out.dtypes)["shingles"])
+        return out
+
+    monkeypatch.setattr(PD, "verify_sets", recording)
+    monkeypatch.setattr(
+        PD.D, "plan_time_stats", lambda *a, **k: (stats(*a, **k)[0], False)
+    )
+    strings = sorted(PD.verified_pairs(sh, PD.signatures(sh)).collect())
+    monkeypatch.setattr(PD.D, "plan_time_stats", stats)
+    hashed = sorted(PD.verified_pairs(sh, PD.signatures(sh)).collect())
+    assert seen == ["array<string>", "array<bigint>"]
+    assert strings and strings == hashed
 
 
 def test_ivf_kernel_matches_jvm_on_edge_cases(spark):

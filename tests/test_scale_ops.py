@@ -342,7 +342,7 @@ def test_capped_pipeline_end_to_end_surfaces_stats(spark):
     rows += [(100 + i, f"unique text number {i} " * 4 + f"pair{i // 2}")
              for i in range(6)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    sh = shingle_sets(df, "doc_id", "text").cache()
+    sh = shingle_sets(df, "doc_id", "text", num_hashes=8).cache()
     sigs = _signatures_from_shingles(sh, "doc_id", 8).cache()
 
     out = capped_neardup_pipeline(sh, sigs, "doc_id", 0.3, max_bucket=8)
