@@ -1,15 +1,23 @@
-"""MySQL view-body → ANSI SQL for the SINK side of a migration.
+"""MySQL → ANSI SQL for the SINK side of a migration: the one
+translator for view bodies and every DDL expression.
 
 ``transpile_mysql`` (transpile.py) targets Spark SQL — the engine's own
 dialect, which legally keeps backticks, IFNULL, DATE_FORMAT and friends.
 A CREATE VIEW shipped to a real server needs the target engine's
-spellings instead. This module is the reference's ConvertViewDDL
-(internal/converter/postgres/sync_viewddl.go) re-expressed:
+spellings instead, and so do routine, trigger and event bodies, CHECKs,
+generated columns, expression defaults, functional index keys and
+partition keys — all of which render here (postgres spelling). This is
+the reference's ConvertViewDDL (sync_viewddl.go) and function-builtin
+table (sync_functions.go:477-570) as ONE catalog:
 
-- same conversion catalog (IFNULL→COALESCE, IF→CASE, GROUP_CONCAT→
-  string_agg, CONVERT→CAST, DATE_FORMAT→to_char, DATEDIFF, date/JSON/
-  system functions, CAST SIGNED→BIGINT, LIMIT a,b → LIMIT/OFFSET …);
-- but nested calls are handled by a balanced-paren scanner
+- IFNULL→COALESCE, IF→CASE, CONCAT→``||`` over text casts (NULL if any
+  argument is NULL), GROUP_CONCAT→string_agg, CONVERT→CAST,
+  DATE_FORMAT→to_char/strftime (the token table in
+  ``functions/datetime_fmt.py``), DATEDIFF, SUBSTRING_INDEX,
+  REGEXP/RLIKE, charset introducers, UUID(), NOW(n), unquoted
+  ``INTERVAL n unit``, date/JSON/system functions, CAST SIGNED→BIGINT,
+  LIMIT a,b → LIMIT/OFFSET …;
+- nested calls are handled by a balanced-paren scanner
   (``rewrite_call``) instead of one-shot ``[^,()]+`` regexes — the
   reference's documented weakness on nested arguments — and string
   literals are masked first so quoted text is never rewritten;
@@ -17,10 +25,11 @@ spellings instead. This module is the reference's ConvertViewDDL
   ``duckdb`` (the in-container integration engine), chosen per
   function only where the engines actually differ.
 
-Functions neither target can express (JSON_PRETTY/DEPTH/OVERLAPS/
-CONTAINS_PATH — the reference has no mapping for them either) pass
-through unchanged; the orchestrator's keep-going view stage surfaces
-them as per-view logged errors rather than silently dropping the view.
+A function neither target can express (JSON_PRETTY/DEPTH/OVERLAPS —
+the reference has no mapping for them either) keeps its MySQL name, so
+the engine rejects the statement naming it: the keep-going view and
+DDL stages log it per object, and ``sinks.ddl.pg_expr_default`` drops
+such a default visibly.
 """
 
 from __future__ import annotations
@@ -30,43 +39,14 @@ import re
 from mysql2pg_spark.dialect.transpile import (
     mask_literals,
     rewrite_call,
+    rewrite_regexp,
     split_top_level,
+    strip_introducers,
     unmask_literals,
 )
+from mysql2pg_spark.functions.datetime_fmt import convert_mysql_format
 
 _LIT = re.compile("\x00L(\\d+)\x00")
-
-# MySQL DATE_FORMAT % tokens → PostgreSQL to_char templates.
-_PG_FMT = [
-    ("%Y", "YYYY"), ("%y", "YY"), ("%m", "MM"), ("%c", "FMMM"),
-    ("%d", "DD"), ("%e", "FMDD"), ("%H", "HH24"), ("%k", "FMHH24"),
-    ("%h", "HH12"), ("%I", "HH12"), ("%i", "MI"), ("%S", "SS"),
-    ("%s", "SS"), ("%f", "US"), ("%p", "AM"), ("%M", "FMMonth"),
-    ("%b", "Mon"), ("%a", "Dy"), ("%W", "FMDay"), ("%j", "DDD"),
-    ("%T", "HH24:MI:SS"), ("%r", "HH12:MI:SS AM"), ("%%", "%"),
-]
-# MySQL DATE_FORMAT % tokens → C strftime (DuckDB). Only the tokens
-# whose meaning differs; everything else is already strftime.
-_STRFTIME = {
-    "%i": "%M", "%s": "%S", "%M": "%B", "%W": "%A", "%e": "%-d",
-    "%k": "%-H", "%h": "%I", "%T": "%H:%M:%S", "%r": "%I:%M:%S %p",
-    "%f": "%f", "%c": "%-m",
-}
-
-
-def _fmt_to_pg(fmt: str) -> str:
-    out = fmt
-    for a, b in _PG_FMT:
-        out = out.replace(a, b)
-    return out
-
-
-def _fmt_to_strftime(fmt: str) -> str:
-    def one(mo: re.Match) -> str:
-        tok = mo.group(0)
-        return _STRFTIME.get(tok, tok)
-
-    return re.sub(r"%.", one, fmt)
 
 
 def _ts(x: str) -> str:
@@ -134,22 +114,30 @@ def _coerce_strings(s: str) -> str:
 
 
 def transpile_mysql_ansi(
-    sql: str, dialect: str = "postgres", coalesce_text: bool = False
+    sql: str, dialect: str = "postgres", unify_types: bool = False
 ) -> str:
     """Translate one MySQL SELECT/view body into the target engine's
     ANSI spelling. ``dialect``: ``postgres`` (default) or ``duckdb``.
 
-    ``coalesce_text=True`` casts every COALESCE argument to text — the
-    reference's unconditional hack (sync_viewddl.go:377-383) that makes
-    MySQL's loosely-typed ``COALESCE(varchar_col, ts_col, 0)`` views
-    execute on a strict engine. It is OFF by default (it would retype
-    well-formed numeric COALESCEs); the execute path enables it as a
-    per-view RETRY when the engine rejects the plain form with a
-    COALESCE type error — the engine itself is the mixed-type detector
-    a text transpiler cannot be (C33)."""
+    ``unify_types=True`` casts every COALESCE argument to text — the
+    reference's unconditional hack (sync_viewddl.go:377-383) for
+    MySQL's loosely-typed ``COALESCE(varchar_col, ts_col, 0)`` — and
+    every GREATEST/LEAST argument to a number (boolean/smallint mixes).
+    It is OFF by default (it would retype numeric COALESCEs and break
+    GREATEST over dates or strings); the execute path enables it as a
+    per-view RETRY when the engine rejects the plain form with such a
+    type error — the engine is the mixed-type detector a text
+    transpiler cannot be (C33)."""
     duck = dialect == "duckdb"
     s, lits = mask_literals(sql)
 
+    def lit(text: str) -> str:
+        """A new string literal, masked like the source's own."""
+        lits.append("'" + text.replace("'", "''") + "'")
+        return f"\x00L{len(lits) - 1}\x00"
+
+    # charset introducers (_utf8mb4'…', N'…'): the literal is the value
+    s = strip_introducers(s)
     # identifiers + LIMIT
     s = re.sub(
         r"`((?:[^`]|``)+)`",
@@ -162,7 +150,7 @@ def transpile_mysql_ansi(
 
     # ---- conditionals -----------------------------------------------------
     s = re.sub(r"\bIFNULL\s*\(", "COALESCE(", s, flags=re.I)
-    if coalesce_text:
+    if unify_types:
         # CO\x02ALESCE sentinel: rewrite_call rescans its output, so a
         # bare COALESCE( replacement would re-match forever
         s = rewrite_call(
@@ -184,6 +172,15 @@ def transpile_mysql_ansi(
         ),
     )
     s = rewrite_call(s, "ISNULL", lambda a: f"(({a[0]}) IS NULL)")
+
+    # REGEXP/RLIKE: a case-insensitive search anywhere in the subject.
+    # PG's ~* is one; DuckDB's ~ must match the WHOLE subject, so its
+    # pattern operand is wrapped in (?is).*(?:…).*
+    s = rewrite_regexp(s, lambda neg, p: (
+        (" !~ " if neg else " ~ ")
+        + f"({lit('(?is).*(?:')} || {p} || {lit(').*')})" if duck
+        else (" !~* " if neg else " ~* ") + p
+    ))
 
     # MySQL collation names have no ANSI analog; comparisons fall back
     # to the target's default collation (the reference leaves these in
@@ -220,6 +217,16 @@ def transpile_mysql_ansi(
     # on strict engines) — after the renames so UCASE/MID/CHAR_LENGTH
     # land in their canonical spelling first
     s = _coerce_strings(s)
+    # CONCAT is NULL if any argument is NULL and takes any type: text
+    # casts joined by || (string literals need no cast). CONCAT_WS
+    # skips NULLs and takes any type natively on both engines.
+    s = rewrite_call(
+        s,
+        "CONCAT",
+        lambda a: "(" + " || ".join(
+            x if _LIT.fullmatch(x.strip()) else _txt(x) for x in a
+        ) + ")",
+    )
 
     # …and the numeric mirror: MySQL math functions take ANY type
     # (booleans are tinyints there); strict engines bind-error on
@@ -228,12 +235,12 @@ def transpile_mysql_ansi(
     num = (lambda x: f"CAST({x} AS DOUBLE)") if duck else (
         lambda x: f"CAST({x} AS NUMERIC)"
     )
-    # GREATEST/LEAST included: the corpus uses them numerically and a
-    # bool/smallint mix bind-errors; an all-string GREATEST would need
-    # the cast dropped by hand (cannot be decided textually).
+    # GREATEST/LEAST compare any one type (dates, strings) and join
+    # the loop only on the type-unifying retry
     for fn in ("ROUND", "CEILING", "CEIL", "FLOOR", "ABS", "SQRT",
-               "SIN", "COS", "TAN", "EXP", "POWER", "MOD",
-               "GREATEST", "LEAST"):
+               "SIN", "COS", "TAN", "EXP", "POWER", "MOD") + (
+        ("GREATEST", "LEAST") if unify_types else ()
+    ):
         sent = fn[:2] + "\x02" + fn[2:]
 
         def build(a: list[str], sent=sent, fn=fn) -> str:
@@ -248,13 +255,15 @@ def transpile_mysql_ansi(
     def _ssi(a: list[str]) -> str:
         x, d, n = _txt(a[0]), a[1].strip(), a[2].strip()
         if duck:
+            # an empty slice joins to NULL in DuckDB: count 0 is ''
             arr = f"string_split({x}, {d})"
             return (
-                f"array_to_string(CASE WHEN ({n}) >= 0"
+                f"(CASE WHEN ({n}) = 0 THEN substr({x}, 1, 0)"
+                f" ELSE array_to_string(CASE WHEN ({n}) > 0"
                 f" THEN list_slice({arr}, 1, {n})"
                 f" ELSE list_slice({arr},"
                 f" greatest(1, len({arr}) + ({n}) + 1), len({arr}))"
-                f" END, {d})"
+                f" END, {d}) END)"
             )
         arr = f"string_to_array({x}, {d})"
         ln = f"COALESCE(array_length({arr}, 1), 0)"
@@ -333,9 +342,18 @@ def transpile_mysql_ansi(
     s = rewrite_call(s, "GROUP_CONCAT", _group_concat)
 
     # ---- system / time-now ------------------------------------------------
-    s = re.sub(r"\bNOW\s*\(\s*\)", "CURRENT_TIMESTAMP", s, flags=re.I)
-    s = re.sub(r"\bSYSDATE\s*\(\s*\)", "CURRENT_TIMESTAMP", s, flags=re.I)
-    s = re.sub(r"\bCURDATE\s*\(\s*\)", "CURRENT_DATE", s, flags=re.I)
+    s = re.sub(
+        r"\b(?:NOW|SYSDATE)\s*\(\s*(\d*)\s*\)",
+        lambda mo: "CURRENT_TIMESTAMP"
+        + (f"({mo.group(1)})" if mo.group(1) else ""),
+        s,
+        flags=re.I,
+    )
+    s = re.sub(
+        r"\b(?:CURDATE|CURRENT_DATE)\s*\(\s*\)", "CURRENT_DATE", s,
+        flags=re.I,
+    )
+    s = re.sub(r"\bUUID\s*\(\s*\)", "gen_random_uuid()", s, flags=re.I)
     s = re.sub(
         r"\bCURTIME\s*\(\s*\)",
         "strf\x02time(CURRENT_TIMESTAMP, '%H:%M:%S')"
@@ -361,12 +379,11 @@ def transpile_mysql_ansi(
         mo = _LIT.fullmatch(fmt)
         if mo is None:  # dynamic format string: cannot convert tokens
             return f"DATE_FOR\x02MAT({', '.join(a)})"
-        idx = int(mo.group(1))
-        raw = lits[idx][1:-1]
+        raw = lits[int(mo.group(1))][1:-1].replace("''", "'")
         if duck:
-            lits[idx] = "'" + _fmt_to_strftime(raw) + "'"
+            fmt = lit(convert_mysql_format(raw, "strftime"))
             return f"strf\x02time({_ts(expr)}, {fmt})"
-        lits[idx] = "'" + _fmt_to_pg(raw) + "'"
+        fmt = lit(convert_mysql_format(raw, "pg"))
         return f"to_\x02char({_ts(expr)}, {fmt})"
 
     s = rewrite_call(s, "DATE_FORMAT", _date_format)
@@ -381,22 +398,27 @@ def transpile_mysql_ansi(
 
     s = rewrite_call(s, "DATEDIFF", _datediff)
 
-    def _interval_shift(sign: str):
-        def build(a: list[str]) -> str:
-            mo = re.match(
-                r"(?i)^\s*INTERVAL\s+(\S+)\s+(\w+)\s*$", a[1].strip()
-            )
-            if not mo:
-                return f"({_ts(a[0])} {sign} {a[1]})"
-            n, unit = mo.group(1), mo.group(2)
-            if duck:
-                return f"({_ts(a[0])} {sign} INTERVAL {n} {unit})"
-            return f"({_ts(a[0])} {sign} INTERVAL '{n} {unit}')"
+    # MySQL's unquoted INTERVAL n unit: PG takes only the quoted form
+    # and has no QUARTER unit, and neither engine takes a bare column
+    # count — scale one unit by it instead
+    def _interval(mo: re.Match) -> str:
+        n, unit = mo.group(1), mo.group(2).upper()
+        if unit == "QUARTER":
+            n, unit = f"{n} * 3", "MONTH"
+        if re.fullmatch(r"[-+]?\d+(?:\.\d+)?", n):
+            return "INTERVAL " + lit(f"{n} {unit}")
+        return f"({n} * INTERVAL {lit('1 ' + unit)})"
 
-        return build
+    s = re.sub(
+        r"\bINTERVAL\s+([-+]?\d+(?:\.\d+)?|[A-Za-z_][\w.]*)"
+        r"\s+([A-Za-z]+)\b",
+        _interval,
+        s,
+        flags=re.I,
+    )
 
-    s = rewrite_call(s, "DATE_ADD", _interval_shift("+"))
-    s = rewrite_call(s, "DATE_SUB", _interval_shift("-"))
+    s = rewrite_call(s, "DATE_ADD", lambda a: f"({_ts(a[0])} + {a[1]})")
+    s = rewrite_call(s, "DATE_SUB", lambda a: f"({_ts(a[0])} - {a[1]})")
 
     def _timestampdiff(a: list[str]) -> str:
         """MySQL counts COMPLETE elapsed units truncated TOWARD ZERO —
@@ -472,37 +494,26 @@ def transpile_mysql_ansi(
 
     s = rewrite_call(s, "TIMEDIFF", _timediff)
 
-    if not duck:
-        # PG has no bare year()/month()/… functions
-        for unit, fn in [
-            ("YEAR", "YEAR"), ("MONTH", "MONTH"), ("DAY", "DAY"),
-            ("HOUR", "HOUR"), ("MINUTE", "MINUTE"), ("SECOND", "SECOND"),
-            ("QUARTER", "QUARTER"), ("WEEK", "WEEK"),
-            ("DOY", "DAYOFYEAR"),
-        ]:
-            s = rewrite_call(
-                s, fn, (lambda u: lambda a: _extract(u, a[0]))(unit)
-            )
-        s = rewrite_call(s, "DAYOFMONTH", lambda a: _extract("DAY", a[0]))
-        s = rewrite_call(
-            s,
-            "DAYOFWEEK",
-            lambda a: f"(CAST(EXTRACT(DOW FROM {_ts(a[0])}) AS BIGINT) + 1)",
-        )
-        s = rewrite_call(
-            s,
-            "LAST_DAY",
-            lambda a: (
-                f"CAST(DATE_TRUNC('month', {_ts(a[0])})"
-                f" + INTERVAL '1 month' - INTERVAL '1 day' AS DATE)"
-            ),
-        )
-    else:
-        s = rewrite_call(
-            s,
-            "DAYOFWEEK",
-            lambda a: f"(dayof\x02week(CAST({a[0]} AS DATE)) + 1)",
-        )
+    # PG has no bare year()/month()/…, and DuckDB's bind no string
+    # argument (MySQL reads any date-like value): EXTRACT over a cast
+    for fn, unit in [("DAYOFYEAR", "DOY"), ("DAYOFMONTH", "DAY")] + [
+        (u, u) for u in ("YEAR", "MONTH", "DAY", "HOUR", "MINUTE",
+                         "SECOND", "QUARTER", "WEEK")
+    ]:
+        s = rewrite_call(s, fn, lambda a, u=unit: _extract(u, a[0]))
+    s = rewrite_call(
+        s,
+        "DAYOFWEEK",
+        lambda a: f"(CAST(EXTRACT(DOW FROM {_ts(a[0])}) AS BIGINT) + 1)",
+    )
+    s = rewrite_call(
+        s,
+        "LAST_DAY",
+        lambda a: (
+            f"CAST(DATE_TRUNC('month', {_ts(a[0])})"
+            f" + INTERVAL '1 month' - INTERVAL '1 day' AS DATE)"
+        ),
+    )
 
     s = rewrite_call(s, "TIME", lambda a: f"CAST({a[0]} AS TIME)")
     s = rewrite_call(s, "DATE", lambda a: f"CAST({a[0]} AS DATE)")

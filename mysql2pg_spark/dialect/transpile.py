@@ -4,11 +4,14 @@ The reference translates MySQL view definitions to PostgreSQL with ~70
 ordered regex passes (ConvertViewDDL, sync_viewddl.go:141-920). The
 Spark story is much shorter because Spark SQL natively accepts most of
 the MySQL surface — backtick quoting, IF(), IFNULL(), SUBSTRING_INDEX,
-LOCATE, INSTR, CONV, HEX, REGEXP/RLIKE, INTERVAL literals, TIMESTAMPDIFF,
+LOCATE, INSTR, CONV, HEX, INTERVAL literals, TIMESTAMPDIFF,
 DATE_ADD, GREATEST…, so the transpiler only rewrites the constructs whose
 syntax or semantics genuinely differ:
 
   * ``LIMIT a, b``            → ``LIMIT b OFFSET a``              (C5)
+  * ``_utf8mb4'…'`` / ``N'…'`` → the bare literal
+  * ``x REGEXP y``            → ``x RLIKE concat('(?i)', y)`` (MySQL's
+                                 ``_ci`` collations ignore case)
   * ``ISNULL(x)``             → ``(x IS NULL)``                   (C31)
   * ``GROUP_CONCAT(…)``       → ``array_join(collect_*)``          (C7)
   * ``DATE_FORMAT/STR_TO_DATE/FROM_UNIXTIME`` %-token formats     (C45/C46)
@@ -90,6 +93,19 @@ def normalize_backslash_quotes(sql: str) -> str:
     return "".join(out)
 
 
+#: a charset introducer (``_utf8mb4'…'``, ``_binary '…'``) or national
+#: prefix (``N'…'``) in front of a masked literal; the lookbehind keeps
+#: ``SELECT my_col 'alias'`` whole
+_INTRODUCER = re.compile(r"(?<![\w.])(?:[Nn]|_\w+\s*)(?=\x00L\d+\x00)")
+
+
+def strip_introducers(masked: str) -> str:
+    """Drop charset introducers: MySQL spelling with no Spark/PG/DuckDB
+    analog — the literal itself is the value (generated-column
+    expressions in real dumps carry them)."""
+    return _INTRODUCER.sub("", masked)
+
+
 def unmask_literals(sql: str, lits: list[str]) -> str:
     for idx, lit in enumerate(lits):
         sql = sql.replace(_LIT_TOKEN.format(idx), lit)
@@ -116,30 +132,73 @@ def split_top_level(args: str) -> list[str]:
     return parts
 
 
+def _paren_end(s: str, i: int) -> int:
+    """Index just past the ``)`` that closes the ``(`` at ``s[i]``."""
+    depth = 0
+    for k in range(i, len(s)):
+        depth += {"(": 1, ")": -1}.get(s[k], 0)
+        if depth == 0:
+            return k + 1
+    return len(s)
+
+
+#: the text before a table name: ``INSERT INTO log (msg)`` names a
+#: table, not a LOG() call
+_TABLE_POS = re.compile(
+    r"(?i)\b(?:INTO|INSERT|IGNORE|REPLACE|TABLE)\s+(?:[\w\"`]+\.)?$"
+)
+
+
 def rewrite_call(
     sql: str, func: str, builder: Callable[[list[str]], str]
 ) -> str:
     """Replace every FUNC(args…) with builder(top-level-args), innermost
     nesting handled by repeated scanning. The \x02 lookbehind keeps a
     rewriter from matching inside another rewriter's sentinel output
-    (e.g. TIME( inside from_unix\x02time()."""
+    (e.g. TIME( inside from_unix\x02time(); a name in table position
+    (``_TABLE_POS``) is left alone."""
     pat = re.compile(rf"(?<!\x02)\b{func}\s*\(", re.I)
+    pos = 0
     while True:
-        mo = pat.search(sql)
+        mo = pat.search(sql, pos)
         if not mo:
             return sql
         start = mo.start()
-        depth = 1
-        i = mo.end()
-        while i < len(sql) and depth:
-            if sql[i] == "(":
-                depth += 1
-            elif sql[i] == ")":
-                depth -= 1
-            i += 1
+        if _TABLE_POS.search(sql, max(0, start - 80), start):
+            pos = mo.end()
+            continue
+        pos = start
+        i = _paren_end(sql, mo.end() - 1)
         inner = sql[mo.end() : i - 1]
         replacement = builder(split_top_level(inner))
         sql = sql[:start] + replacement + sql[i:]
+
+
+_REGEXP_OP = re.compile(r"\s+(NOT\s+)?(?:REGEXP|RLIKE)\s+", re.I)
+_PRIMARY = re.compile("\x00L\\d+\x00|[\\w.\"`$]+")
+
+
+def _operand_end(s: str, i: int) -> int:
+    """End of the primary expression starting at ``s[i]``: a masked
+    literal, a column, a call or a parenthesized expression."""
+    mo = _PRIMARY.match(s, i)
+    j = mo.end() if mo else i
+    if j < len(s) and s[j] == "(" and not (mo and s[i] == "\x00"):
+        return _paren_end(s, j)
+    return j
+
+
+def rewrite_regexp(s: str, render: Callable[[bool, str], str]) -> str:
+    """Replace each ``[NOT] REGEXP|RLIKE y`` by ``render(negated, y)``.
+    MySQL's REGEXP searches anywhere in the subject and, under the
+    default ``_ci`` collations, ignores case."""
+    mo = _REGEXP_OP.search(s)
+    while mo:
+        end = _operand_end(s, mo.end())
+        op = render(bool(mo.group(1)), s[mo.end():end])
+        s = s[: mo.start()] + op + s[end:]
+        mo = _REGEXP_OP.search(s, mo.start() + len(op))
+    return s
 
 
 def _group_concat(args_src: str, lits: list[str]) -> str:
@@ -187,14 +246,22 @@ def _convert_fmt(fmt_token: str, lits: list[str]) -> str:
     if not mo:
         return fmt_token  # dynamic format — pass through untouched
     idx = int(mo.group(1))
-    raw = lits[idx][1:-1]
-    lits[idx] = "'" + mysql_format_to_spark(raw) + "'"
+    pattern = mysql_format_to_spark(lits[idx][1:-1].replace("''", "'"))
+    # the pattern quotes literal letters with ' — backslash-escape them
+    # inside the Spark SQL string literal
+    lits[idx] = "'" + pattern.replace("\\", "\\\\").replace("'", "\\'") + "'"
     return fmt_token
 
 
 def transpile_mysql(sql: str) -> str:
     """Translate one MySQL SELECT/view body into Spark SQL."""
     s, lits = mask_literals(sql)
+    s = strip_introducers(s)
+    # Spark's RLIKE searches too, but case-sensitively
+    s = rewrite_regexp(
+        s,
+        lambda neg, p: f" {'NOT ' if neg else ''}RLIKE concat('(?i)', {p})",
+    )
 
     # C5: LIMIT a, b → LIMIT b OFFSET a
     s = re.sub(
@@ -614,10 +681,6 @@ def transpile_mysql(sql: str) -> str:
     s = rewrite_call(s, "ADDDATE", _date_arith("+"))
     s = rewrite_call(s, "SUBDATE", _date_arith("-"))
 
-    # C56: TO_DAYS (day 1 = 0000-01-01; Spark anchors at 0001-01-01 = 366)
-    s = rewrite_call(
-        s, "TO_DAYS", lambda a: f"(datediff({a[0]}, DATE'0001-01-01') + 366)"
-    )
     # C79: INET_ATON / INET_NTOA
     s = rewrite_call(
         s,
@@ -642,22 +705,6 @@ def transpile_mysql(sql: str) -> str:
 
     s = s.replace("\x02", "")  # drop loop-guard sentinels
     return unmask_literals(s, lits).strip()
-
-
-def transpile_mysql_ansi(
-    sql: str, dialect: str = "postgres", coalesce_text: bool = False
-) -> str:
-    """MySQL view body → ANSI text a real server parser accepts.
-    ``transpile_mysql`` targets Spark SQL, which still ACCEPTS backtick
-    identifiers, IFNULL, DATE_FORMAT and friends — a server-side CREATE
-    VIEW does not (found by the DuckDB end-to-end run). The full
-    conversion catalog (the reference's sync_viewddl.go parity) lives
-    in ``dialect/ansi.py``; this is its import surface.
-    ``coalesce_text``: the C33 mixed-type COALESCE retry knob (see
-    ansi.py)."""
-    from mysql2pg_spark.dialect.ansi import transpile_mysql_ansi as _impl
-
-    return _impl(sql, dialect, coalesce_text=coalesce_text)
 
 
 def create_view(spark, name: str, mysql_sql: str, replace: bool = True):

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import re
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from mysql2pg_spark.config import EngineConfig
 from mysql2pg_spark.schema.identifiers import normalize_identifier, quote_pg
@@ -203,11 +203,12 @@ class MigrationPipeline:
     def _norm(self, name: str) -> str:
         return normalize_identifier(name, self.cfg.options.lowercase_columns)
 
-    def _view_coalesce_fallback(self, name: str, dialect: str) -> str | None:
+    def _view_unify_fallback(self, name: str, dialect: str) -> str | None:
         """C33 retry payload: the view's ORIGINAL MySQL body re-transpiled
-        with every COALESCE argument cast to text (see dialect/ansi.py).
-        Returns None if the view is unknown."""
-        from mysql2pg_spark.dialect.transpile import transpile_mysql_ansi
+        with COALESCE arguments cast to text and GREATEST/LEAST arguments
+        to a number (``unify_types``, see dialect/ansi.py). Returns None
+        if the view is unknown."""
+        from mysql2pg_spark.dialect.ansi import transpile_mysql_ansi
         from mysql2pg_spark.schema.identifiers import quote_pg
 
         for vname, vsql in self.snapshot.views.items():
@@ -215,7 +216,7 @@ class MigrationPipeline:
                 if vsql is None:
                     return None  # withheld definition: nothing to retry
                 body = transpile_mysql_ansi(
-                    vsql, dialect, coalesce_text=True
+                    vsql, dialect, unify_types=True
                 )
                 return (
                     f"DROP VIEW IF EXISTS {quote_pg(name)} CASCADE; "
@@ -256,6 +257,30 @@ class MigrationPipeline:
             r"`([^`]+)`", lambda m: f"`{self._norm(m.group(1))}`", expr
         )
 
+    def _norm_index(self, idx: IndexSpec) -> IndexSpec:
+        """The index with its key columns — plain and inside a
+        functional key — in the table DDL's spelling, as the PK and FK
+        paths already do."""
+        from mysql2pg_spark.schema.sqltext import (
+            plain_index_columns,
+            split_top_level,
+        )
+
+        expr = idx.expression
+        if expr:
+            parts = []
+            for part in split_top_level(expr):
+                plain = plain_index_columns(part)
+                parts.append(
+                    f"`{self._norm(plain[0])}`" if plain
+                    else self._norm_expr_idents(part)
+                )
+            expr = ", ".join(parts)
+        return replace(
+            idx, columns=[self._norm(c) for c in idx.columns],
+            expression=expr,
+        )
+
     def _plan_partitioning(self, t: TableMeta, name: str):
         """PartitionPlan for a table carrying a partition clause, or
         None for unpartitioned tables. Header-only captures (live
@@ -285,17 +310,15 @@ class MigrationPipeline:
                 "needs it"
             )
             return plan
+        from mysql2pg_spark.dialect.ansi import transpile_mysql_ansi
         from mysql2pg_spark.sinks.ddl import _cap_identifier
-        from mysql2pg_spark.sinks.plpgsql_builder import (
-            rewrite_mysql_expr_to_pg,
-        )
 
         return plan_partitioned_table(
             name,
             pd,
             t.primary_key,
             self._norm,
-            lambda e: rewrite_mysql_expr_to_pg(self._norm_expr_idents(e)),
+            lambda e: transpile_mysql_ansi(self._norm_expr_idents(e)),
             _cap_identifier,
         )
 
@@ -358,7 +381,7 @@ class MigrationPipeline:
                     actions.append(Action("tableddl", "ddl", name, c_ddl))
 
         if o.view:
-            from mysql2pg_spark.dialect.transpile import transpile_mysql_ansi
+            from mysql2pg_spark.dialect.ansi import transpile_mysql_ansi
 
             for vname, vsql in self.snapshot.views.items():
                 name = self._norm(vname)
@@ -442,8 +465,9 @@ class MigrationPipeline:
                     self._norm(c.name): c.column_type.lower().split("(")[0]
                     for c in t.columns
                 }
-                for idx in t.indexes:
-                    if not idx.columns or getattr(idx, "expression", None):
+                for src in t.indexes:
+                    idx = self._norm_index(src)
+                    if not idx.columns or idx.expression:
                         # expression set WITH columns is a malformed
                         # spec (the parsers emit one or the other) —
                         # it falls through to the named skip below
@@ -472,15 +496,14 @@ class MigrationPipeline:
                                 "skip",
                                 name,
                                 f"functional index {idx.name} "
-                                f"({getattr(idx, 'expression', None) or '?'})"
+                                f"({src.expression or '?'})"
                                 ": expression key outside the rewrite "
                                 "grammar — translate and create "
                                 "manually",
                             ))
                         continue
-                    if getattr(idx, "kind", "btree") == "spatial" and any(
-                        coltype.get(self._norm(c)) != "point"
-                        for c in idx.columns
+                    if idx.kind == "spatial" and any(
+                        coltype.get(c) != "point" for c in idx.columns
                     ):
                         # GiST works natively only on PG's point (the
                         # MySQL point mapping); geometry/polygon/etc
@@ -535,10 +558,8 @@ class MigrationPipeline:
             # fails VISIBLY). NOT ENFORCED → named skip: PG's closest
             # form, NOT VALID, still enforces new rows — emitting it
             # would reject writes MySQL accepts.
+            from mysql2pg_spark.dialect.ansi import transpile_mysql_ansi
             from mysql2pg_spark.sinks.ddl import add_check_ddl
-            from mysql2pg_spark.sinks.plpgsql_builder import (
-                rewrite_mysql_expr_to_pg,
-            )
 
             for t in tables:
                 name = self._norm(t.name)
@@ -568,7 +589,7 @@ class MigrationPipeline:
                         add_check_ddl(
                             name,
                             cname.lower(),
-                            rewrite_mysql_expr_to_pg(
+                            transpile_mysql_ansi(
                                 self._norm_expr_idents(expr)
                             ),
                         ),
@@ -1105,21 +1126,23 @@ class MigrationPipeline:
                     run_ddl(payload)
                 except Exception as e:  # keep going, record (manager.go)
                     # C33: a strict engine rejects MySQL's loosely-typed
-                    # mixed COALESCE; retry the view with every COALESCE
-                    # arg cast to text (the reference's
+                    # mixed COALESCE/GREATEST/LEAST; retry the view with
+                    # their arguments unified (the reference's
                     # sync_viewddl.go:377-383 hack, applied here only
                     # when the engine actually reported the mismatch)
                     retry = None
-                    if stage == "view" and "coalesce" in str(e).lower():
-                        retry = self._view_coalesce_fallback(
+                    if stage == "view" and re.search(
+                        r"coalesce|greatest|least", str(e), re.I
+                    ):
+                        retry = self._view_unify_fallback(
                             a.target, target_dialect
                         )
                     if retry is not None:
                         try:
                             run_ddl(adapt_ddl(retry, target_dialect))
                             logger.info(
-                                f"view {a.target}: mixed-type COALESCE "
-                                "unified to text on retry (C33)"
+                                f"view {a.target}: mixed-type arguments "
+                                "unified on retry (C33)"
                             )
                             continue
                         except Exception as e2:

@@ -201,16 +201,14 @@ def m02_partition_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
         parse_partition_def,
         routing_sql,
     )
-    from mysql2pg_spark.sinks.plpgsql_builder import (
-        rewrite_mysql_expr_to_pg,
-    )
+    from mysql2pg_spark.dialect.ansi import transpile_mysql_ansi
 
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     out: DataFrame | None = None
     for scheme, text in M02_PARTITION_DEFS.items():
         pdef = parse_partition_def(text)
         expr, skip = routing_sql(
-            "orders", pdef, str.lower, rewrite_mysql_expr_to_pg,
+            "orders", pdef, str.lower, transpile_mysql_ansi,
             lambda s: s,
         )
         assert skip is None, skip

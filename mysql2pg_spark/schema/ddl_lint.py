@@ -368,6 +368,12 @@ class _ExprParser:
                 if not self._peek_op("]"):
                     self._expr_list()
                 self._expect_op("]", "closing an ARRAY constructor")
+            elif u == "CAST" and self._peek_op("("):
+                self.i += 1
+                self.parse_expr()
+                self._expect_word("AS", "inside CAST")
+                self._type()
+                self._expect_op(")", "closing CAST")
             elif u == "EXTRACT" and self._peek_op("("):
                 self.i += 1
                 self.parse_expr()  # the field parses as an identifier
@@ -397,6 +403,24 @@ class _ExprParser:
             raise ExprProblem(f"operator {v!r} where an operand belongs")
         self._postfix()
 
+    def _type(self) -> None:
+        """A type name after ``::`` or ``CAST(… AS``."""
+        tok = self.peek()
+        if tok is None or tok[0] != "word":
+            raise ExprProblem("a cast must name a type")
+        self.i += 1
+        if tok[1].upper() in ("DOUBLE", "CHARACTER") and (
+            self._peek_word() in ("PRECISION", "VARYING")
+        ):
+            self.i += 1
+        if self._peek_op("("):  # decimal(38,0) etc.
+            self.i += 1
+            self._expr_list()
+            self._expect_op(")", "closing a type modifier")
+        while self._peek_op("["):
+            self.i += 1
+            self._expect_op("]", "closing an array-type suffix")
+
     def _case(self) -> None:
         if self._peek_word() != "WHEN":
             self.parse_expr()
@@ -414,21 +438,7 @@ class _ExprParser:
         while True:
             if self._peek_op("::"):
                 self.i += 1
-                tok = self.peek()
-                if tok is None or tok[0] != "word":
-                    raise ExprProblem("'::' must be followed by a type")
-                self.i += 1
-                if tok[1].upper() in ("DOUBLE", "CHARACTER") and (
-                    self._peek_word() in ("PRECISION", "VARYING")
-                ):
-                    self.i += 1
-                if self._peek_op("("):  # decimal(38,0) etc.
-                    self.i += 1
-                    self._expr_list()
-                    self._expect_op(")", "closing a type modifier")
-                while self._peek_op("["):
-                    self.i += 1
-                    self._expect_op("]", "closing an array-type suffix")
+                self._type()
             elif self._peek_op("["):
                 self.i += 1
                 self.parse_expr()

@@ -72,7 +72,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, replace as _dc_replace
 
-from mysql2pg_spark.sinks.plpgsql_builder import rewrite_mysql_expr_to_pg
+from mysql2pg_spark.dialect.ansi import transpile_mysql_ansi
 
 __all__ = [
     "EventSpec",
@@ -586,7 +586,7 @@ def _body_plan(spec: EventSpec) -> tuple[list[str], str | None, str | None]:
         # wrap the lone statement as a compound body and ride the
         # procedure path; builder refusals propagate as named skips
         return _procedure_plan(_dc_replace(spec, body=f"BEGIN {body}; END"))
-    return [], rewrite_mysql_expr_to_pg(body).rstrip(";").strip(), None
+    return [], transpile_mysql_ansi(body).rstrip(";").strip(), None
 
 
 def _procedure_plan(spec: EventSpec) -> tuple[list[str], str | None, str | None]:

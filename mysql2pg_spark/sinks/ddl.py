@@ -106,36 +106,16 @@ def pg_expr_default(payload: str) -> tuple[str | None, str | None]:
     remains after the rewrite (ADVICE r12: the raw MySQL text —
     ``(uuid())``, ``(now(3))``, backticked columns — was emitted
     verbatim and failed on a real PG; tabexport's MySQL round-trip
-    path deliberately keeps the original spelling)."""
+    path deliberately keeps the original spelling). The spelling is
+    the one translator's (``uuid()``, ``now(3)`` and unquoted
+    ``INTERVAL 1 DAY`` included); this function only gates it."""
     import re
 
-    from mysql2pg_spark.dialect.transpile import (
-        mask_literals,
-        unmask_literals,
-    )
-    from mysql2pg_spark.sinks.plpgsql_builder import (
-        rewrite_mysql_expr_to_pg,
-    )
+    from mysql2pg_spark.dialect.ansi import transpile_mysql_ansi
+    from mysql2pg_spark.dialect.transpile import mask_literals
 
-    pg = rewrite_mysql_expr_to_pg(payload)
-    masked, lits = mask_literals(pg)
-    # default-specific spellings the general rewriter doesn't own:
-    # uuid() → gen_random_uuid() (PG 13+ core), fractional-second
-    # now(3)/sysdate(3) → CURRENT_TIMESTAMP(3), and MySQL's unquoted
-    # INTERVAL 1 DAY → PG's quoted INTERVAL '1 day'
-    masked = re.sub(
-        r"(?i)\buuid\s*\(\s*\)", "gen_random_uuid()", masked
-    )
-    masked = re.sub(
-        r"(?i)\b(?:now|sysdate)\s*\(\s*(\d+)\s*\)",
-        r"CURRENT_TIMESTAMP(\1)",
-        masked,
-    )
-    masked = re.sub(
-        r"(?i)\bINTERVAL\s+(\d+(?:\.\d+)?)\s+(\w+)",
-        r"INTERVAL '\1 \2'",
-        masked,
-    )
+    pg = transpile_mysql_ansi(payload)
+    masked, _lits = mask_literals(pg)
     for mo in re.finditer(r"(?i)\b([a-z_][a-z0-9_]*)\s*\(", masked):
         fn = mo.group(1).lower()
         if fn not in _PG_DEFAULT_FNS:
@@ -144,7 +124,7 @@ def pg_expr_default(payload: str) -> tuple[str | None, str | None]:
                 "PostgreSQL analog in a DEFAULT — default dropped "
                 "(rows migrate with their explicit values)"
             )
-    return unmask_literals(masked, lits), None
+    return pg, None
 
 
 def default_sql(v) -> str | None:
@@ -206,11 +186,9 @@ def create_table_ddl(
     for f in schema.fields:
         expr = (f.metadata or {}).get("generated_mysql")
         if expr:
-            from mysql2pg_spark.sinks.plpgsql_builder import (
-                rewrite_mysql_expr_to_pg,
-            )
+            from mysql2pg_spark.dialect.ansi import transpile_mysql_ansi
 
-            gen_pg[f.name] = rewrite_mysql_expr_to_pg(expr)
+            gen_pg[f.name] = transpile_mysql_ansi(expr)
 
     def _inline_refs(expr: str, skip: str) -> str:
         # literal-masked so a column name inside a string can't be
@@ -338,7 +316,7 @@ def functional_index_ddl(table: str, index: IndexSpec) -> str | None:
         plain_index_columns,
         split_top_level,
     )
-    from mysql2pg_spark.sinks.plpgsql_builder import rewrite_mysql_expr_to_pg
+    from mysql2pg_spark.dialect.ansi import transpile_mysql_ansi
 
     pg_parts = []
     for part in split_top_level(index.expression):
@@ -349,7 +327,7 @@ def functional_index_ddl(table: str, index: IndexSpec) -> str | None:
             # a stricter plain-column index)
             pg_parts.append(quote_pg(plain[0]))
             continue
-        pg = rewrite_mysql_expr_to_pg(part)
+        pg = transpile_mysql_ansi(part)
         if check_expression(pg):
             return None
         # PG's grammar wants each expression key part parenthesized —
@@ -594,7 +572,7 @@ def add_check_ddl(table: str, name: str | None, expr: str) -> str:
     load; data MySQL itself would have rejected fails the ALTER
     VISIBLY instead of silently loading unchecked). ``expr`` is
     already PG dialect (the planner runs it through
-    rewrite_mysql_expr_to_pg)."""
+    dialect.ansi.transpile_mysql_ansi)."""
     cname = _cap_identifier(name or f"{table}_check")
     return (
         f"ALTER TABLE {quote_pg(table)} ADD CONSTRAINT "

@@ -40,22 +40,22 @@ an UNTIL whose body doesn't end in the observed DML — the batch-purge
 :class:`UnsupportedFunctionError` instead of producing
 silently-wrong plpgsql.
 
-Builtin-expression mapping mirrors the reference's table
-(sync_functions.go:502-543): IFNULL→COALESCE, IF→CASE, CONCAT→``||``,
-GROUP_CONCAT→STRING_AGG, DATE_FORMAT→TO_CHAR (with %-token format
-conversion), SUBSTRING_INDEX→SPLIT_PART, NOW/SYSDATE→CURRENT_TIMESTAMP,
-CURDATE→CURRENT_DATE, UNIX_TIMESTAMP→EXTRACT(EPOCH …),
-FROM_UNIXTIME→TO_TIMESTAMP, YEAR/MONTH/DAY→EXTRACT, REGEXP/RLIKE→``~``,
-LCASE/UCASE→LOWER/UPPER, backticks→double quotes.
+Every MySQL expression in a routine or trigger body (SET values,
+conditions, DECLARE defaults, SELECT / DML statements) renders through
+``dialect.ansi.transpile_mysql_ansi``, the one MySQL → PostgreSQL
+translator that also serves views and the DDL expression positions
+(the reference keeps a second, smaller builtin table for bodies at
+sync_functions.go:502-543); only routine-level statement handling
+lives here.
 """
 
 from __future__ import annotations
 
 import re
 
+from mysql2pg_spark.dialect.ansi import transpile_mysql_ansi
 from mysql2pg_spark.dialect.transpile import (
     mask_literals,
-    rewrite_call,
     split_top_level,
     unmask_literals,
 )
@@ -174,16 +174,6 @@ def _classify_assign_expr(expr: str) -> str | None:
     return None
 
 
-def _split_depth0(s: str) -> list[str]:
-    """Depth-0 comma split for the SELECT-INTO scans — delegates to the
-    transpiler's shared splitter (one implementation to fix, not
-    three; the SET-list scan keeps its own inline walk because it
-    needs byte OFFSETS, which this API doesn't return)."""
-    from mysql2pg_spark.dialect.transpile import split_top_level
-
-    return split_top_level(s)
-
-
 def _infer_user_var_type(fname: str, var: str, body: str) -> str:
     """MySQL-or-verbatim type for the local synthesized in place of
     ``@var``. EVERY ``@var = expr`` assignment is classified (a money
@@ -264,8 +254,8 @@ def _infer_user_var_type(fname: str, var: str, body: str) -> str:
             ):
                 expr_text = expr_text[:i]
                 break
-        exprs = _split_depth0(expr_text)
-        targets = _split_depth0(st.group(2))
+        exprs = split_top_level(expr_text)
+        targets = split_top_level(st.group(2))
         for j, tgt in enumerate(targets):
             if tgt.strip().lower() == f"@{var.lower()}" and j < len(exprs):
                 c = _classify_assign_expr(exprs[j].strip())
@@ -387,26 +377,6 @@ _PROCEDURAL = re.compile(
     re.I,
 )
 
-#: MySQL DATE_FORMAT %-tokens → PG TO_CHAR templates (the reference
-#: passes the format through verbatim at :512, which emits wrong
-#: timestamps for every token — deliberate divergence, converted here).
-_FMT_MAP = [
-    ("%Y", "YYYY"), ("%y", "YY"), ("%M", "FMMonth"), ("%m", "MM"),
-    ("%c", "FMMM"), ("%d", "DD"), ("%e", "FMDD"), ("%H", "HH24"),
-    ("%k", "FMHH24"), ("%h", "HH12"), ("%I", "HH12"), ("%i", "MI"),
-    ("%s", "SS"), ("%S", "SS"), ("%f", "US"), ("%p", "AM"),
-    ("%W", "FMDay"), ("%a", "Dy"), ("%b", "Mon"), ("%j", "DDD"),
-    ("%T", "HH24:MI:SS"),
-]
-
-
-def _pg_fmt(mysql_fmt: str) -> str:
-    out = mysql_fmt
-    for tok, pg in _FMT_MAP:
-        out = out.replace(tok, pg)
-    return out.replace("%%", "%")
-
-
 def _pg_type(mysql_type: str) -> str:
     """Parameter/return/declare type via the shared C86 matrix. MySQL
     function signatures use bare column types, so the table mapper
@@ -417,78 +387,6 @@ def _pg_type(mysql_type: str) -> str:
     if mysql_type.startswith(_VERBATIM):
         return mysql_type[len(_VERBATIM):]
     return map_mysql_type(mysql_type).pg_type
-
-
-def rewrite_mysql_expr_to_pg(expr: str) -> str:
-    """MySQL expression/SELECT text → PG dialect (literal-safe). The
-    rewrite set mirrors sync_functions.go:477-570, emitted through the
-    same arg-aware rewriter the view transpiler uses — no bare-regex
-    surgery inside nested calls."""
-    s, lits = mask_literals(expr)
-    s = s.replace("`", '"')
-    # charset introducers (_utf8mb3'…', _binary'…', N'…') are MySQL
-    # spelling with no PG analog — the literal itself is the value
-    # (round 11: generated-column expressions in real dumps carry them)
-    s = re.sub(r"(?:\b[Nn]|_\w+)\s*(?=\x00L\d+\x00)", "", s)
-    s = rewrite_call(
-        s, "IFNULL", lambda a: f"COALESCE({a[0]}, {a[1]})"
-    )
-    s = rewrite_call(s, "ISNULL", lambda a: f"({a[0]} IS NULL)")
-    s = rewrite_call(
-        s,
-        "IF",
-        lambda a: f"(CASE WHEN {a[0]} THEN {a[1]} ELSE {a[2]} END)",
-    )
-
-    def _group_concat(a: list[str]) -> str:
-        src = ", ".join(a)
-        sep = "','"
-        mo = re.search(r"\bSEPARATOR\s+(\S+)\s*$", src, re.I)
-        if mo:
-            sep, src = mo.group(1), src[: mo.start()].strip()
-        return f"STRING_AGG(({src})::text, {sep})"
-
-    s = rewrite_call(s, "GROUP_CONCAT", _group_concat)
-    s = rewrite_call(s, "CONCAT_WS",
-                     lambda a: f"ARRAY_TO_STRING(ARRAY[{', '.join(a[1:])}], {a[0]})")
-    s = rewrite_call(s, "CONCAT", lambda a: "(" + " || ".join(a) + ")")
-
-    def _date_format(a: list[str]) -> str:
-        mo = re.fullmatch("\x00L(\\d+)\x00", a[1].strip())
-        if mo:
-            raw = lits[int(mo.group(1))]
-            return f"TO_CHAR({a[0]}, '{_pg_fmt(raw[1:-1])}')"
-        return f"TO_CHAR({a[0]}, {a[1]})"
-
-    s = rewrite_call(s, "DATE_FORMAT", _date_format)
-    s = rewrite_call(
-        s, "SUBSTRING_INDEX",
-        lambda a: f"SPLIT_PART({a[0]}, {a[1]}, {a[2]})",
-    )
-    s = rewrite_call(
-        s, "UNIX_TIMESTAMP",
-        lambda a: (
-            "EXTRACT(EPOCH FROM CURRENT_TIMESTAMP)"
-            if not a or not a[0].strip()
-            else f"EXTRACT(EPOCH FROM {a[0]})"
-        ),
-    )
-    s = rewrite_call(s, "FROM_UNIXTIME", lambda a: f"TO_TIMESTAMP({a[0]})")
-    for fn in ("YEAR", "MONTH", "DAY"):
-        s = rewrite_call(
-            s, fn, lambda a, f=fn: f"EXTRACT({f} FROM {a[0]})"
-        )
-    s = rewrite_call(s, "LCASE", lambda a: f"LOWER({a[0]})")
-    s = rewrite_call(s, "UCASE", lambda a: f"UPPER({a[0]})")
-    s = re.sub(r"\bNOW\s*\(\s*\)", "CURRENT_TIMESTAMP", s, flags=re.I)
-    s = re.sub(r"\bSYSDATE\s*\(\s*\)", "CURRENT_TIMESTAMP", s, flags=re.I)
-    s = re.sub(r"\bCURDATE\s*\(\s*\)", "CURRENT_DATE", s, flags=re.I)
-    s = re.sub(r"\bCURRENT_DATE\s*\(\s*\)", "CURRENT_DATE", s, flags=re.I)
-    s = re.sub(r"\s+(?:REGEXP|RLIKE)\s+", " ~ ", s, flags=re.I)
-    # type words inside CAST(...) — reference convertDataTypes :468-474
-    s = re.sub(r"\bDATETIME\b", "TIMESTAMP", s, flags=re.I)
-    s = re.sub(r"\bTINYINT\b", "SMALLINT", s, flags=re.I)
-    return unmask_literals(s, lits)
 
 
 def _parse_params(masked: str, start: int) -> tuple[list[tuple[str, str]], int]:
@@ -659,7 +557,7 @@ def _build_procedure_spec(masked: str, lits, head) -> PlpgsqlFunctionSpec:
     )
 
     def _rw(m: str) -> str:
-        return rewrite_mysql_expr_to_pg(unmask_literals(m, lits))
+        return transpile_mysql_ansi(unmask_literals(m, lits))
 
     try:
         proc = parse_procedural(body, name, _rw, _pg_type,
@@ -853,7 +751,7 @@ def build_spec_from_mysql(ddl: str) -> PlpgsqlFunctionSpec:
         )
 
         def _rw(masked: str) -> str:
-            return rewrite_mysql_expr_to_pg(unmask_literals(masked, lits))
+            return transpile_mysql_ansi(unmask_literals(masked, lits))
 
         try:
             proc = parse_procedural(
@@ -883,7 +781,7 @@ def build_spec_from_mysql(ddl: str) -> PlpgsqlFunctionSpec:
             dflt = re.search(r"\bDEFAULT\s+(.+)$", rest, re.I | re.S)
             pg_t = _pg_type(rest[: dflt.start()].strip() if dflt else rest)
             if dflt:
-                pg_t += " := " + rewrite_mysql_expr_to_pg(
+                pg_t += " := " + transpile_mysql_ansi(
                     unmask_literals(dflt.group(1).strip(), lits)
                 )
             for var in (v.strip().lower() for v in mo.group(1).split(",")):
@@ -913,7 +811,7 @@ def build_spec_from_mysql(ddl: str) -> PlpgsqlFunctionSpec:
                     )
                 pre_statements.append(
                     f"{mo.group(1).lower()} := "
-                    + rewrite_mysql_expr_to_pg(
+                    + transpile_mysql_ansi(
                         unmask_literals(mo.group(2).strip(), lits)
                     )
                 )
@@ -966,7 +864,7 @@ def build_spec_from_mysql(ddl: str) -> PlpgsqlFunctionSpec:
             name=name,
             params=params,
             returns=returns,
-            body_select=rewrite_mysql_expr_to_pg(
+            body_select=transpile_mysql_ansi(
                 unmask_literals(body_select.strip(), lits)
             ),
             into_var=into_var,
@@ -991,7 +889,7 @@ def build_spec_from_mysql(ddl: str) -> PlpgsqlFunctionSpec:
         )
 
         def _rw(masked: str) -> str:
-            return rewrite_mysql_expr_to_pg(unmask_literals(masked, lits))
+            return transpile_mysql_ansi(unmask_literals(masked, lits))
 
         try:
             proc = parse_procedural(
@@ -1075,7 +973,7 @@ def build_trigger_from_mysql(ddl: str):
     )
 
     def _rw(m: str) -> str:
-        return rewrite_mysql_expr_to_pg(unmask_literals(m, lits))
+        return transpile_mysql_ansi(unmask_literals(m, lits))
 
     try:
         proc = parse_procedural(body, name, _rw, _pg_type, kind="trigger",

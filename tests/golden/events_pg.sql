@@ -1,6 +1,6 @@
 SELECT cron.schedule('purge_stale_sessions', '0 0 * * *', $evt$DO $do$ BEGIN IF now() >= TIMESTAMP '2024-01-01 00:00:00' - interval '59 seconds' THEN DELETE FROM case_41_parent WHERE name = 'stale'; END IF; END $do$$evt$);
 -- NOTE [purge_stale_sessions]: event purge_stale_sessions: literal STARTS '2024-01-01 00:00:00' enforced as a start gate inside the DO block — the job no-ops before the anchor (a future STARTS never fires early); the cron entry already fires at MySQL's anchored times
-SELECT cron.schedule('hourly_rollup', '0 * * * *', $evt$INSERT INTO case_41_parent (name) SELECT COALESCE(('roll-' || TO_CHAR(CURRENT_TIMESTAMP, 'YYYY-MM-DD')), 'x')$evt$);
+SELECT cron.schedule('hourly_rollup', '0 * * * *', $evt$INSERT INTO case_41_parent (name) SELECT COALESCE(('roll-' || CAST(to_char(CAST(CURRENT_TIMESTAMP AS TIMESTAMP), 'YYYY-MM-DD') AS TEXT)), 'x')$evt$);
 -- NOTE [hourly_rollup]: event hourly_rollup: cron anchors at the unit boundary; with no STARTS clause MySQL anchors the cadence at event creation time, which is not representable — first firing may shift by less than one period
 SELECT cron.schedule('one_shot_cleanup', '0 0 * * *', $evt$DO $do$ BEGIN IF now() >= TIMESTAMP '2030-01-01 00:00:00' THEN DELETE FROM case_41_parent WHERE name = 'tmp'; PERFORM cron.unschedule('one_shot_cleanup'); END IF; END $do$$evt$);
 -- NOTE [one_shot_cleanup]: event one_shot_cleanup: one-shot AT '2030-01-01 00:00:00' emulated via pg_cron's self-unschedule idiom — a daily cron entry whose DO block no-ops until the timestamp (never early), then runs the body once and removes itself; a server down at that minute or cron.timezone vs session TimeZone skew delays the firing by at most a day plus the skew, where MySQL would have dropped a missed one-shot

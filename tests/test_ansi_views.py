@@ -36,7 +36,7 @@ EXPECTED_FAIL = {
 }
 
 #: plain transpile fails on the engine's COALESCE type check; the
-#: coalesce_text retry must execute (C33)
+#: unify_types retry must execute (C33)
 COALESCE_RETRY = {"view_case10_defaults"}
 
 
@@ -94,7 +94,7 @@ def test_fixture_views_execute_in_duckdb_via_sink_path():
                 con.execute(f'CREATE OR REPLACE VIEW "{name}" AS {out}')
                 con.execute(f'SELECT * FROM "{name}"').fetchall()
             # …and the C33 text-unified retry must execute
-            out = transpile_mysql_ansi(body, "duckdb", coalesce_text=True)
+            out = transpile_mysql_ansi(body, "duckdb", unify_types=True)
             con.execute(f'CREATE OR REPLACE VIEW "{name}" AS {out}')
             con.execute(f'SELECT * FROM "{name}"').fetchall()
             continue
@@ -121,7 +121,7 @@ def test_case10_coalesce_retry_pins_values():
         )
         if n == "view_case10_defaults"
     )
-    out = transpile_mysql_ansi(body, "duckdb", coalesce_text=True)
+    out = transpile_mysql_ansi(body, "duckdb", unify_types=True)
     con.execute(f'CREATE OR REPLACE VIEW v10 AS {out}')
     row = con.execute(
         "SELECT coalesce_result, ifnull_result, case_result FROM v10"

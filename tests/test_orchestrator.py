@@ -93,7 +93,7 @@ def test_plan_stage_order_and_content(tmp_path):
 
     idx = next(a for a in plan if a.stage == "indexes")
     assert idx.payload == (
-        "CREATE INDEX IF NOT EXISTS orders_idx_amount ON orders (\"Amount\")"
+        "CREATE INDEX IF NOT EXISTS orders_idx_amount ON orders (amount)"
     )
 
     grant = next(a for a in plan if a.stage == "table_privileges")

@@ -29,9 +29,9 @@ def _cap(x):
 
 
 def _rewrite(e):
-    from mysql2pg_spark.sinks.plpgsql_builder import rewrite_mysql_expr_to_pg
+    from mysql2pg_spark.dialect.ansi import transpile_mysql_ansi
 
-    return rewrite_mysql_expr_to_pg(e)
+    return transpile_mysql_ansi(e)
 
 
 def _plan(text, pk=()):
@@ -118,7 +118,8 @@ def test_range_expression_key_rewritten():
         "PARTITION p0 VALUES LESS THAN (2020))"
     )
     assert plan.parent_clause == (
-        'PARTITION BY RANGE ((EXTRACT(YEAR FROM "created_at")))'
+        'PARTITION BY RANGE ((CAST(EXTRACT(YEAR FROM CAST("created_at" AS'
+        ' TIMESTAMP)) AS BIGINT)))'
     )
 
 
@@ -143,7 +144,9 @@ def test_range_bound_function_values_rewritten():
         "PARTITION p0 VALUES LESS THAN (UNIX_TIMESTAMP('2020-01-01')))"
     )
     # the bound expression goes through the MySQL→PG rewriter
-    assert "EXTRACT(EPOCH FROM '2020-01-01')" in plan.children[0]
+    assert (
+        "CAST(EXTRACT(EPOCH FROM CAST('2020-01-01' AS TIMESTAMP)) AS BIGINT)"
+    ) in plan.children[0]
 
 
 def test_list_partitioning():
@@ -257,7 +260,8 @@ def test_orchestrator_emits_parent_and_children(spark, tmp_path):
     ddls = [a.payload for a in actions if a.stage == "tableddl" and a.kind == "ddl"]
     parent = next(d for d in ddls if d.startswith("CREATE TABLE IF NOT EXISTS m"))
     assert parent.rstrip().endswith(
-        'PARTITION BY RANGE ((EXTRACT(YEAR FROM "created_at")))'
+        'PARTITION BY RANGE ((CAST(EXTRACT(YEAR FROM CAST("created_at" AS'
+        ' TIMESTAMP)) AS BIGINT)))'
     )
     children = [d for d in ddls if "PARTITION OF" in d]
     assert len(children) == 2
@@ -429,7 +433,8 @@ def test_named_subpartition_lists_migrate():
     )
     assert plan.skip is None
     assert plan.parent_clause == (
-        "PARTITION BY RANGE ((EXTRACT(YEAR FROM purchased)))"
+        "PARTITION BY RANGE ((CAST(EXTRACT(YEAR FROM CAST(purchased AS"
+        " TIMESTAMP)) AS BIGINT)))"
     )
     assert plan.children == [
         "CREATE TABLE IF NOT EXISTS t_p0 PARTITION OF t FOR VALUES "

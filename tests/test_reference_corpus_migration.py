@@ -244,9 +244,7 @@ def test_reference_corpus_migrates_into_duckdb(spark, tmp_path, corpus_snapshot)
         plan_partitioned_table,
         routing_sql,
     )
-    from mysql2pg_spark.sinks.plpgsql_builder import (
-        rewrite_mysql_expr_to_pg,
-    )
+    from mysql2pg_spark.dialect.ansi import transpile_mysql_ansi
 
     pdefs = {
         t.name: t.partition_def for t in snap.tables
@@ -290,7 +288,7 @@ def test_reference_corpus_migrates_into_duckdb(spark, tmp_path, corpus_snapshot)
         pdef = parse_partition_def(pdefs[tname])
         assert pdef is not None, tname
         expr, skip = routing_sql(
-            tname, pdef, str.lower, rewrite_mysql_expr_to_pg,
+            tname, pdef, str.lower, transpile_mysql_ansi,
             lambda s: s,
         )
         assert skip is None, (tname, skip)
@@ -301,7 +299,7 @@ def test_reference_corpus_migrates_into_duckdb(spark, tmp_path, corpus_snapshot)
         # each routed name IS one of the plan's emitted children —
         # assignment and DDL agree on naming
         plan_ = plan_partitioned_table(
-            tname, pdef, [], str.lower, rewrite_mysql_expr_to_pg,
+            tname, pdef, [], str.lower, transpile_mysql_ansi,
             lambda s: s,
         )
         assert plan_.skip is None, (tname, plan_.skip)

@@ -333,8 +333,9 @@ def test_build_spec_bare_return_and_builtins():
     assert spec.volatility == "IMMUTABLE"         # DETERMINISTIC
     assert spec.into_var == "result"
     assert spec.body_select == (
-        "SELECT (TO_CHAR(d, 'YYYY-MM-DD HH24:MI:SS') || '#' || "
-        "(CASE WHEN n > 0 THEN 'pos' ELSE 'neg' END))"
+        "SELECT (CAST(to_char(CAST(d AS TIMESTAMP), 'YYYY-MM-DD HH24:MI:SS')"
+        " AS TEXT) || '#' || CAST(CASE WHEN n > 0 THEN 'pos' ELSE 'neg' END"
+        " AS TEXT))"
     )
 
 
@@ -423,7 +424,7 @@ def test_build_spec_set_statements_become_assignments():
     assert spec.pre_statements == ["v_rate := COALESCE(p, 0) * 2"]
     ddl = emit_plpgsql(spec)
     assert "BEGIN\n    v_rate := COALESCE(p, 0) * 2;\n" in ddl
-    assert "('rate:' || v_rate)" in ddl
+    assert "('rate:' || CAST(v_rate AS TEXT))" in ddl
 
     # round 9: a body OUTSIDE the SET*→SELECT?→RETURN shape no longer
     # refuses — it falls back to the statement-tree path, which keeps
@@ -805,7 +806,7 @@ def test_procedural_loop_iterate_elseif():
     END
     """
     out = emit_plpgsql(build_spec_from_mysql(ddl))
-    assert "ELSIF MOD(n, 2) = 0 THEN" in out
+    assert "ELSIF MOD(CAST(n AS NUMERIC), CAST(2 AS NUMERIC)) = 0 THEN" in out
     assert "CONTINUE walk;" in out
     assert "EXIT walk;" in out
     assert "IMMUTABLE" in out
@@ -1936,6 +1937,32 @@ def test_body_dml_passthrough_with_rewrite():
         """)
 
 
+def test_body_dml_into_table_named_like_a_function(pg):
+    """A DML target named like a MySQL builtin (``log``, ``date``) is a
+    table, not a call: its column list survives the body translation,
+    while the values still translate. The procedure creates and runs
+    on PostgreSQL 15."""
+    from mysql2pg_spark.sinks.plpgsql import emit_plpgsql
+    from mysql2pg_spark.sinks.plpgsql_builder import build_spec_from_mysql
+
+    out = emit_plpgsql(build_spec_from_mysql("""
+    CREATE PROCEDURE note(p_n INT)
+    MODIFIES SQL DATA
+    BEGIN
+      INSERT INTO log (msg) VALUES (CONCAT('a', p_n));
+      INSERT INTO `date` (d) VALUES (DATE('2024-03-07 10:00:00'));
+    END
+    """))
+    assert "INSERT INTO log (msg) VALUES (('a' || CAST(p_n AS TEXT)));" in out
+    assert 'INSERT INTO "date" (d) VALUES' in out
+    pg.execute("CREATE TABLE log (msg TEXT); CREATE TABLE date (d DATE)")
+    pg.execute(out)
+    pg.execute("CALL note(1)")
+    pg.execute("SELECT msg, d FROM log, date")
+    assert pg.fetchall() == [("a1", "2024-03-07")]
+    pg.execute("DROP PROCEDURE note; DROP TABLE log; DROP TABLE date")
+
+
 def test_row_count_in_expression_hoists_to_get_diagnostics():
     """Round 8: PG has no expression-position ROW_COUNT() — `IF
     ROW_COUNT() = 0` (the upsert idiom) hoists to `GET DIAGNOSTICS
@@ -2026,12 +2053,12 @@ BEGIN
     GET DIAGNOSTICS p_moved = ROW_COUNT;
     DELETE FROM users WHERE id = p_id;
     IF p_moved = 0 THEN
-        p_log := (p_log || ';missing');
+        p_log := (CAST(p_log AS TEXT) || ';missing');
         RETURN;
     END IF;
     CALL audit_log(p_id, 'archived');
 EXCEPTION WHEN SQLSTATE '23505' THEN
-    p_log := (p_log || ';dup');
+    p_log := (CAST(p_log AS TEXT) || ';dup');
 END;
 $$ LANGUAGE plpgsql;
 COMMENT ON PROCEDURE archive_user IS 'move a user to the archive';"""
@@ -2185,7 +2212,7 @@ BEGIN
     IF NEW.o_totalprice < 0 THEN
         RAISE EXCEPTION USING ERRCODE = '45000', MESSAGE = 'negative price';
     END IF;
-    new.o_comment := (COALESCE(NEW.o_comment, '') || ' [checked]');
+    new.o_comment := (CAST(COALESCE(NEW.o_comment, '') AS TEXT) || ' [checked]');
     INSERT INTO audit_log(tbl, at) VALUES ('orders', v_now);
     RETURN NEW;
 END;
@@ -3084,7 +3111,7 @@ STABLE AS $$
 DECLARE
     result VARCHAR(128);
 BEGIN
-    SELECT (current_setting('server_version') || ' tz=' || current_setting('TimeZone'))
+    SELECT (CAST(current_setting('server_version') AS TEXT) || ' tz=' || CAST(current_setting('TimeZone') AS TEXT))
     INTO result;
     RETURN result;
 END;
@@ -3236,7 +3263,7 @@ def test_expression_defaults_rewrite_or_drop_visibly():
     assert default_sql("EXPR:(uuid())") == "(gen_random_uuid())"
     assert default_sql("EXPR:(now(3))") == "(CURRENT_TIMESTAMP(3))"
     assert default_sql("EXPR:(curdate() + interval 1 day)") == (
-        "(CURRENT_DATE + INTERVAL '1 day')"
+        "(CURRENT_DATE + INTERVAL '1 DAY')"
     )
     assert default_sql("EXPR:(`qty` * 2)") == '("qty" * 2)'
     # literal contents are not rewritten
@@ -3309,12 +3336,15 @@ def test_functional_index_translates_or_skips():
         "t", IndexSpec("idx_fn", [], False, "btree",
                        expression="(UPPER(name))")
     )
-    assert ok == "CREATE INDEX IF NOT EXISTS t_idx_fn ON t ((UPPER(name)))"
+    assert ok == (
+        "CREATE INDEX IF NOT EXISTS t_idx_fn ON t ((UPPER(CAST(name AS TEXT))))"
+    )
     multi = functional_index_ddl(
         "t", IndexSpec("idx_m", [], True, "btree",
                        expression="(concat(a, ', ', b)), (year(c))")
     )
-    assert multi is not None and "EXTRACT(YEAR FROM c)" in multi
+    assert multi is not None
+    assert "CAST(EXTRACT(YEAR FROM CAST(c AS TIMESTAMP)) AS BIGINT)" in multi
     assert multi.startswith("CREATE UNIQUE INDEX")
     # outside the grammar -> decline (documented skip upstream)
     assert functional_index_ddl(
@@ -3348,7 +3378,8 @@ def test_mixed_functional_index_never_overconstrains():
                        expression="`a`, (lower(`b`))")
     )
     assert ddl == (
-        'CREATE UNIQUE INDEX IF NOT EXISTS t_u ON t (a, (lower("b")))'
+        'CREATE UNIQUE INDEX IF NOT EXISTS t_u ON t'
+        ' (a, (LOWER(CAST("b" AS TEXT))))'
     )
 
 

@@ -479,9 +479,7 @@ def test_partitions_query_and_render_partition_def():
         parse_partition_def,
         plan_partitioned_table,
     )
-    from mysql2pg_spark.sinks.plpgsql_builder import (
-        rewrite_mysql_expr_to_pg,
-    )
+    from mysql2pg_spark.dialect.ansi import transpile_mysql_ansi
     from mysql2pg_spark.sources.catalog import (
         group_partition_defs,
         partitions_query,
@@ -497,7 +495,7 @@ def test_partitions_query_and_render_partition_def():
         pd = parse_partition_def(text)
         assert pd is not None, text
         return plan_partitioned_table(
-            "t", pd, list(pk), str.lower, rewrite_mysql_expr_to_pg,
+            "t", pd, list(pk), str.lower, transpile_mysql_ansi,
             lambda s: s,
         )
 
@@ -663,7 +661,7 @@ def test_triggers_query_and_render_trigger_ddl():
     )
     out = emit_trigger(build_trigger_from_mysql(ddl))
     assert "CREATE TRIGGER audit_upd BEFORE UPDATE ON parent" in out
-    assert "new.name := UPPER(NEW.name);" in out
+    assert "new.name := UPPER(CAST(NEW.name AS TEXT));" in out
 
 
 def test_group_columns_carries_dump_parser_conventions():
